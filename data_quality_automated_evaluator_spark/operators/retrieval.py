@@ -238,8 +238,10 @@ def coverage_topk(
     qt = query_terms.select("query_id", "term").distinct()
     tokens = corpus_tokens(docs, text_col, id_col)
     dl = tokens.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
+    # postings restricted to query terms BEFORE the dedup shuffle
     hits = (
-        tokens.distinct()
+        tokens.join(F.broadcast(qt.select("term").distinct()), "term")
+        .distinct()
         .join(F.broadcast(qt), "term")
         .groupBy("query_id", "doc_id")
         .agg(F.count(F.lit(1)).alias("n_cov"))

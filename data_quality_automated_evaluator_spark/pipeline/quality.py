@@ -8,8 +8,10 @@ shuffle by conv_id) → rules → keep/drop + scrubbed text → outputs:
 - ``stats``    per-interval per-rule pass rates (evaluator core over ts,
   mirroring the reference's interval aggregation — preprocess.py:69)
 
-The whole pipeline is one Spark job with a single wide shuffle; scrub
-and scoring UDFs ride Arrow batches.
+The pipeline has one wide shuffle (by ``conv_id``); scrub and scoring
+UDFs ride one Arrow node before it. ``QualitySink.run`` adds a
+round-robin exchange in front when the scan is narrower than the cores
+and a ``part_date`` exchange before the partitioned write.
 """
 
 from __future__ import annotations
@@ -76,15 +78,22 @@ def interval_rule_stats(
     return result.groupBy(bucket).agg(*aggs).orderBy("__time_interval")
 
 
-def interval_rule_partials(
+def interval_rule_facts(
     result: DataFrame, time_interval: str = "1d"
 ) -> DataFrame:
-    """Combinable per-(partition, interval) partial aggregates: counts and
-    flag SUMS instead of rates, so stats over an ever-growing table stay
-    incremental — each batch aggregates only its own partitions, and
+    """Combinable per-(partition, interval) partial aggregates and per-date
+    totals in ONE aggregation, ``rollup(part_date, bucket)``.
+
+    Rows with ``level`` 0 are the partials: counts and flag SUMS instead
+    of rates, so stats over an ever-growing table stay incremental — each
+    batch aggregates only its own partitions, and
     :func:`combine_rule_partials` folds all stored partials into the same
     rates :func:`interval_rule_stats` would compute over the full table
-    (rule flags are non-null, so sum/count == avg exactly).
+    (rule flags are non-null, so sum/count == avg exactly). ``level`` 1
+    rows total one ``part_date`` and carry its exact distinct-conversation
+    count ``n_convs`` (a conversation spanning several buckets counts
+    once, so per-bucket counts do not add up to it); ``level`` 3 is the
+    grand total. Metadata-sized: #dates × #buckets rows.
 
     ``result`` must carry ``part_date`` (the sink's partition column).
     """
@@ -103,7 +112,11 @@ def interval_rule_partials(
             F.sum(length_col.cast("long")).alias("scrubbed_chars_sum")]
     for r in RULE_NAMES:
         aggs.append(F.sum(F.col(r).cast("long")).alias(f"{r}_sum"))
-    return result.groupBy("part_date", bucket).agg(*aggs)
+    return result.rollup("part_date", bucket).agg(
+        *aggs,
+        F.countDistinct("conv_id").alias("n_convs"),
+        F.grouping_id().alias("level"),
+    )
 
 
 def combine_rule_partials(partials: DataFrame) -> DataFrame:

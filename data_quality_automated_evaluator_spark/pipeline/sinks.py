@@ -24,13 +24,16 @@ import os
 import time
 import uuid
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .observability import attach_quality_observation
 from .quality import (
     combine_rule_partials,
-    interval_rule_partials,
+    interval_rule_facts,
     run_quality_pipeline,
 )
 from .rules import RULE_NAMES, Thresholds
@@ -198,21 +201,37 @@ class QualitySink:
         missing = sorted(nonzero_done - self._partial_dates(pdir))
         if not missing:
             return False
-        # dynamic overwrite is load-bearing here too: with the default
-        # static mode this write would wipe the whole partials tree and
-        # keep only the backfilled dates (the early-return path reaches
-        # this before run()'s own conf set)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        backfill = interval_rule_partials(
-            self.read_turns(spark).filter(
-                F.col("part_date").isin(missing)
-            ),
+        self._write_partials(
+            spark,
+            self.read_turns(spark).filter(F.col("part_date").isin(missing)),
             time_interval,
         )
-        backfill.repartition("part_date").write.mode("overwrite").partitionBy(
-            "part_date"
-        ).parquet(pdir)
         return True
+
+    def _write_partials(
+        self, spark: SparkSession, written: DataFrame, time_interval: str
+    ) -> pd.DataFrame:
+        """Aggregate ``written`` (whole part_dates of the turns artifact)
+        once, write its partials into this granularity's tree and return
+        its per-date totals (``interval_rule_facts`` level-1 rows)."""
+        facts = interval_rule_facts(written, time_interval)
+        rows = facts.toPandas()
+        partials = rows[rows["level"] == 0].drop(columns=["n_convs", "level"])
+        # dynamic overwrite is load-bearing for the partials tree: static
+        # mode would wipe every previously-completed date on resume, or
+        # keep only the backfilled dates on an interval switch — set here,
+        # not only inside _write_turns, because an Iceberg-committed turns
+        # artifact doesn't touch this conf (and run()'s early-return path
+        # backfills without writing turns at all)
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        # Arrow-backed (a list of Rows would launch Python tasks again);
+        # one writer task, so one file per date
+        spark.createDataFrame(
+            partials, T.StructType([f for f in facts.schema if f.name in partials.columns])
+        ).coalesce(1).write.mode("overwrite").partitionBy("part_date").parquet(
+            self._partials_dir(time_interval)
+        )
+        return rows[rows["level"] == 1]
 
     @staticmethod
     def _partial_dates(pdir: str) -> set[str]:
@@ -380,11 +399,11 @@ class QualitySink:
 
         t0 = time.perf_counter()
         subset = df.filter(F.col("part_date").isin(pending))
-        # engage every core on the UDF stage even when the input is a
-        # handful of files (at production scale the scan already has
-        # thousands of splits and this is a no-op); 4 waves per core so
-        # per-task cost skew (huge blob turns) can't set the wall clock
-        parallelism = spark.sparkContext.defaultParallelism * 4
+        # one wave of Python-UDF tasks: every Arrow task pays a fixed
+        # worker cost (~0.2 s) whatever it computes, so a scan narrower
+        # than the cores is spread over exactly one task per core; a wider
+        # scan (production: thousands of splits) is left as it is
+        parallelism = spark.sparkContext.defaultParallelism
         if subset.rdd.getNumPartitions() < parallelism:
             subset = subset.repartition(parallelism)
         result = run_quality_pipeline(subset, thresholds)
@@ -407,109 +426,69 @@ class QualitySink:
         self._write_turns(out.repartition("part_date"))
         observed = run_obs.get
 
-        # stats + per-partition metrics from the WRITTEN output (cheap,
-        # column-pruned re-read of compact parquet, never the raw input).
-        # Incremental: only THIS batch's partitions are aggregated into
-        # combinable partials (counts + flag sums per (part_date, bucket)),
-        # written with dynamic overwrite so a partition re-run is
-        # idempotent. The combined stats artifact is then derived from the
-        # partials alone — O(#partitions × #buckets) rows, never a re-read
-        # of the accumulated table — and still converges to exactly what an
-        # uninterrupted run would produce.
-        all_written = self.read_turns(spark)
-        written = all_written.filter(F.col("part_date").isin(pending))
-        pdir = self._partials_dir(time_interval)
-        partials = interval_rule_partials(written, time_interval)
-        # dynamic overwrite is load-bearing for the partials tree on its
-        # own (static mode would wipe every previously-completed date on
-        # resume) — set here, not only inside _write_turns, because an
-        # Iceberg-committed turns artifact doesn't touch this conf
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        partials.repartition("part_date").write.mode("overwrite").partitionBy(
-            "part_date"
-        ).parquet(pdir)
+        # every per-date fact of THIS batch comes from one aggregation over
+        # the WRITTEN output (column-pruned re-read of compact parquet,
+        # never the raw input), collected once: the combinable partials
+        # (counts + flag sums per (part_date, bucket)) and each date's
+        # totals with its exact distinct-conversation count. The partials
+        # are written from those rows with dynamic overwrite, so a
+        # partition re-run is idempotent; the combined stats artifact is
+        # then folded from the partials tree alone — O(#partitions ×
+        # #buckets) rows, never a re-read of the accumulated table — and
+        # converges to exactly what an uninterrupted run would produce.
+        totals = self._write_partials(
+            spark,
+            self.read_turns(spark).filter(F.col("part_date").isin(pending)),
+            time_interval,
+        )
         # partials are keyed by bucket granularity: a run with a NEW
         # time_interval starts a fresh partials tree, and partitions
         # completed under a different interval are backfilled ONCE (a scan
         # bounded to those partitions) instead of silently mixing
         # granularities in one artifact
         self._sync_partials(spark, time_interval, nonzero_done)
-        stats = combine_rule_partials(spark.read.parquet(pdir))
-        self._write_stats(stats)
-        # ledger metrics: counts and scrubbed-char sums come from the
-        # partials just written (metadata-sized — #dates × #buckets rows,
-        # never the fact table); only the exact distinct-conversation
-        # count needs the written table, and that scan reads two narrow
-        # dictionary-encoded columns, not the text. mergeSchema guards a
-        # partials tree that predates the scrubbed_chars_sum column.
-        date_sums = {
-            str(r["part_date"]): r
-            for r in (
-                spark.read.option("mergeSchema", "true")
-                .parquet(pdir)
-                .filter(F.col("part_date").isin(pending))
-                .groupBy("part_date")
-                .agg(
-                    F.sum("n_turns").alias("n_turns"),
-                    F.sum("keep_sum").alias("n_keep"),
-                    F.sum("scrubbed_chars_sum").alias("scrubbed_chars"),
-                )
-                .collect()
-            )
-        }
-        conv_counts = {
-            str(r["part_date"]): r["n_convs"]
-            for r in (
-                written.groupBy("part_date")
-                .agg(F.countDistinct("conv_id").alias("n_convs"))
-                .collect()
-            )
-        }
-        metrics = [
-            {
-                "part_date": d,
-                "n_turns": row["n_turns"],
-                "n_keep": row["n_keep"],
-                "scrubbed_chars": row["scrubbed_chars"] or 0,
-                "n_convs": conv_counts.get(d, 0),
+        self._write_stats(
+            combine_rule_partials(spark.read.parquet(self._partials_dir(time_interval)))
+        )
+        # scrubbed_chars_sum is NULL (NaN here) for a date whose scrubbed
+        # texts are all NULL
+        by_date = {
+            str(r["part_date"]): {
+                "n_turns": int(r["n_turns"]),
+                "n_keep": int(r["keep_sum"]),
+                "n_convs": int(r["n_convs"]),
+                "scrubbed_chars": int(np.nan_to_num(r["scrubbed_chars_sum"])),
             }
-            for d, row in date_sums.items()
-        ]
+            for r in totals.to_dict("records")
+        }
         wall = time.perf_counter() - t0
-        total_turns = 0
-        total_keep = 0
         # EVERY selected pending date is ledgered — empty ones with zeros —
         # so a batch_days-limited run always makes progress (an un-ledgered
         # empty date would be re-selected forever). Zero entries are
         # re-checked cheaply at the top of each run and reprocessed when
         # their data arrives late, so backfill still works.
-        by_date = {str(row["part_date"]): row for row in metrics}
-        batch_entries: list[dict] = []
-        for part in pending:
-            row = by_date.get(part)
-            entry = {
+        empty = dict.fromkeys(("n_turns", "n_keep", "n_convs", "scrubbed_chars"), 0)
+        batch_entries = [
+            {
                 "part_date": part,
-                "n_turns": row["n_turns"] if row else 0,
-                "n_keep": row["n_keep"] if row else 0,
-                "n_convs": row["n_convs"] if row else 0,
-                "scrubbed_chars": row["scrubbed_chars"] if row else 0,
+                **by_date.get(part, empty),
                 "run_wall_sec": round(wall, 3),
                 "thresholds": thresholds.__dict__ | {
                     "allowed_langs": list(thresholds.allowed_langs)
                 },
                 "completed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             }
+            for part in pending
+        ]
+        for entry in batch_entries:
             self._write_ledger_entry(entry)
-            batch_entries.append(entry)
-            total_turns += entry["n_turns"]
-            total_keep += entry["n_keep"]
         self._write_lineage(spark, batch_entries)
 
         return {
             "processed_partitions": len(pending),
             "skipped_partitions": len(done),
-            "n_turns": total_turns,
-            "n_keep": total_keep,
+            "n_turns": sum(e["n_turns"] for e in batch_entries),
+            "n_keep": sum(e["n_keep"] for e in batch_entries),
             "n_null_ts": n_null_ts,
             "wall_sec": round(wall, 3),
             # drop-reason attribution for THIS batch, observed on the
@@ -628,12 +607,12 @@ class IcebergQualitySink(QualitySink):
             )
             for e in entries
         ]
-        df = spark.createDataFrame(
-            rows,
-            "part_date string, n_turns long, n_keep long, n_convs long, "
-            "scrubbed_chars long, run_wall_sec double, thresholds string, "
-            "completed_at string, turns_snapshot_id long",
-        )
+        schema = ("part_date string, n_turns long, n_keep long, n_convs long, "
+                  "scrubbed_chars long, run_wall_sec double, thresholds string, "
+                  "completed_at string, turns_snapshot_id long")
+        # from pandas (Arrow), so the lineage write launches no Python tasks
+        names = [c.split()[0] for c in schema.split(", ")]
+        df = spark.createDataFrame(pd.DataFrame(rows, columns=names), schema)
         _wi(df.coalesce(1), self.lineage_dir, partition_by=[], mode="append")
 
     @property

@@ -11,7 +11,10 @@ import os
 import pandas as pd
 import pytest
 
-from data_quality_automated_evaluator_spark.pipeline.sinks import QualitySink
+from data_quality_automated_evaluator_spark.pipeline.sinks import (
+    IcebergQualitySink,
+    QualitySink,
+)
 from data_quality_automated_evaluator_spark.testdata import generate_transcripts
 
 
@@ -262,3 +265,76 @@ def test_interval_switch_with_nothing_pending(spark, sdf, tmp_path_factory):
     assert len(hourly) == len(full) > 0
     for col in full.columns:
         assert (hourly[col].values == full[col].values).all(), col
+
+
+@pytest.mark.parametrize("sink_cls", [QualitySink, IcebergQualitySink])
+def test_ledger_facts_exact(spark, sdf, tmp_path_factory, sink_cls):
+    """Every ledger entry (and lineage row) equals the written turns of
+    its date, across a resumed ``batch_days`` run at ``1h`` buckets — where
+    conversations span several buckets, so summing per-bucket
+    conversation counts would overcount ``n_convs``."""
+    from pyspark.sql import functions as F
+
+    first = sdf.agg(F.min(F.to_date("ts"))).first()[0]
+    src = sdf.filter(F.to_date("ts") < F.date_add(F.lit(first), 10))
+    sink = sink_cls(str(tmp_path_factory.mktemp("sink_facts")))
+    assert sink.run(src, time_interval="1h", batch_days=3)["processed_partitions"] == 3
+    assert sink.run(src, time_interval="1h")["skipped_partitions"] == 3
+
+    turns = sink.read_turns(spark).toPandas()
+    turns["part_date"] = turns["part_date"].astype(str)
+    by_date = turns.groupby("part_date")
+    n_convs = by_date["conv_id"].nunique()
+    bucket_convs = (
+        turns.assign(h=turns["ts"].dt.floor("h"))
+        .groupby(["part_date", "h"])["conv_id"].nunique()
+        .groupby(level="part_date").sum()
+    )
+    assert (bucket_convs > n_convs).any(), "no conversation spans buckets"
+    partials = spark.read.parquet(sink._partials_dir("1h")).toPandas()
+    psums = partials.groupby(partials["part_date"].astype(str))[
+        ["n_turns", "keep_sum", "scrubbed_chars_sum"]
+    ].sum()
+
+    entries = sink.ledger_entries()
+    assert len(entries) == 10 and set(n_convs.index) <= set(entries)
+    for d, e in entries.items():
+        assert e["n_convs"] == n_convs.get(d, 0), d
+        assert e["n_turns"] == by_date.size().get(d, 0), d
+        assert e["n_keep"] == int(by_date["keep"].sum().get(d, 0)), d
+        if d in psums.index:
+            assert [e["n_turns"], e["n_keep"], e["scrubbed_chars"]] == psums.loc[d].tolist(), d
+        else:
+            assert e["n_turns"] == e["n_keep"] == e["scrubbed_chars"] == 0, d
+    if sink_cls is IcebergQualitySink:
+        lin = sink.read_lineage(spark).toPandas()
+        assert sorted(lin["part_date"]) == sorted(entries)
+        for _, row in lin.iterrows():
+            e = entries[row["part_date"]]
+            for k in ("n_turns", "n_keep", "n_convs", "scrubbed_chars"):
+                assert int(row[k]) == e[k], (row["part_date"], k)
+
+
+class _PlanCapturingSink(QualitySink):
+    def _write_turns(self, out):
+        self.plan = out._jdf.queryExecution().executedPlan().toString()
+        super()._write_turns(out)
+
+
+def test_udf_stage_is_one_wave(spark, sdf, tmp_path):
+    """A narrow scan is spread over exactly one task per core before the
+    Python-UDF stage; a scan that is already that wide is left alone.
+    Each Python task has a fixed cost, so extra waves only add time."""
+    n = spark.sparkContext.defaultParallelism
+    narrow, wide = str(tmp_path / "narrow"), str(tmp_path / "wide")
+    sdf.coalesce(1).write.parquet(narrow)
+    sdf.repartition(2 * n).write.parquet(wide)
+    assert spark.read.parquet(narrow).rdd.getNumPartitions() == 1
+    assert spark.read.parquet(wide).rdd.getNumPartitions() >= n
+
+    sink = _PlanCapturingSink(str(tmp_path / "out_narrow"))
+    sink.run(spark.read.parquet(narrow), batch_days=1)
+    assert f"RoundRobinPartitioning({n})" in sink.plan
+    sink = _PlanCapturingSink(str(tmp_path / "out_wide"))
+    sink.run(spark.read.parquet(wide), batch_days=1)
+    assert "RoundRobinPartitioning" not in sink.plan
