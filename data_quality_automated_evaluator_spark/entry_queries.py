@@ -197,12 +197,13 @@ def interval_stats_events_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("interval_stats_events_1d_approx")  # rows-only: HLL values are estimates
 def interval_stats_events_1d_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 10^12-row variant of the flagship: ``approx_distinct`` swaps
-    exact null-inclusive count-distinct for HLL, removing the
-    distinct-rewrite Expand from the plan (one narrow HashAggregate pair
-    instead of Expand + double aggregation), and ``approx_median`` swaps
-    the value-buffering exact median for the bounded-memory
-    percentile_approx sketch. Estimate accuracy and the plan shape are
-    pinned in pytest; the driver records rows-only."""
+    the exact null-inclusive count-distinct, which buffers each group's
+    set of distinct values, for a fixed-size HLL sketch, and
+    ``approx_median`` swaps the value-buffering exact median for the
+    bounded-memory percentile_approx sketch. Both variants plan one
+    partial→final aggregate pair with no Expand. Estimate accuracy and
+    the plan shape are pinned in pytest; the query has no oracle
+    (rows-only)."""
     from .operators.preprocess import make_preprocessing
 
     df = _t(spark, sf_dir, "events")
@@ -389,10 +390,10 @@ def quality_rules_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def null_semantics_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Null-semantics parity gate: Polars n_unique counts NULL as a
-    distinct value (reference preprocess.py:216-217); Spark countDistinct
-    does not — n_unique_expr adds the indicator. Deterministic null
-    injection so the delta is actually exercised (the raw tables have
-    no nulls)."""
+    distinct value (reference preprocess.py:216-217); Spark's
+    collect_set drops it — n_unique_expr adds the indicator.
+    Deterministic null injection so the delta is actually exercised (the
+    raw tables have no nulls)."""
     from .functions.aggregates import n_unique_expr, null_ratio_expr
     from .functions.intervals import truncate_to_interval
 
@@ -406,9 +407,9 @@ def null_semantics_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         df.groupBy("bucket_day")
         .agg(
-            n_unique_expr("et").alias("et_nunique"),
+            n_unique_expr("et", df.schema["et"].dataType).alias("et_nunique"),
             F.round(null_ratio_expr("et"), 6).alias("et_null_ratio"),
-            n_unique_expr("v").alias("v_nunique"),
+            n_unique_expr("v", df.schema["v"].dataType).alias("v_nunique"),
             F.round(null_ratio_expr("v"), 6).alias("v_null_ratio"),
             F.round(F.avg("v"), 6).alias("v_mean"),
         )
@@ -5565,12 +5566,16 @@ def editdist_near_dup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Edit-distance-verified fuzzy dedup: min-k md5 fingerprint
     candidates (operators/dedup.fingerprint_overlap_pairs — entry
     equijoin on uniform sketch hashes, never all-pairs) verified with
-    Levenshtein at relative distance ≤ 0.3. The verify runs ONLY on the
-    bounded candidate set, with Spark's early-exit threshold form
-    (levenshtein(a, b, 200) returns -1 past 200, capping the DP at
-    O(len·200)); the integer filter 10·dist ≤ 3·maxlen avoids any float
-    threshold boundary. Both distances are classic unit-cost codepoint
-    DP — value-identical across engines."""
+    Levenshtein. The effective gate is dist ≤ min(0.3·maxlen, 200):
+    relative distance ≤ 0.3, capped at an absolute 200 edits, so pairs
+    of long documents (maxlen > 666) need more than 30% similarity to
+    pass. The verify runs ONLY on the bounded candidate set, with
+    Spark's early-exit threshold form (levenshtein(a, b, 200) returns
+    -1 past 200, capping the DP at O(len·200)); the oracle applies the
+    same cap as ``levenshtein(...) <= 200``. The integer filter
+    10·dist ≤ 3·maxlen avoids any float threshold boundary. Both
+    distances are classic unit-cost codepoint DP — value-identical
+    across engines."""
     from .operators.dedup import fingerprint_overlap_pairs
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")

@@ -4,7 +4,11 @@ Mirrors the reference's single-pass aggregation (preprocess.py:175-235):
 for every column, count-distinct and null-ratio; for numeric columns
 additionally min/max/mean/median/std. All statistics are computed in ONE
 ``groupBy().agg(...)`` so Catalyst plans a single partial→final
-HashAggregate pass over the data.
+ObjectHashAggregate pair around one Exchange. No expression here is a
+``DISTINCT`` aggregate: ``countDistinct`` next to other aggregates makes
+Catalyst's distinct rewrite replicate every row once per distinct
+column through an ``Expand`` and aggregate twice, so the exact count
+is a set aggregate instead (:func:`n_unique_expr`).
 
 Column-name encoding (kept for report parity with the reference,
 utility/__init__.py:5-8):
@@ -15,7 +19,7 @@ utility/__init__.py:5-8):
 
 Semantic deltas handled here:
 - Polars ``n_unique`` counts NULL as a distinct value; Spark's
-  ``countDistinct`` does not → ``n_unique_expr`` adds an indicator.
+  ``collect_set`` drops NULL → ``n_unique_expr`` adds an indicator.
 - Spark ``median`` (4.x) interpolates like Polars' default — used as-is.
 """
 
@@ -34,19 +38,31 @@ NUMERIC_PREFIX = "n__ "
 STAT_SEP = " __"
 
 
-def n_unique_expr(col: str) -> Column:
+def n_unique_expr(col: str, dtype: T.DataType) -> Column:
     """Null-inclusive exact count-distinct (Polars ``n_unique`` parity).
 
-    ``count(distinct c)`` ignores NULL; add 1 when the group contains a
-    NULL. At extreme scale swap for ``approx_count_distinct`` via the
-    ``approx_distinct`` config knob in :func:`collect_aggregations`.
+    Equals ``countDistinct(c) + max(isnull(c))`` without being a
+    ``DISTINCT`` aggregate, so the stage-1 plan keeps one aggregation
+    level. ``collect_set`` drops NULL, so a group holding a NULL adds 1.
+    ``collect_set`` keeps every NaN apart where ``countDistinct`` counts
+    NaN once, so floating-point NaN is left out of the set and counted
+    once through ``max(isnan(c))``; ``-0.0`` and ``0.0`` already
+    collapse in the set. The set buffers each group's distinct values,
+    like the exact median buffers its values; at extreme scale swap for
+    ``approx_count_distinct`` via the ``approx_distinct`` config knob in
+    :func:`collect_aggregations`.
     """
-    return F.countDistinct(F.col(col)) + F.max(F.col(col).isNull().cast("long"))
+    c = F.col(col)
+    nulls = F.max(c.isNull().cast("long"))
+    if isinstance(dtype, (T.FloatType, T.DoubleType)):
+        nan = F.isnan(c)
+        return F.size(F.collect_set(F.when(~nan, c))) + F.max(nan.cast("long")) + nulls
+    return F.size(F.collect_set(c)) + nulls
 
 
 def approx_n_unique_expr(col: str, rsd: float = 0.01) -> Column:
-    """HLL-based variant for 10^12-row scale (avoids the Expand plan that
-    exact distinct forces when mixed with other aggregates)."""
+    """HLL-based variant for 10^12-row scale: a fixed-size sketch per
+    group instead of a set of every distinct value."""
     return F.approx_count_distinct(F.col(col), rsd) + F.max(
         F.col(col).isNull().cast("long")
     )
@@ -97,13 +113,17 @@ def collect_aggregations(
         )
 
     numeric_cols = {f.name for f in df.schema.fields if is_numeric(f.dataType)}
-    distinct = approx_n_unique_expr if approx_distinct else n_unique_expr
     for f_ in df.schema.fields:
         col = f_.name
         if col == TIME_INTERVAL_COL or col in excluded:
             continue
+        distinct = (
+            approx_n_unique_expr(col)
+            if approx_distinct
+            else n_unique_expr(col, f_.dataType)
+        )
         plan.exprs.append(
-            distinct(col).alias(f"{COLUMN_PREFIX}{col}{STAT_SEP}Number of unique values")
+            distinct.alias(f"{COLUMN_PREFIX}{col}{STAT_SEP}Number of unique values")
         )
         plan.exprs.append(
             null_ratio_expr(col).alias(

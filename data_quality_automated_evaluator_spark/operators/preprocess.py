@@ -4,7 +4,8 @@ single-pass aggregation.
 Capability rebuild of the reference's ``make_preprocessing``
 (preprocess.py:8-72), expressed as lazy DataFrame transformations so
 Catalyst fuses filter + projections into the scan (predicate pushdown,
-column pruning) and plans one partial→final HashAggregate.
+column pruning) and plans one partial→final ObjectHashAggregate pair
+around one Exchange.
 
 Contract parity with the reference:
 - the SQL filter sees the frame as table ``self`` and runs BEFORE
@@ -140,7 +141,11 @@ def make_preprocessing(
     ``approx_distinct``, ``approx_median``.
 
     Returns the per-interval aggregate as a *lazy* DataFrame (callers
-    collect; at #intervals rows it is tiny) plus column metadata.
+    collect; at #intervals rows it is tiny) plus column metadata. Its
+    rows come in no particular order: a Spark sort of #intervals rows
+    costs a range-partition sampling job and a second Exchange, so
+    :func:`~data_quality_automated_evaluator_spark.report.make_report`
+    puts the collected rows in time order in pandas.
     """
     df = apply_filter(df, config.get("filter"))
     df = apply_transformations(df, config.get("transformations"))
@@ -160,7 +165,7 @@ def make_preprocessing(
         approx_distinct=bool(config.get("approx_distinct", False)),
         approx_median=bool(config.get("approx_median", False)),
     )
-    agg = df.groupBy(TIME_INTERVAL_COL).agg(*plan.exprs).orderBy(TIME_INTERVAL_COL)
+    agg = df.groupBy(TIME_INTERVAL_COL).agg(*plan.exprs)
     if config.get("explain"):
         # reference keeps a commented lf_agg.explain() hook (preprocess.py:70);
         # here it's a config flag

@@ -75,6 +75,13 @@ def bm25_topk(
     query term occurrence is collapsed to distinct — BM25 sums each
     distinct term once). Returns ``(query_id, doc_id, score_micro,
     rank)`` with ``score_micro`` the BIGINT micro-nat BM25 score.
+
+    ``N`` (``n_docs``) and ``avgdl`` count only documents with at least
+    one token: a document whose text splits into no tokens (empty or
+    all-delimiter) has no row in the token frame, so it is left out of
+    both, not counted with length 0. The DuckDB oracle
+    (:func:`bm25_oracle_sql`) derives both from its token table the
+    same way.
     """
     qt = query_terms.select("query_id", "term").distinct()
 

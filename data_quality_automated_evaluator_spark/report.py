@@ -78,9 +78,12 @@ def make_report(
     """Build (and optionally write) the markdown report.
 
     ``aggregate``: collected stage-1 output (``__time_interval`` + the
-    name-encoded stat columns). ``metadata``: source column → numeric
-    dtype string or None (drives numeric subsections).
+    name-encoded stat columns), in any row order; it is put in time
+    order here, NULL interval first as Spark's ascending sort does.
+    ``metadata``: source column → numeric dtype string or None (drives
+    numeric subsections).
     """
+    aggregate = aggregate.sort_values(TIME_INTERVAL_COL, na_position="first")
     config = config or {}
     # reference config shape nests these under "outliers" with keys
     # criterion / multiplier_iqr / threshold_z_score (config.json:13-17);

@@ -1,12 +1,21 @@
 from __future__ import annotations
 
 import datetime as dt
+import json
+import math
+import struct
 
 import numpy as np
 import pandas as pd
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
-from data_quality_automated_evaluator_spark.functions.aggregates import TIME_INTERVAL_COL
+from data_quality_automated_evaluator_spark.functions.aggregates import (
+    TIME_INTERVAL_COL,
+    n_unique_expr,
+)
 from data_quality_automated_evaluator_spark.operators.evaluate import evaluate_data
 from data_quality_automated_evaluator_spark.operators.preprocess import make_preprocessing
 
@@ -119,6 +128,83 @@ def test_filter_and_transform(spark, txn):
         agg[" __Target average"] * agg[" __Number of values"]
     ).sum() / agg[" __Number of values"].sum()
     assert abs(got_avg - expect_avg) < 1e-9
+
+
+NAN = float("nan")
+NAN_PAYLOAD = struct.unpack("<d", struct.pack("<Q", 0x7FF8000000000001))[0]
+NUNIQUE_SCHEMA = "g int, d double, b bigint, s string, f boolean, t timestamp"
+DOUBLES = st.none() | st.floats() | st.sampled_from(
+    [0.0, -0.0, NAN, -NAN, NAN_PAYLOAD, 1.5, math.inf, -math.inf]
+)
+NUNIQUE_ROWS = st.lists(
+    st.tuples(
+        st.integers(0, 3),
+        DOUBLES,
+        st.none() | st.integers(-2, 2) | st.sampled_from([-(2**63), 2**63 - 1]),
+        st.none() | st.sampled_from(["", "a", "A", "a ", "ä"]) | st.text(max_size=3),
+        st.none() | st.booleans(),
+        st.none()
+        | st.sampled_from([dt.datetime(2024, 1, 1), dt.datetime(2024, 1, 1, 0, 0, 1)])
+        | st.datetimes(dt.datetime(1970, 1, 2), dt.datetime(2100, 1, 1)),
+    ),
+    min_size=1,
+    max_size=40,
+)
+
+
+def _double_rows(g: int, doubles: list) -> list[tuple]:
+    return [(g, d, None, None, None, None) for d in doubles]
+
+
+@given(NUNIQUE_ROWS)
+@example(_double_rows(0, [0.0, -0.0, NAN, NAN, None]))  # zeros collapse, NaN once
+@example(_double_rows(0, [NAN, -NAN, NAN_PAYLOAD, 1.0]))  # NaNs count once
+@example(_double_rows(0, [None, None]) + _double_rows(1, [NAN, NAN]))  # all-NULL, all-NaN
+@example(_double_rows(0, [0.0, -0.0]) + _double_rows(1, [NAN, None, -0.0]))
+@settings(max_examples=25, deadline=None)
+def test_n_unique_matches_count_distinct(spark, rows):
+    """The set-based exact count equals ``countDistinct(c) + max(isnull(c))``
+    group by group: NULL counts once, NaN counts once however many NaNs
+    (and payloads) a group holds, and -0.0 equals 0.0."""
+    df = spark.createDataFrame(rows, NUNIQUE_SCHEMA)
+    cols = [f for f in df.schema.fields if f.name != "g"]
+    out = df.groupBy("g").agg(
+        *[n_unique_expr(f.name, f.dataType).alias(f"new_{f.name}") for f in cols],
+        *[
+            (F.countDistinct(f.name) + F.max(F.col(f.name).isNull().cast("long")))
+            .alias(f"ref_{f.name}")
+            for f in cols
+        ],
+    )
+    for row in out.collect():
+        for f in cols:
+            assert row[f"new_{f.name}"] == row[f"ref_{f.name}"], (f.name, row["g"])
+
+
+def test_report_sorts_intervals(spark, sf_dir, tmp_path):
+    """make_report puts the collected aggregate in time order itself: a
+    row-shuffled aggregate gives the same markdown and charts as the
+    sorted one, and the chart series run in ascending interval order."""
+    from data_quality_automated_evaluator_spark.report import make_report
+
+    res = make_preprocessing(
+        spark.read.parquet(f"{sf_dir}/events.parquet"),
+        {"date_column": "ts", "time_interval": "1d", "target_column": "value"},
+    )
+    agg = res.aggregate.toPandas().sort_values(TIME_INTERVAL_COL, ignore_index=True)
+    shuffled = agg.sample(frac=1, random_state=7)
+    assert not shuffled[TIME_INTERVAL_COL].is_monotonic_increasing
+    config = {"charts": {"format": "json"}}
+    out_sorted = make_report(agg, res.metadata, config, str(tmp_path / "a" / "R.md"))
+    out_shuffled = make_report(shuffled, res.metadata, config, str(tmp_path / "b" / "R.md"))
+    assert out_shuffled == out_sorted
+    charts = sorted(p.name for p in (tmp_path / "a" / "charts").iterdir())
+    assert "overview.json" in charts
+    expect_x = [str(v) for v in agg[TIME_INTERVAL_COL]]
+    for name in charts:
+        payload = (tmp_path / "b" / "charts" / name).read_text()
+        assert payload == (tmp_path / "a" / "charts" / name).read_text(), name
+        assert json.loads(payload)["x"] == expect_x, name
 
 
 def test_int_epoch_days_cast(spark):
