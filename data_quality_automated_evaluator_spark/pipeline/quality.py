@@ -16,7 +16,11 @@ and a ``part_date`` exchange before the partitioned write.
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
+import pyarrow as pa
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -82,13 +86,13 @@ def interval_rule_facts(
     result: DataFrame, time_interval: str = "1d"
 ) -> DataFrame:
     """Combinable per-(partition, interval) partial aggregates and per-date
-    totals in ONE aggregation, ``rollup(part_date, bucket)``.
+    totals in ONE aggregation, ``rollup(part_date, bucket)``, collected once.
 
     Rows with ``level`` 0 are the partials: counts and flag SUMS instead
     of rates, so stats over an ever-growing table stay incremental — each
-    batch aggregates only its own partitions, and
-    :func:`combine_rule_partials` folds all stored partials into the same
-    rates :func:`interval_rule_stats` would compute over the full table
+    batch aggregates only its own partitions, the sink's driver writes them
+    one file per date, and :func:`combine_rule_partials` folds them into
+    the rates :func:`interval_rule_stats` would compute over the full table
     (rule flags are non-null, so sum/count == avg exactly). ``level`` 1
     rows total one ``part_date`` and carry its exact distinct-conversation
     count ``n_convs`` (a conversation spanning several buckets counts
@@ -119,15 +123,23 @@ def interval_rule_facts(
     )
 
 
-def combine_rule_partials(partials: DataFrame) -> DataFrame:
-    """Fold stored partials into the interval_rule_stats schema.
+# the interval_rule_stats columns, as combine_rule_partials returns them
+RATE_COLUMNS = ["keep_rate", *(f"{r}_pass_rate" for r in RULE_NAMES)]
+RULE_STATS_SCHEMA = ", ".join(
+    ["__time_interval timestamp", "n_turns bigint", *(f"{c} double" for c in RATE_COLUMNS)])
 
-    Input cardinality is #partitions × #buckets — metadata-sized; this
-    never touches the written fact table.
-    """
-    n = F.sum("n_turns")
-    aggs = [n.alias("n_turns"),
-            (F.sum("keep_sum").cast("double") / n).alias("keep_rate")]
-    for r in RULE_NAMES:
-        aggs.append((F.sum(f"{r}_sum").cast("double") / n).alias(f"{r}_pass_rate"))
-    return partials.groupBy("__time_interval").agg(*aggs).orderBy("__time_interval")
+
+def combine_rule_partials(partials_dir: str) -> pd.DataFrame:
+    """Fold a stored partials tree (read with ``pyarrow.dataset``) into
+    :data:`RULE_STATS_SCHEMA` rows in pandas on the driver: int64 sums,
+    float64 rates (Spark's ``cast(sum as double) / count``), time order.
+    Metadata-sized input; this never touches the written fact table."""
+    sums = ["n_turns", "keep_sum", *(f"{r}_sum" for r in RULE_NAMES)]
+    schema = pa.schema([("__time_interval", pa.timestamp("us", tz="UTC")),
+                        *((c, pa.int64()) for c in sums)])
+    table = (ds.dataset(partials_dir, schema=schema, partitioning="hive").to_table()
+             if os.path.isdir(partials_dir) else schema.empty_table())
+    g = table.to_pandas().groupby("__time_interval", sort=True)[sums].sum()
+    n = g.pop("n_turns")
+    rates = g.astype("float64").div(n, axis=0).set_axis(RATE_COLUMNS, axis=1)
+    return pd.concat([n, rates], axis=1).reset_index()

@@ -14,6 +14,10 @@ Checkpoint/resume contract (north_rule):
   written with dynamic partition overwrite, so re-running a partition
   (after a mid-write crash) is idempotent;
 - no row-granular state anywhere.
+
+Only the turns are written by Spark; after that write, one Spark action
+collects the per-date facts, and the driver commits what derives from
+them (partials, stats, ledger).
 """
 
 from __future__ import annotations
@@ -21,17 +25,20 @@ from __future__ import annotations
 import json
 import logging
 import os
+import shutil
 import time
 import uuid
 
-import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .observability import attach_quality_observation
 from .quality import (
+    RULE_STATS_SCHEMA,
     combine_rule_partials,
     interval_rule_facts,
     run_quality_pipeline,
@@ -53,6 +60,19 @@ _MAX_DISCOVERY_DATES = 10_000
 # at most this many zero-ledgered dates are re-checked for late data per
 # run (most recent first) — bounds the OR predicate and the recheck scan
 _MAX_RECHECK_DATES = 128
+
+
+def _replace_dir(table: pa.Table, path: str) -> None:
+    """Make ``table`` the only file of directory ``path``: written into a
+    hidden staging dir beside it (which Spark and ``pyarrow.dataset`` skip),
+    then the old dir is removed and the staging dir renamed into place
+    (dynamic overwrite's commit shape: a crash leaves ``path`` absent)."""
+    staging = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.staging")
+    shutil.rmtree(staging, ignore_errors=True)
+    os.makedirs(staging)
+    pq.write_table(table, os.path.join(staging, "part-00000.parquet"))
+    shutil.rmtree(path, ignore_errors=True)
+    os.rename(staging, path)
 
 
 def _footer_minmax_one(path: str, col: str):
@@ -202,36 +222,26 @@ class QualitySink:
         if not missing:
             return False
         self._write_partials(
-            spark,
             self.read_turns(spark).filter(F.col("part_date").isin(missing)),
             time_interval,
         )
         return True
 
-    def _write_partials(
-        self, spark: SparkSession, written: DataFrame, time_interval: str
-    ) -> pd.DataFrame:
+    def _write_partials(self, written: DataFrame, time_interval: str) -> pa.Table:
         """Aggregate ``written`` (whole part_dates of the turns artifact)
-        once, write its partials into this granularity's tree and return
-        its per-date totals (``interval_rule_facts`` level-1 rows)."""
-        facts = interval_rule_facts(written, time_interval)
-        rows = facts.toPandas()
-        partials = rows[rows["level"] == 0].drop(columns=["n_convs", "level"])
-        # dynamic overwrite is load-bearing for the partials tree: static
-        # mode would wipe every previously-completed date on resume, or
-        # keep only the backfilled dates on an interval switch — set here,
-        # not only inside _write_turns, because an Iceberg-committed turns
-        # artifact doesn't touch this conf (and run()'s early-return path
-        # backfills without writing turns at all)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        # Arrow-backed (a list of Rows would launch Python tasks again);
-        # one writer task, so one file per date
-        spark.createDataFrame(
-            partials, T.StructType([f for f in facts.schema if f.name in partials.columns])
-        ).coalesce(1).write.mode("overwrite").partitionBy("part_date").parquet(
-            self._partials_dir(time_interval)
-        )
-        return rows[rows["level"] == 1]
+        once, commit its partials from the driver, one file per date put in
+        place by :func:`_replace_dir`, and return its per-date totals
+        (``interval_rule_facts`` level-1 rows)."""
+        facts = interval_rule_facts(written, time_interval).toArrow()
+        level = facts.column("level")
+        partials = facts.filter(pc.equal(level, 0)).drop_columns(["n_convs", "level"])
+        dates = partials.column("part_date")
+        for d in sorted(pc.unique(dates).to_pylist()):
+            _replace_dir(
+                partials.filter(pc.equal(dates, d)).drop_columns(["part_date"]),
+                os.path.join(self._partials_dir(time_interval), f"part_date={d}"),
+            )
+        return facts.filter(pc.equal(level, 1))
 
     @staticmethod
     def _partial_dates(pdir: str) -> set[str]:
@@ -390,10 +400,9 @@ class QualitySink:
             # still honor an interval switch: backfill this granularity's
             # partials from completed partitions before returning
             if self._sync_partials(spark, time_interval, nonzero_done):
-                stats = combine_rule_partials(
-                    spark.read.parquet(self._partials_dir(time_interval))
+                self._write_stats(
+                    spark, combine_rule_partials(self._partials_dir(time_interval))
                 )
-                self._write_stats(stats)
             return {"processed_partitions": 0, "skipped_partitions": len(done),
                     "n_turns": 0, "n_keep": 0, "n_null_ts": n_null_ts}
 
@@ -423,23 +432,21 @@ class QualitySink:
         # metrics — per-rule failure counts at 100 TB without a second
         # pass over the input (pipeline/observability.py).
         out, run_obs = attach_quality_observation(out, name=f"sink_run_{uuid.uuid4().hex[:8]}")
-        self._write_turns(out.repartition("part_date"))
+        written = self._write_turns(out.repartition("part_date"))
         observed = run_obs.get
 
         # every per-date fact of THIS batch comes from one aggregation over
-        # the WRITTEN output (column-pruned re-read of compact parquet,
-        # never the raw input), collected once: the combinable partials
+        # the WRITTEN output (never the raw input), collected once — the
+        # only Spark action after the write: the combinable partials
         # (counts + flag sums per (part_date, bucket)) and each date's
         # totals with its exact distinct-conversation count. The partials
-        # are written from those rows with dynamic overwrite, so a
-        # partition re-run is idempotent; the combined stats artifact is
-        # then folded from the partials tree alone — O(#partitions ×
-        # #buckets) rows, never a re-read of the accumulated table — and
-        # converges to exactly what an uninterrupted run would produce.
+        # are committed date by date, so a partition re-run is idempotent;
+        # the stats artifact is then folded from the partials tree alone —
+        # O(#partitions × #buckets) rows, never a re-read of the
+        # accumulated table — and converges to exactly what an
+        # uninterrupted run would produce.
         totals = self._write_partials(
-            spark,
-            self.read_turns(spark).filter(F.col("part_date").isin(pending)),
-            time_interval,
+            written.filter(F.col("part_date").isin(pending)), time_interval
         )
         # partials are keyed by bucket granularity: a run with a NEW
         # time_interval starts a fresh partials tree, and partitions
@@ -447,19 +454,17 @@ class QualitySink:
         # bounded to those partitions) instead of silently mixing
         # granularities in one artifact
         self._sync_partials(spark, time_interval, nonzero_done)
-        self._write_stats(
-            combine_rule_partials(spark.read.parquet(self._partials_dir(time_interval)))
-        )
-        # scrubbed_chars_sum is NULL (NaN here) for a date whose scrubbed
-        # texts are all NULL
+        self._write_stats(spark, combine_rule_partials(self._partials_dir(time_interval)))
+        # scrubbed_chars_sum is NULL for a date whose scrubbed texts are
+        # all NULL
         by_date = {
             str(r["part_date"]): {
-                "n_turns": int(r["n_turns"]),
-                "n_keep": int(r["keep_sum"]),
-                "n_convs": int(r["n_convs"]),
-                "scrubbed_chars": int(np.nan_to_num(r["scrubbed_chars_sum"])),
+                "n_turns": r["n_turns"],
+                "n_keep": r["keep_sum"],
+                "n_convs": r["n_convs"],
+                "scrubbed_chars": r["scrubbed_chars_sum"] or 0,
             }
-            for r in totals.to_dict("records")
+            for r in totals.to_pylist()
         }
         wall = time.perf_counter() - t0
         # EVERY selected pending date is ledgered — empty ones with zeros —
@@ -501,19 +506,20 @@ class QualitySink:
             },
         }
 
-    def _write_turns(self, out: DataFrame) -> None:
-        """Commit one batch of partitions to the turns artifact.
-        Partition re-runs must be idempotent (dynamic overwrite)."""
+    def _write_turns(self, out: DataFrame) -> DataFrame:
+        """Commit one batch of partitions (dynamic overwrite: idempotent
+        re-runs); return it read back with ``out``'s schema (no inference)."""
         spark = out.sparkSession
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         out.write.mode("overwrite").partitionBy("part_date").parquet(
             self.turns_dir
         )
+        return spark.read.schema(out.schema).parquet(self.turns_dir)
 
-    def _write_stats(self, stats: DataFrame) -> None:
-        """Publish the combined interval-stats artifact (full refresh —
-        it is metadata-sized: #buckets × #rule columns)."""
-        stats.write.mode("overwrite").parquet(self.stats_dir)
+    def _write_stats(self, spark: SparkSession, stats: pd.DataFrame) -> None:
+        """Publish the combined interval-stats artifact, one file swapped in
+        by the driver (full refresh — metadata-sized: #buckets rows)."""
+        _replace_dir(pa.Table.from_pandas(stats, preserve_index=False), self.stats_dir)
 
     def _write_lineage(self, spark: SparkSession, entries: list[dict]) -> None:
         """Hook for a queryable lineage artifact; the per-date JSON
@@ -526,8 +532,8 @@ class QualitySink:
         """Combined interval stats at one granularity, folded from the
         per-partition partials (equivalent to interval_rule_stats over the
         whole written table, without scanning it)."""
-        return combine_rule_partials(
-            spark.read.parquet(self._partials_dir(time_interval))
+        return spark.createDataFrame(
+            combine_rule_partials(self._partials_dir(time_interval)), RULE_STATS_SCHEMA
         )
 
 
@@ -545,9 +551,9 @@ class IcebergQualitySink(QualitySink):
     / ``spark.read.format("iceberg")`` — the run()/ledger/stats logic is
     identical.
 
-    The stats partials + combined stats stay partitioned parquet: they
-    are metadata-sized derived artifacts (#dates × #buckets rows), not
-    the 10^12-row fact table.
+    The stats partials stay driver-written parquet: they are
+    metadata-sized derived artifacts (#dates × #buckets rows), not the
+    10^12-row fact table.
 
     Scale note: ``read_iceberg`` plans one scan per live partition value
     and unions them — fine for the per-batch stats re-read here (bounded
@@ -555,20 +561,21 @@ class IcebergQualitySink(QualitySink):
     production scale goes through the runtime jar's single scan node.
     """
 
-    def _write_turns(self, out: DataFrame) -> None:
+    def _write_turns(self, out: DataFrame) -> DataFrame:
         from ..sources.iceberg_lite import write_iceberg as _wi
 
         self._last_turns_snapshot = _wi(
             out, self.turns_dir, partition_by=["part_date"],
             mode="overwrite_partitions",
         )
+        return self.read_turns(out.sparkSession)
 
     def read_turns(self, spark: SparkSession) -> DataFrame:
         from ..sources.iceberg_lite import read_iceberg as _ri
 
         return _ri(spark, self.turns_dir)
 
-    def _write_stats(self, stats: DataFrame) -> None:
+    def _write_stats(self, spark: SparkSession, stats: pd.DataFrame) -> None:
         """The combined interval stats are an Iceberg table too (north
         rule: "writes ... per-rule quality statistics aggregated by
         groupBy over time intervals ... to Iceberg"): full-refresh
@@ -576,7 +583,8 @@ class IcebergQualitySink(QualitySink):
         time-travelable snapshot."""
         from ..sources.iceberg_lite import write_iceberg as _wi
 
-        _wi(stats, self.stats_dir, partition_by=[], mode="overwrite")
+        _wi(spark.createDataFrame(stats, RULE_STATS_SCHEMA).coalesce(1),
+            self.stats_dir, partition_by=[], mode="overwrite")
 
     def _write_lineage(self, spark: SparkSession, entries: list[dict]) -> None:
         """Per-partition lineage + metrics as an append-only Iceberg

@@ -49,6 +49,13 @@ def get_spark(
         # QualitySink.discover_partitions reads those instead of scanning
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # no per-call Python call-site capture: with it on, every
+        # DataFrame/functions call does an active-session lookup, a conf
+        # read, a stack walk and two JVM calls (~1.5k py4j calls to build
+        # QualitySink.run's plan). The trade-off: errors keep the JVM
+        # message and the Python traceback, but lose the "== DataFrame =="
+        # section naming the Python line that built the failing expression
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # pure-Python sweeps favor 2-4k rows/batch (cache residency), but
         # in-Spark A/B shows Arrow IPC overhead cancels the gain — 10k is
         # equal within measurement noise; knob kept for cluster tuning

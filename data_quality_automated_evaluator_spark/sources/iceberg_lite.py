@@ -292,9 +292,12 @@ def read_iceberg(
     names, not data pages (the partitioned write drops them), so files
     are grouped by partition tuple and each group gets its values
     restored as typed literals — constant-folded by Catalyst, zero
-    per-row cost. The result is projected onto the table schema in
-    field order with spec types, so derived-transform directory columns
-    (e.g. ``ts_day=``) never leak extra columns.
+    per-row cost. Each group is read with the table's data schema (spec
+    types, identity partition fields left out), so planning runs no
+    schema-inference job, and a file written under an older schema that
+    lacks a column reads it as NULL. The result is projected onto the
+    table schema in field order with spec types, so derived-transform
+    directory columns (e.g. ``ts_day=``) never leak extra columns.
     """
     meta = load_metadata(location)
     files = iceberg_files(location, snapshot_id, partition_filter)
@@ -321,13 +324,16 @@ def read_iceberg(
     identity = [
         pf["name"] for pf in spec["fields"] if pf["transform"] == "identity"
     ]
+    data_schema = ", ".join(
+        f"`{n}` {t}" for n, t in spark_type.items() if n not in identity
+    )
     groups: dict[tuple, list[str]] = {}
     for f in files:
         key = tuple((k, f["partition"].get(k)) for k in identity)
         groups.setdefault(key, []).append(f["file_path"])
     parts = []
     for key, paths in groups.items():
-        g = spark.read.parquet(*paths)
+        g = spark.read.schema(data_schema).parquet(*paths)
         for k, v in key:
             if spark_type.get(k) == "date" and isinstance(v, int):
                 # spec encoding: days from epoch → a typed date literal

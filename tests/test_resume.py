@@ -318,7 +318,7 @@ def test_ledger_facts_exact(spark, sdf, tmp_path_factory, sink_cls):
 class _PlanCapturingSink(QualitySink):
     def _write_turns(self, out):
         self.plan = out._jdf.queryExecution().executedPlan().toString()
-        super()._write_turns(out)
+        return super()._write_turns(out)
 
 
 def test_udf_stage_is_one_wave(spark, sdf, tmp_path):
