@@ -18,10 +18,9 @@ Layout
 - ``functions``  interval parsing, SQL-dialect shim, aggregate expression
                  builders, text statistics, langid, perplexity, scrub, hashing
 - ``operators``  preprocess (stage-1 agg), evaluate (stage-2 stats), dedup,
-                 similarity search, multimodal plumbing
-- ``pipeline``   the transcripts quality-filter pipeline + pandas oracle +
-                 resumable sinks
-- ``streaming``  Structured Streaming variant of the quality filter
+                 similarity search
+- ``pipeline``   the transcripts quality-filter pipeline + its DuckDB SQL
+                 oracle + resumable sinks
 """
 
 __version__ = "0.1.0"

@@ -74,8 +74,8 @@ def quality_pipeline_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     transcripts table (seed=42 generator — BASELINE input_hint shape):
     langid + perplexity + heuristics + conversation window + scrub →
     per-turn keep/drop labels. Correctness is gated by the pytest golden
-    suite (F1 + byte-exact vs the pandas oracle); the driver records the
-    rows-only check here."""
+    suite (F1 vs the DuckDB keep-flags oracle, byte-exact scrub); this
+    registered query is checked for rows only."""
     from .pipeline.quality import labels_frame, run_quality_pipeline
     from .testdata import generate_transcripts
 
@@ -1000,10 +1000,9 @@ def reassemble_events_by_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     conversation reassembly uses on `conv_id`), rendered to an ordered
     trace string — equals DuckDB's string_agg(... ORDER BY).
 
-    Uses ``applyInArrow`` (not applyInPandas — that variant lives in
-    pipeline/reassembly.py): skipping the pandas conversion per group is
-    ~6x faster at ~1.5k groups/100k rows, and the gap widens with group
-    count."""
+    Uses ``applyInArrow``, not applyInPandas: skipping the pandas
+    conversion per group is ~6x faster at ~1.5k groups/100k rows, and the
+    gap widens with group count."""
     import pyarrow as pa
 
     def _trace(tbl: pa.Table) -> pa.Table:

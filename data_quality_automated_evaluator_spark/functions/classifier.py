@@ -217,10 +217,10 @@ def auc_stats(
     corpus size), one partial→final aggregation to per-bin pos/neg
     counts, then Mann-Whitney with tie correction over the bounded bin
     frame: ``AUC = sum_b pos_b * (2*cumneg_<b + neg_b) / (2*P*N)``.
-    The running-negatives window orders the bin frame under a constant
-    partition key — single-task on purpose (the frame is domain-bounded,
-    the same metadata-sized argument as the sampler's counts frame) and
-    warning-clean.  All numerators stay BIGINT-exact (order-independent,
+    The running-negatives window orders the bin frame unpartitioned —
+    single-task on purpose (the frame is domain-bounded, the same
+    metadata-sized argument as the sampler's counts frame; Spark logs
+    its no-partition WindowExec warning).  All numerators stay BIGINT-exact (order-independent,
     engine-portable); exactness holds while ``2*P*N < 2^63``, i.e. to
     ~2e9 rows per class — past that the final ratio should move to
     double, noted here so the seam is explicit."""
@@ -238,11 +238,7 @@ def auc_stats(
     )
     from pyspark.sql import Window
 
-    w = (
-        Window.partitionBy(F.lit(0))
-        .orderBy("s")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
+    w = Window.orderBy("s").rowsBetween(Window.unboundedPreceding, -1)
     cum = binned.withColumn(
         "cumneg", F.coalesce(F.sum("neg").over(w), F.lit(0))
     )

@@ -86,15 +86,6 @@ def hamming64(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(np.unpackbits(bytes_view, axis=1).sum(axis=1), index=a.index)
 
 
-def jaccard_shingles(a: str, b: str, k: int = 5) -> float:
-    """Exact k-shingle Jaccard of two strings (verification stage)."""
-    sa, sb = char_shingles(a, k), char_shingles(b, k)
-    if len(sa) == 0 and len(sb) == 0:
-        return 1.0
-    inter = len(np.intersect1d(sa, sb, assume_unique=True))
-    return inter / (len(sa) + len(sb) - inter)
-
-
 def jaccard_pairs_batch(ta: pd.Series, tb: pd.Series, k: int = 5) -> pd.Series:
     """Exact k-shingle Jaccard for a batch of text PAIRS.
 
@@ -102,7 +93,7 @@ def jaccard_pairs_batch(ta: pd.Series, tb: pd.Series, k: int = 5) -> pd.Series:
     computed once per distinct text in the batch and the per-pair work
     collapses to a sorted-array intersection (~µs) — the verification
     stage goes from O(pairs · shingling) to O(distinct-texts · shingling
-    + pairs · merge). Semantics identical to :func:`jaccard_shingles`.
+    + pairs · merge). Two empty shingle sets have Jaccard 1.
     """
     cache: dict[str, np.ndarray] = {}
 

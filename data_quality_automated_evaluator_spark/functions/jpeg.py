@@ -1,7 +1,7 @@
 """Baseline JPEG codec — pure stdlib + numpy, no third-party deps.
 
-Closes the "JPEG is header-only" seam in :mod:`..operators.multimodal`:
-``decode_jpeg`` implements baseline sequential DCT (ITU-T T.81 / ISO
+The chart exporter's ``fmt="jpeg"`` encoder, with its decoder as the
+round-trip reference. ``decode_jpeg`` implements baseline sequential DCT (ITU-T T.81 / ISO
 10918-1): marker walk, DQT (8/16-bit), SOF0, DHT, DRI/RSTn restart
 handling, per-MCU Huffman entropy decode with byte-stuffing, dequant +
 dezigzag, orthonormal-matrix IDCT (numpy), chroma upsampling for any
@@ -13,10 +13,8 @@ Huffman tables.
 Scope is honest: progressive (SOF2), arithmetic coding, and 12-bit
 precision raise :class:`JpegFormatError` — the dominant web-image case
 (baseline sequential, the overwhelming majority of JPEGs) decodes for
-real. The entropy loop is per-block Python (fine for the bounded
-thumbnails/tests this container handles); the IDCT and color math are
-vectorized. Swapping in Pillow remains a one-function change in
-multimodal.py for full-speed production decode.
+real. The entropy loop is per-block Python (fine for chart-sized
+images); the IDCT and color math are vectorized.
 
 Everything here derives from the public JPEG specification; the DCT
 matrix identity is F = T·B·Tᵀ with the orthonormal DCT-II matrix T, so

@@ -2,8 +2,9 @@
 
 A fastText-flavored linear model: per-language scores are weighted
 counts of discriminative character n-grams / character classes. The
-same :func:`langid_frame` core runs inside the Spark pandas UDF (Arrow
-batches) and inside the single-node oracle, so the two agree exactly.
+:func:`langid_frame` core runs inside the Spark pandas UDF (Arrow
+batches); the DuckDB oracle re-expresses the same model spec in SQL
+(``pipeline/oracle_sql.LANGID_SQL_SCORES``).
 
 Two interchangeable counting backends:
 

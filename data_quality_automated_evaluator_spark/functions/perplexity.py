@@ -80,8 +80,7 @@ def perplexity_batch(texts: pd.Series) -> pd.Series:
     """Char-bigram perplexity for a batch of strings (vectorized).
 
     Non-ASCII bytes fall into the OOV class (they still participate as
-    context, matching the single-node oracle exactly since it runs this
-    very function).
+    context, byte for byte as the DuckDB oracle's per-byte classes do).
     """
     return score_logprob_batch(texts, _LOGP)
 

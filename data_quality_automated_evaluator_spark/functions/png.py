@@ -1,9 +1,8 @@
 """Pure-stdlib PNG codec (zlib + numpy): real decode/resize/encode.
 
-Upgrades the multimodal resize seam from a stub to a working path for
-PNG — the one raster format fully decodable with nothing but ``zlib``
-(stdlib) and numpy. JPEG/video still need external codecs and keep
-their honest seams.
+The chart exporter's matplotlib-free PNG path, with the decoder as the
+encoder's round-trip reference: PNG is fully decodable with nothing
+but ``zlib`` (stdlib) and numpy.
 
 Supported: 8-bit depth, color types 0 (gray), 2 (RGB), 4 (gray+alpha),
 6 (RGBA), non-interlaced — the overwhelming majority of real-world

@@ -2,10 +2,10 @@
 
 One pass of sequential, precompiled, fully-specified regex
 replacements, applied batch-wise with pandas' C-level
-``str.replace(regex=True)``. The identical function body runs inside
-the Spark pandas UDF and inside the single-node oracle, which is what
-makes the byte-exact-scrubbed-text requirement structural rather than
-aspirational.
+``str.replace(regex=True)``. The Spark pandas UDF runs exactly this
+function, so the written scrubbed text is byte-exact ``scrub_batch`` of
+each turn (golden-tested); the DuckDB ``regexp_replace`` chain built
+from the same rule table is the independent check.
 
 Determinism rules:
 - patterns are module-level constants compiled once, no locale-dependent

@@ -1,12 +1,12 @@
-"""Per-turn heuristic text statistics — dual Spark/pandas implementations.
+"""Per-turn heuristic text statistics as Spark Column expressions.
 
-The Spark side stays 100% JVM (built-in ``pyspark.sql.functions`` inside
-whole-stage codegen — these are the hot-path features at 10^12 rows);
-the pandas side is the single-node oracle. Parity is guaranteed by
-using only regex constructs with identical semantics in Java and Python
-regex engines (explicit ASCII classes, ``\\S``, no locale-dependent
-classes) — verified by the golden tests over the full fixture
-distribution.
+They stay 100% JVM (built-in ``pyspark.sql.functions`` inside
+whole-stage codegen — these are the hot-path features at 10^12 rows).
+The reference is the DuckDB SQL of
+:func:`..pipeline.oracle_sql.keep_flags_oracle_sql`; parity holds by
+using only regex constructs with identical semantics in Java regex and
+RE2 (explicit ASCII classes, ``\\S``, no locale-dependent classes) —
+verified by the golden tests over the full fixture distribution.
 
 Features:
 - ``n_chars``   code-point length
@@ -19,10 +19,6 @@ Features:
 
 from __future__ import annotations
 
-import re
-
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -85,47 +81,6 @@ def spark_text_features(text: Column) -> dict[str, Column]:
 def with_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     feats = spark_text_features(F.col(text_col))
     return df.withColumns(feats)
-
-
-# ---------------------------------------------------------------------------
-# pandas side (oracle — same math, same regexes)
-# ---------------------------------------------------------------------------
-
-_WS_SPLIT = re.compile(r"\s+")
-
-
-def _distinct_ratio_one(t: str) -> float:
-    toks = [x for x in _WS_SPLIT.split(t.strip().lower()) if x]
-    if not toks:
-        return 1.0
-    return len(set(toks)) / len(toks)
-
-
-def pandas_text_features(texts: pd.Series) -> pd.DataFrame:
-    s = texts.fillna("").astype(str)
-    n_chars = s.str.len().astype("int64")
-    n_tokens = s.str.count(TOKEN_CLASS).astype("int64")
-    n_symbols = s.str.count(SYMBOL_CLASS).astype("int64")
-    n_stop = s.str.lower().str.count(_STOPWORD_RE.replace("(?i)", ""))
-    symbol_ratio = np.where(n_chars > 0, n_symbols / n_chars.replace(0, 1), 0.0)
-    distinct_ratio = s.map(_distinct_ratio_one)
-    stopword_ratio = np.where(n_tokens > 0, n_stop / n_tokens.replace(0, 1), 0.0)
-    quality = (
-        np.minimum(n_tokens / 20.0, 1.0) * 0.4
-        + (1.0 - np.minimum(symbol_ratio * 2, 1.0)) * 0.3
-        + np.minimum(stopword_ratio * 4, 1.0) * 0.3
-    )
-    return pd.DataFrame(
-        {
-            "n_chars": n_chars.astype("int32"),
-            "n_tokens": n_tokens.astype("int32"),
-            "symbol_ratio": symbol_ratio.astype("float64"),
-            "distinct_token_ratio": distinct_ratio.astype("float64"),
-            "stopword_ratio": stopword_ratio.astype("float64"),
-            "quality_score": pd.Series(quality, index=s.index).astype("float64"),
-        },
-        index=s.index,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -250,8 +205,9 @@ def zipf_slope_stats(
     Scale shape: one exploded-token HashAggregate with map-side
     partials (the tfidf_top_terms pattern), a TakeOrderedAndProject
     cut to ``topk`` rows (never a global window over the vocabulary),
-    then a constant-partition row_number over the <=topk-row frame
-    (warning-clean) and ONE tiny aggregate.  Nothing after the vocab
+    then an unpartitioned row_number over the <=topk-row frame (one
+    task on purpose; Spark logs its no-partition WindowExec warning)
+    and ONE tiny aggregate.  Nothing after the vocab
     agg touches more than ``topk`` rows.
 
     Cross-engine value-hash discipline (the DSIR trick): both log2
@@ -273,9 +229,7 @@ def zipf_slope_stats(
         .agg(F.count("*").alias("cnt"))
     )
     top = counts.orderBy(F.col("cnt").desc(), F.col("word").asc()).limit(topk)
-    w = Window.partitionBy(F.lit(0)).orderBy(
-        F.col("cnt").desc(), F.col("word").asc()
-    )
+    w = Window.orderBy(F.col("cnt").desc(), F.col("word").asc())
     ranked = top.select(F.row_number().over(w).alias("rank"), F.col("cnt"))
     qx = F.floor(F.log2(F.col("rank")) * 1000000.0 + 0.5).cast("long")
     qy = F.floor(F.log2(F.col("cnt")) * 1000000.0 + 0.5).cast("long")

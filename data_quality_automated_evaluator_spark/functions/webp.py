@@ -1,8 +1,7 @@
 """Pure-stdlib lossless WebP (VP8L) codec: real encode/decode.
 
 Closes the last chart-export parity gap with the reference
-(``plot.py:67-71`` offers png/jpeg/webp/svg/pdf through plotly/kaleido)
-and adds WebP to the multimodal image seam next to the PNG/JPEG codecs.
+(``plot.py:67-71`` offers png/jpeg/webp/svg/pdf through plotly/kaleido).
 
 The encoder emits a spec-conformant VP8L stream: no transforms, no
 color cache, one prefix-code group, literal pixels plus LZ77

@@ -1,2 +1,2 @@
 """Dataflow operators: preprocess (stage-1), evaluate (stage-2), dedup,
-similarity search, multimodal plumbing."""
+similarity search."""

@@ -498,15 +498,14 @@ def unimax_mixture(
       allocate the suffix share computed AT that pivot row.
 
     Emits (group, n_tokens, alloc_tokens, epochs, weight), 6dp.  The
-    windows run over the #groups-sized counts frame — metadata, not
-    data — partitioned on a constant key so the plan stays free of
-    single-partition WindowExec warnings."""
+    windows run unpartitioned, in one task on purpose, over the
+    #groups-sized counts frame — metadata, not data (Spark still logs
+    its no-partition WindowExec warning for them)."""
     counts = df.groupBy(F.col(group_col).alias("g")).agg(
         F.sum(F.col(tokens_col)).cast("bigint").alias("n")
     )
-    one = F.lit(0)
-    w = Window.partitionBy(one).orderBy("n", "g")
-    wall = Window.partitionBy(one)
+    w = Window.orderBy("n", "g")
+    wall = Window.partitionBy()
     ranked = (
         counts.withColumn("i", F.row_number().over(w))
         .withColumn("L", F.count(F.lit(1)).over(wall))

@@ -20,11 +20,12 @@ Spark-first shape (holds at 10^12 rows / 10^9 keys):
    least k(k+1)/2), so even at 10^12 rows the histogram is ≤ ~1.4M rows.
 3. All rank-weighted sums run over the *histogram*: keys sharing a count
    are fungible in every statistic here, so the classic sorted-index
-   Gini ``(2·Σ i·x_i − (n+1)·Σx) / (n·Σx)`` collapses to one constant-
-   partition window over the tiny frame — a run of ``m`` keys with count
+   Gini ``(2·Σ i·x_i − (n+1)·Σx) / (n·Σx)`` collapses to one unpartitioned
+   window over the tiny frame — a run of ``m`` keys with count
    ``c`` starting at rank ``r0`` contributes ``c·(m·r0 + m(m−1)/2)``
-   exactly, in BIGINT.  (Constant ``partitionBy(lit(0))`` keeps the plan
-   free of the no-partition WindowExec warning.)
+   exactly, in BIGINT.  (The window is unpartitioned — one task on
+   purpose over the bounded histogram — so Spark logs its no-partition
+   WindowExec warning.)
 
 Every sum is exact integer arithmetic until the final divisions, so the
 one-row result is shuffle-order-proof and the driver value-checks it
@@ -44,8 +45,8 @@ def key_skew_audit(df: DataFrame, key_col: str) -> DataFrame:
     counts = df.groupBy(key_col).agg(F.count(F.lit(1)).alias("__c"))
     hist = counts.groupBy("__c").agg(F.count(F.lit(1)).alias("__m"))
 
-    w_asc = Window.partitionBy(F.lit(0)).orderBy("__c")
-    w_desc = Window.partitionBy(F.lit(0)).orderBy(F.col("__c").desc())
+    w_asc = Window.orderBy("__c")
+    w_desc = Window.orderBy(F.col("__c").desc())
     before = Window.unboundedPreceding, -1
     ranked = (
         hist.withColumn(
@@ -59,7 +60,7 @@ def key_skew_audit(df: DataFrame, key_col: str) -> DataFrame:
             ),
         )
         .withColumn(
-            "__n_keys", F.sum("__m").over(Window.partitionBy(F.lit(0)))
+            "__n_keys", F.sum("__m").over(Window.partitionBy())
         )
     )
 

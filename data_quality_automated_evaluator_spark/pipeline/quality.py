@@ -36,7 +36,6 @@ scrub_udf = F.pandas_udf(scrub_batch, returnType=T.StringType())
 def run_quality_pipeline(
     df: DataFrame,
     thresholds: Thresholds = Thresholds(),
-    keep_text: bool = False,
 ) -> DataFrame:
     """Full per-turn result frame: input columns + features + rule flags +
     ``keep`` + ``text_scrubbed``. Lazy — callers pick an action/sink.
@@ -46,13 +45,9 @@ def run_quality_pipeline(
     is projected away before the conversation window shuffle (halves the
     shuffle payload — scrubbed text replaces it), and everything after
     the Exchange is pure JVM (window functions + boolean rules).
-    Set ``keep_text=True`` to retain the raw text column (costs shuffle
-    bytes; only for debugging/diff tooling).
     """
     df = with_turn_features(df)
-    df = df.withColumn("text_scrubbed", scrub_udf(F.col("text")))
-    if not keep_text:
-        df = df.drop("text")
+    df = df.withColumn("text_scrubbed", scrub_udf(F.col("text"))).drop("text")
     df = with_conversation_features(df)
     return with_rules(df, thresholds)
 
@@ -60,11 +55,6 @@ def run_quality_pipeline(
 def labels_frame(result: DataFrame) -> DataFrame:
     """(conv_id, turn_idx, keep, rule flags) — the F1-checked artifact."""
     return result.select("conv_id", "turn_idx", "keep", *RULE_NAMES)
-
-
-def scrubbed_frame(result: DataFrame) -> DataFrame:
-    """(conv_id, turn_idx, text_scrubbed) — the byte-exact artifact."""
-    return result.select("conv_id", "turn_idx", "text_scrubbed")
 
 
 def interval_rule_stats(
@@ -92,12 +82,17 @@ def interval_rule_facts(
     of rates, so stats over an ever-growing table stay incremental — each
     batch aggregates only its own partitions, the sink's driver writes them
     one file per date, and :func:`combine_rule_partials` folds them into
-    the rates :func:`interval_rule_stats` would compute over the full table
-    (rule flags are non-null, so sum/count == avg exactly). ``level`` 1
+    the rates :func:`interval_rule_stats` would compute over the full table.
+    The two differ where a flag is NULL: conversation features are computed
+    per batch, so a conversation whose turn 0 fell in an earlier batch gets
+    NULL conversation flags (and a NULL ``keep``). ``sum / n_turns`` then
+    counts the NULL as a failure, while ``avg`` skips it. ``level`` 1
     rows total one ``part_date`` and carry its exact distinct-conversation
     count ``n_convs`` (a conversation spanning several buckets counts
-    once, so per-bucket counts do not add up to it); ``level`` 3 is the
-    grand total. Metadata-sized: #dates × #buckets rows.
+    once, so per-bucket counts do not add up to it) and its per-rule
+    failure counts ``<rule>_fail`` (``sum(NOT flag)``, so a NULL flag is
+    no failure); ``level`` 3 is the grand total. Metadata-sized:
+    #dates × #buckets rows.
 
     ``result`` must carry ``part_date`` (the sink's partition column).
     """
@@ -118,6 +113,7 @@ def interval_rule_facts(
         aggs.append(F.sum(F.col(r).cast("long")).alias(f"{r}_sum"))
     return result.rollup("part_date", bucket).agg(
         *aggs,
+        *(F.sum((~F.col(r)).cast("long")).alias(f"{r}_fail") for r in RULE_NAMES),
         F.countDistinct("conv_id").alias("n_convs"),
         F.grouping_id().alias("level"),
     )

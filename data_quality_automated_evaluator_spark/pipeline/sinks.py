@@ -36,7 +36,6 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .observability import attach_quality_observation
 from .quality import (
     RULE_STATS_SCHEMA,
     combine_rule_partials,
@@ -234,7 +233,8 @@ class QualitySink:
         (``interval_rule_facts`` level-1 rows)."""
         facts = interval_rule_facts(written, time_interval).toArrow()
         level = facts.column("level")
-        partials = facts.filter(pc.equal(level, 0)).drop_columns(["n_convs", "level"])
+        partials = facts.filter(pc.equal(level, 0)).drop_columns(
+            ["n_convs", "level", *(f"{r}_fail" for r in RULE_NAMES)])
         dates = partials.column("part_date")
         for d in sorted(pc.unique(dates).to_pylist()):
             _replace_dir(
@@ -428,26 +428,22 @@ class QualitySink:
         # dynamic partition overwrite keeps partition re-runs idempotent.
         # repartition by part_date so each date directory gets one writer
         # (no small-files explosion: tasks × dates files otherwise).
-        # Drop-reason telemetry rides this same write action as observed
-        # metrics — per-rule failure counts at 100 TB without a second
-        # pass over the input (pipeline/observability.py).
-        out, run_obs = attach_quality_observation(out, name=f"sink_run_{uuid.uuid4().hex[:8]}")
         written = self._write_turns(out.repartition("part_date"))
-        observed = run_obs.get
 
         # every per-date fact of THIS batch comes from one aggregation over
         # the WRITTEN output (never the raw input), collected once — the
         # only Spark action after the write: the combinable partials
         # (counts + flag sums per (part_date, bucket)) and each date's
-        # totals with its exact distinct-conversation count. The partials
-        # are committed date by date, so a partition re-run is idempotent;
+        # totals with its exact distinct-conversation count and per-rule
+        # failure counts. The partials are committed date by date, so a
+        # partition re-run is idempotent;
         # the stats artifact is then folded from the partials tree alone —
         # O(#partitions × #buckets) rows, never a re-read of the
         # accumulated table — and converges to exactly what an
         # uninterrupted run would produce.
         totals = self._write_partials(
             written.filter(F.col("part_date").isin(pending)), time_interval
-        )
+        ).to_pylist()
         # partials are keyed by bucket granularity: a run with a NEW
         # time_interval starts a fresh partials tree, and partitions
         # completed under a different interval are backfilled ONCE (a scan
@@ -464,7 +460,7 @@ class QualitySink:
                 "n_convs": r["n_convs"],
                 "scrubbed_chars": r["scrubbed_chars_sum"] or 0,
             }
-            for r in totals.to_pylist()
+            for r in totals
         }
         wall = time.perf_counter() - t0
         # EVERY selected pending date is ledgered — empty ones with zeros —
@@ -496,13 +492,11 @@ class QualitySink:
             "n_keep": sum(e["n_keep"] for e in batch_entries),
             "n_null_ts": n_null_ts,
             "wall_sec": round(wall, 3),
-            # drop-reason attribution for THIS batch, observed on the
-            # write action itself (not derivable from the ledger, which
-            # folds per-date totals only)
-            # sum() observes NULL on an all-empty batch (late-date recheck
-            # runs where every pending date turned out empty) — report 0
+            # drop-reason attribution for THIS batch, from the facts'
+            # per-date totals (not derivable from the ledger, which keeps
+            # counts only); a date whose flags are all NULL sums to NULL
             "rule_failures": {
-                r: int(observed.get(f"fail_{r}") or 0) for r in RULE_NAMES
+                r: sum(t[f"{r}_fail"] or 0 for t in totals) for r in RULE_NAMES
             },
         }
 
@@ -671,13 +665,3 @@ class IcebergQualitySink(QualitySink):
                 continue  # table not created yet (no batch ran)
             out[name] = {**expired, "orphans_removed": swept["orphans_removed"]}
         return out
-
-
-def write_iceberg(result: DataFrame, table: str) -> None:
-    """Iceberg sink (requires the iceberg-spark runtime on the cluster):
-    partitioned by days(ts), append-or-replace semantics handled by the
-    caller via ``overwritePartitions``. Kept behind this function so the
-    sandbox (no Iceberg jar) uses the parquet layout above instead."""
-    from pyspark.sql.functions import partitioning
-
-    result.writeTo(table).partitionedBy(partitioning.days(F.col("ts"))).createOrReplace()

@@ -4,6 +4,7 @@ exact results (SURVEY §7 step 5)."""
 
 from __future__ import annotations
 
+import duckdb
 import numpy as np
 import pandas as pd
 import pytest
@@ -11,7 +12,7 @@ import pytest
 from data_quality_automated_evaluator_spark.pipeline.features import (
     salted_conversation_stats,
 )
-from data_quality_automated_evaluator_spark.pipeline.oracle import oracle_quality
+from data_quality_automated_evaluator_spark.pipeline.oracle_sql import keep_flags_oracle_sql
 from data_quality_automated_evaluator_spark.pipeline.quality import (
     labels_frame,
     run_quality_pipeline,
@@ -62,7 +63,7 @@ def test_salted_stats_exact_under_skew(spark, skewed):
     assert (got["n_roles"].sort_index() == exp_roles.sort_index()).all()
 
 
-def test_pipeline_labels_exact_under_skew(spark, skewed):
+def test_pipeline_labels_exact_under_skew(spark, skewed, tmp_path):
     pdf, df = skewed
     got = (
         labels_frame(run_quality_pipeline(df))
@@ -70,7 +71,9 @@ def test_pipeline_labels_exact_under_skew(spark, skewed):
         .sort_values(["conv_id", "turn_idx"])
         .reset_index(drop=True)
     )
-    exp = oracle_quality(pdf).sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
+    path = str(tmp_path / "skewed.parquet")
+    pdf.to_parquet(path, index=False)
+    exp = duckdb.sql(keep_flags_oracle_sql(path)).df()
     assert len(got) == len(exp) == len(pdf)
     assert (got["conv_id"].values == exp["conv_id"].values).all()
     agree = (got["keep"].values == exp["keep"].values).mean()

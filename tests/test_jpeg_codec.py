@@ -1,7 +1,6 @@
 """Baseline JPEG codec (functions/jpeg.py): encode→decode round trips
 across qualities × subsampling × restart intervals, grayscale, resize,
-pixel features through the Spark path, and honest rejection of
-unsupported/progressive/truncated input."""
+and honest rejection of unsupported/progressive/truncated input."""
 
 from __future__ import annotations
 
@@ -93,47 +92,3 @@ def test_rejections():
     # truncated entropy stream must raise, not return garbage silently
     with pytest.raises(Exception):
         decode_jpeg(encode_jpeg(img, 90)[:40])
-
-
-def test_pixel_features_real_for_jpeg():
-    """extract_features' decode path yields pixel-derived (not
-    digest-fake) features for JPEG content: a dark and a bright image
-    must order by luminance mean."""
-    from data_quality_automated_evaluator_spark.operators.multimodal import (
-        _png_pixel_features,
-    )
-
-    dark = encode_jpeg(np.full((16, 16, 3), 20, np.uint8), 90)
-    bright = encode_jpeg(np.full((16, 16, 3), 235, np.uint8), 90)
-    fd = _png_pixel_features(dark)
-    fb = _png_pixel_features(bright)
-    assert fd is not None and fb is not None
-    assert fd[0] < 0.2 < 0.8 < fb[0]  # channel-0 means reflect pixels
-
-
-def test_avi_mjpeg_round_trip():
-    """MJPEG/AVI mux → demux returns every frame byte-identical, and the
-    avih header carries the declared geometry."""
-    from data_quality_automated_evaluator_spark.functions.avi import (
-        AviFormatError,
-        avi_meta,
-        demux_mjpeg_frames,
-        mux_mjpeg_avi,
-    )
-
-    frames = [encode_jpeg(_gradient(24, 16, seed=k), 88) for k in range(5)]
-    avi = mux_mjpeg_avi(frames, 24, 16, fps=5)
-    assert avi[:4] == b"RIFF" and avi[8:12] == b"AVI "
-    meta = avi_meta(avi)
-    assert meta == {"n_frames": 5, "width": 24, "height": 16, "fps": 5}
-    got = list(demux_mjpeg_frames(avi))
-    assert [i for i, _ in got] == [0, 1, 2, 3, 4]
-    assert all(g == f for (_, g), f in zip(got, frames))  # byte-identical
-    # every demuxed frame decodes
-    for _, jpg in got:
-        assert decode_jpeg(jpg).shape == (16, 24, 3)
-
-    with pytest.raises(AviFormatError):
-        avi_meta(b"RIFF\x00\x00\x00\x00WAVE")  # a RIFF, not an AVI
-    with pytest.raises(AviFormatError):
-        mux_mjpeg_avi([], 8, 8)

@@ -1,9 +1,7 @@
-"""Pure-stdlib PNG codec (functions/png.py) + the real resize path.
+"""Pure-stdlib PNG codec (functions/png.py), the chart exporter's encoder.
 
 Round-trips pin the decoder against our encoder across every scanline
-filter type and color layout; the Spark test drives resize_image
-end-to-end with real PNG bytes AND malformed inputs (which must yield
-error rows, never task failures).
+filter type and color layout; chart export is driven end-to-end.
 """
 
 from __future__ import annotations
@@ -49,46 +47,6 @@ def test_decode_rejects_garbage():
         decode_png(b"not a png at all")
     with pytest.raises(PngFormatError):
         decode_png(b"\x89PNG\r\n\x1a\n" + b"\x00" * 8)  # header only
-
-
-def test_spark_resize_image_real_and_dirty(spark):
-    from data_quality_automated_evaluator_spark.operators.multimodal import (
-        resize_image,
-    )
-
-    good = encode_png(_img(24, 16, 3, seed=5))
-    rows = [
-        (1, bytearray(good)),
-        (2, bytearray(b"\xff\xd8garbage-jpeg")),  # unsupported format
-        (3, None),
-    ]
-    df = spark.createDataFrame(rows, "media_id long, content binary")
-    out = {r["media_id"]: r for r in resize_image(df, 8, 6).collect()}
-    assert out[1]["error"] is None
-    resized = decode_png(bytes(out[1]["content"]))
-    assert resized.shape == (6, 8, 3)
-    assert out[2]["content"] is None and out[2]["error"] is not None
-    assert out[3]["content"] is None and out[3]["error"] == "null content"
-
-
-def test_extract_features_real_for_png(spark):
-    import numpy as np
-
-    from data_quality_automated_evaluator_spark.operators.multimodal import (
-        extract_features,
-    )
-
-    img = _img(10, 10, 3, seed=9)
-    rows = [(1, bytearray(encode_png(img))), (2, bytearray(b"not-an-image"))]
-    df = spark.createDataFrame(rows, "media_id long, content binary")
-    out = {r["media_id"]: r["features"] for r in extract_features(df).collect()}
-    f = np.array(out[1])
-    # real pixel features: first 3 = channel means, bins 8..16 a histogram
-    exp_means = img.reshape(-1, 3).mean(axis=0) / 255.0
-    assert np.allclose(f[:3], exp_means, atol=1e-9)
-    assert abs(f[8:16].sum() - 1.0) < 1e-9
-    # non-PNG falls back to the digest fake (still deterministic, 16-dim)
-    assert len(out[2]) == 16 and not np.allclose(out[2][8:16], f[8:16])
 
 
 def test_render_png_chart_without_matplotlib(tmp_path):

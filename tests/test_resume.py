@@ -7,10 +7,14 @@ from __future__ import annotations
 
 import json
 import os
+from datetime import datetime
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
+from data_quality_automated_evaluator_spark.pipeline.quality import run_quality_pipeline
+from data_quality_automated_evaluator_spark.pipeline.rules import RULE_NAMES
 from data_quality_automated_evaluator_spark.pipeline.sinks import (
     IcebergQualitySink,
     QualitySink,
@@ -338,3 +342,71 @@ def test_udf_stage_is_one_wave(spark, sdf, tmp_path):
     sink = _PlanCapturingSink(str(tmp_path / "out_wide"))
     sink.run(spark.read.parquet(wide), batch_days=1)
     assert "RoundRobinPartitioning" not in sink.plan
+
+
+def test_sink_run_summary_reports_rule_failures(spark, tmp_path):
+    from data_quality_automated_evaluator_spark.pipeline.sinks import QualitySink
+
+    pdf = generate_transcripts(n_convs=80, seed=13)
+    sdf = spark.createDataFrame(pdf)
+    s = QualitySink(str(tmp_path / "sink")).run(sdf)
+
+    assert set(s["rule_failures"]) == set(RULE_NAMES)
+    truth = (
+        run_quality_pipeline(sdf)
+        .agg(*[F.sum((~F.col(r)).cast("long")).alias(r) for r in RULE_NAMES])
+        .collect()[0]
+        .asDict()
+    )
+    # the sink drops NULL-ts rows before the pipeline; the fixture has
+    # none, so the observed batch equals the full input
+    assert s["n_null_ts"] == 0
+    assert s["rule_failures"] == truth
+
+
+def test_rule_failures_per_batch_count_null_flags_as_no_failure(spark, sdf, tmp_path):
+    """Each resumed run's ``rule_failures`` is ``sum(NOT flag)`` over the
+    rows that run wrote. A conversation split by a batch boundary gets
+    NULL conversation flags in the later batch; a NULL flag is no
+    failure, so ``n_turns - sum(flag)`` would overcount. A batch of only
+    empty dates reports all zeros."""
+    dates = sorted(str(r[0]) for r in sdf.select(F.to_date("ts")).distinct().collect())
+    hole = dates[1]
+    # turn 0 lands in the first batch (dates[0]), the rest after the hole
+    split = spark.createDataFrame(
+        [("c_split", 0, "user", "hello, how do I read the quality report?", None,
+          datetime.fromisoformat(f"{dates[0]} 23:59:00")),
+         ("c_split", 1, "assistant", "open the stats table and look at each rule.", None,
+          datetime.fromisoformat(f"{dates[2]} 00:00:30")),
+         ("c_split", 2, "user", "thanks, that is the part of the report I needed.", None,
+          datetime.fromisoformat(f"{dates[2]} 00:02:00"))],
+        sdf.schema,
+    )
+    src = sdf.filter(F.to_date("ts").between(dates[0], dates[9]) & (F.to_date("ts") != hole))
+    src = src.unionByName(split)
+
+    sink = QualitySink(str(tmp_path / "sink"))
+    runs, done = [], set()
+    for batch_days in (1, 1, 20, 20):
+        s = sink.run(src, batch_days=batch_days)
+        if not s["processed_partitions"]:
+            break
+        batch = sink.completed_partitions() - done
+        done |= batch
+        runs.append((s, batch))
+    assert done == sink.completed_partitions() and not s["processed_partitions"]
+
+    turns = sink.read_turns(spark).toPandas()
+    turns["part_date"] = turns["part_date"].astype(str)
+    assert turns[RULE_NAMES].isna().any().any(), "no batch-split conversation"
+    overcount = False
+    for s, batch in runs:
+        rows = turns[turns["part_date"].isin(batch)]
+        want = {r: int((rows[r] == False).sum()) for r in RULE_NAMES}  # noqa: E712
+        assert s["rule_failures"] == want, sorted(batch)
+        overcount |= any(len(rows) - int((rows[r] == True).sum()) != want[r]  # noqa: E712
+                         for r in RULE_NAMES)
+    assert overcount, "no run where n_turns - sum(flag) differs from sum(NOT flag)"
+    empty, batch = runs[1]
+    assert batch == {hole} and empty["n_turns"] == 0
+    assert empty["rule_failures"] == dict.fromkeys(RULE_NAMES, 0)

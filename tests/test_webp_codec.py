@@ -1,10 +1,9 @@
 """Pure-stdlib lossless WebP / VP8L codec (functions/webp.py).
 
 Round-trips pin decoder-vs-encoder across the pixel layouts the
-rasterizer and the multimodal seam produce (noise = all literals,
-chart-like = LZ77 runs in both shapes, >4096-pixel runs = length-cap
-splits, alpha); chart export and the multimodal metadata / feature /
-pixel paths are driven end-to-end. The codec completes the reference's
+rasterizer produces (noise = all literals, chart-like = LZ77 runs in
+both shapes, >4096-pixel runs = length-cap splits, alpha); chart export
+is driven end-to-end. The codec completes the reference's
 plot export set (plot.py:67-71: png/jpeg/webp/svg/pdf).
 """
 
@@ -148,47 +147,3 @@ def test_render_webp_chart_without_matplotlib(tmp_path):
     assert (img < 250).any()
     grey_rows = ((img < 250).any(axis=(1, 2))).sum()
     assert grey_rows > 20
-
-
-def test_spark_resize_webp_real_and_dirty(spark):
-    from data_quality_automated_evaluator_spark.operators.multimodal import (
-        resize_image,
-    )
-
-    good = encode_webp(_img(24, 16, 3, seed=5))
-    lossy = b"RIFF" + struct.pack("<I", 12) + b"WEBP" + b"VP8 " + struct.pack("<I", 0)
-    df = spark.createDataFrame(
-        [(1, bytearray(good)), (2, bytearray(lossy))],
-        "media_id long, content binary",
-    )
-    out = {r["media_id"]: r for r in resize_image(df, 8, 6).collect()}
-    assert out[1]["error"] is None
-    resized = decode_webp(bytes(out[1]["content"]))
-    assert resized.shape == (6, 8, 3)
-    # unsupported lossy VP8 yields an error row, never a task failure
-    assert out[2]["content"] is None and out[2]["error"] is not None
-
-
-def test_multimodal_webp_meta_and_real_features(spark):
-    from data_quality_automated_evaluator_spark.operators.multimodal import (
-        _features_from_pixels,
-        extract_features,
-        image_metadata,
-    )
-
-    img = _img(12, 20, 3, seed=3)
-    wb = encode_webp(img)
-    df = spark.createDataFrame(
-        [(1, bytearray(wb)), (2, bytearray(b"RIFFxxxxWEBPjunk"))],
-        "media_id long, content binary",
-    )
-    meta = {r["media_id"]: r for r in image_metadata(df).collect()}
-    assert meta[1]["mime"] == "image/webp"
-    assert (meta[1]["width"], meta[1]["height"]) == (20, 12)
-    assert meta[2]["mime"] == "image/webp"
-    assert meta[2]["width"] is None
-
-    feats = {r["media_id"]: r["features"] for r in extract_features(df).collect()}
-    assert feats[1] == pytest.approx(_features_from_pixels(img))
-    # junk falls back to the digest fake, never fails the task
-    assert len(feats[2]) == len(feats[1])
