@@ -27,7 +27,7 @@ import struct
 
 import numpy as np
 
-__all__ = ["JpegFormatError", "decode_jpeg", "encode_jpeg", "resize_jpeg"]
+__all__ = ["JpegFormatError", "decode_jpeg", "encode_jpeg"]
 
 
 class JpegFormatError(ValueError):
@@ -611,15 +611,3 @@ def _encode_block(writer, zz, preds, ci, dc_t, ac_t) -> None:
     if last_nz < 63:
         code, length = ac_t[0x00]  # EOB
         writer.write(code, length)
-
-
-# ---------------------------------------------------------------------------
-# Resize (decode → nearest-neighbor resample → re-encode)
-# ---------------------------------------------------------------------------
-
-def resize_jpeg(data: bytes, width: int, height: int, quality: int = 85) -> bytes:
-    img = decode_jpeg(data)
-    h, w = img.shape[:2]
-    ys = (np.arange(height) * h // height).clip(0, h - 1)
-    xs = (np.arange(width) * w // width).clip(0, w - 1)
-    return encode_jpeg(img[ys][:, xs], quality=quality)

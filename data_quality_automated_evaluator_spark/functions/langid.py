@@ -6,10 +6,10 @@ counts of discriminative character n-grams / character classes. The
 batches); the DuckDB oracle re-expresses the same model spec in SQL
 (``pipeline/oracle_sql.LANGID_SQL_SCORES``).
 
-Two interchangeable counting backends:
+Two counting backends:
 
-- **numpy byte-domain** (default, :func:`langid_frame`): the batch is
-  joined into one NUL-separated UTF-8 buffer; every feature becomes
+- **numpy byte-domain** (:func:`langid_frame`, what the UDF runs): the
+  batch is joined into one NUL-separated UTF-8 buffer; every feature becomes
   shifted byte-equality masks (word boundaries via a 256-entry
   word-char table, accented classes via their UTF-8 lead/continuation
   bytes) accumulated per language and summed per string with
@@ -323,16 +323,5 @@ def langid_frame_regex(texts: pd.Series) -> pd.DataFrame:
 
 
 def langid_label(texts: pd.Series) -> pd.Series:
-    """Just the label column (the pandas-UDF hot path).
-
-    ``SPARK_GRAFT_LANGID_BACKEND=regex`` forces the reference backend —
-    an A/B lever for benchmarking; both backends are parity-tested equal.
-    """
-    import os
-
-    be = (
-        langid_frame_regex
-        if os.environ.get("SPARK_GRAFT_LANGID_BACKEND") == "regex"
-        else langid_frame
-    )
-    return be(texts)["lang"].astype(str)
+    """Just the label column (the pandas-UDF hot path)."""
+    return langid_frame(texts)["lang"].astype(str)

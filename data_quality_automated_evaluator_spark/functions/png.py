@@ -1,4 +1,4 @@
-"""Pure-stdlib PNG codec (zlib + numpy): real decode/resize/encode.
+"""Pure-stdlib PNG codec (zlib + numpy): real decode/encode.
 
 The chart exporter's matplotlib-free PNG path, with the decoder as the
 encoder's round-trip reference: PNG is fully decodable with nothing
@@ -149,16 +149,3 @@ def encode_png(img: np.ndarray, filter_type: int = 0) -> bytes:
     ihdr = struct.pack(">IIBBBBB", w, h, 8, _COLOR_FOR_CH[ch], 0, 0, 0)
     idat = zlib.compress(b"".join(lines), 6)
     return _SIG + chunk(b"IHDR", ihdr) + chunk(b"IDAT", idat) + chunk(b"IEND", b"")
-
-
-def resize_nearest(img: np.ndarray, width: int, height: int) -> np.ndarray:
-    """Nearest-neighbor resample of a (H, W, C) uint8 array."""
-    h, w = img.shape[:2]
-    rows = np.minimum((np.arange(height) * h) // height, h - 1)
-    cols = np.minimum((np.arange(width) * w) // width, w - 1)
-    return img[rows][:, cols]
-
-
-def resize_png(data: bytes, width: int, height: int) -> bytes:
-    """Decode → nearest-neighbor resize → re-encode."""
-    return encode_png(resize_nearest(decode_png(data), width, height))

@@ -554,22 +554,3 @@ def _plane_code_to_distance(w: int, code: int) -> int:
         return code - 120
     dx, dy = _DIST_MAP[code - 1]
     return max(1, dy * w + dx)
-
-
-def webp_meta(data: bytes) -> tuple[int, int] | None:
-    """(width, height) for VP8L / VP8X / VP8 WebP headers, else None."""
-    if len(data) < 16 or data[:4] != b"RIFF" or data[8:12] != b"WEBP":
-        return None
-    tag = data[12:16]
-    if tag == b"VP8L" and len(data) >= 25 and data[20] == 0x2F:
-        bits = int.from_bytes(data[21:25], "little")
-        return (bits & 0x3FFF) + 1, ((bits >> 14) & 0x3FFF) + 1
-    if tag == b"VP8X" and len(data) >= 30:
-        wm1 = int.from_bytes(data[24:27], "little")
-        hm1 = int.from_bytes(data[27:30], "little")
-        return wm1 + 1, hm1 + 1
-    if tag == b"VP8 " and len(data) >= 30 and data[23:26] == b"\x9d\x01\x2a":
-        (wv,) = struct.unpack("<H", data[26:28])
-        (hv,) = struct.unpack("<H", data[28:30])
-        return wv & 0x3FFF, hv & 0x3FFF
-    return None

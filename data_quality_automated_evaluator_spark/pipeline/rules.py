@@ -1,8 +1,9 @@
 """Keep/drop rules: thresholds + the decision expression.
 
 Each rule is a named boolean; ``keep`` is their conjunction. The same
-thresholds object drives both the Spark expressions and the pandas
-oracle, so a threshold change can never split the two implementations.
+thresholds object drives both the Spark expressions and the DuckDB
+oracle (``oracle_sql.keep_flags_oracle_sql``), so a threshold change can
+never split the two implementations.
 
 Rule inventory (per BASELINE north_star: length / repetition /
 symbol-ratio / role-consistency per turn and per conversation, plus

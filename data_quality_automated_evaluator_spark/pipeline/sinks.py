@@ -22,6 +22,7 @@ them (partials, stats, ledger).
 
 from __future__ import annotations
 
+import datetime as _dt
 import json
 import logging
 import os
@@ -74,79 +75,22 @@ def _replace_dir(table: pa.Table, path: str) -> None:
     os.rename(staging, path)
 
 
-def _footer_minmax_one(path: str, col: str):
-    """(min, max) of ``col`` from one parquet file's footer statistics.
-    Returns None when stats are absent for any row group (must widen to a
-    scan — a partial answer would silently drop partitions)."""
-    import pyarrow.parquet as pq
-
+def _footer_row_groups(path: str, col: str) -> list[tuple] | None:
+    """Per-row-group ``(min, max, null_count)`` of ``col`` from one parquet
+    file's footer, None for a statistic the row group lacks; None for the
+    whole file when it has no such column."""
     local = path[7:] if path.startswith("file://") else path
     md = pq.ParquetFile(local).metadata
     names = {md.schema.column(i).name: i for i in range(md.num_columns)}
     if col not in names:
         return None
-    ci = names[col]
-    lo = hi = None
-    for rg in range(md.num_row_groups):
-        st = md.row_group(rg).column(ci).statistics
-        if st is None or not st.has_min_max:
-            return None
-        lo = st.min if lo is None else min(lo, st.min)
-        hi = st.max if hi is None else max(hi, st.max)
-    return (lo, hi)
-
-
-def _parquet_footer_ts_bounds(df: DataFrame, col: str):
-    """Global (min, max) of ``col`` from parquet footers, or None when the
-    input is not footer-readable (non-parquet / no files / missing stats)."""
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files or not all(f.split("?")[0].endswith(".parquet") or "/part-" in f
-                            for f in files):
-        return None
-    try:
-        if len(files) <= _FOOTER_DRIVER_MAX_FILES:
-            results = [_footer_minmax_one(f, col) for f in files]
-        else:
-            sc = df.sparkSession.sparkContext
-            n_slices = max(1, len(files) // 256)
-            results = (
-                sc.parallelize(files, n_slices)
-                .map(lambda f: _footer_minmax_one(f, col))
-                .collect()
-            )
-    except Exception:
-        return None
-    if any(r is None for r in results) or not results:
-        return None
-    lo = min(r[0] for r in results)
-    hi = max(r[1] for r in results)
-    import datetime as _dt
-
-    if not isinstance(lo, _dt.datetime):
-        return None
-    return (lo, hi)
-
-
-def _footer_null_count_one(path: str, col: str):
-    """Total null count of ``col`` from one file's footer, or None when
-    any row group lacks the statistic."""
-    import pyarrow.parquet as pq
-
-    local = path[7:] if path.startswith("file://") else path
-    md = pq.ParquetFile(local).metadata
-    names = {md.schema.column(i).name: i for i in range(md.num_columns)}
-    if col not in names:
-        return None
-    total = 0
+    out = []
     for rg in range(md.num_row_groups):
         st = md.row_group(rg).column(names[col]).statistics
-        if st is None or st.null_count is None:
-            return None
-        total += st.null_count
-    return total
+        mm = st is not None and st.has_min_max
+        out.append((st.min if mm else None, st.max if mm else None,
+                    None if st is None else st.null_count))
+    return out
 
 
 def _is_bare_scan(df: DataFrame) -> bool:
@@ -162,33 +106,72 @@ def _is_bare_scan(df: DataFrame) -> bool:
                     "DataSourceV2ScanRelation")
 
 
-def _parquet_footer_null_count(df: DataFrame, col: str):
-    """Global null count of ``col`` from parquet footers (zero data pages),
-    or None when the input is not footer-readable or not a bare scan."""
-    if not _is_bare_scan(df):
-        return None
+def _parquet_footer_ts(df: DataFrame, col: str) -> tuple:
+    """``(bounds, null_count)`` of ``col`` from parquet footers, each input
+    file's footer opened once (zero data pages). ``bounds`` is the global
+    (min, max) timestamp for any parquet-backed input; ``null_count`` only
+    for a bare scan. Either is None when the footers cannot answer it
+    (non-parquet input, no files, a row group without the statistic) —
+    a partial answer would silently drop partitions or rows. Footer reads
+    go driver-side up to ``_FOOTER_DRIVER_MAX_FILES`` files and are
+    distributed over an RDD of file names above that."""
     try:
         files = df.inputFiles()
     except Exception:
-        return None
+        return None, None
     if not files or not all(f.split("?")[0].endswith(".parquet") or "/part-" in f
                             for f in files):
-        return None
+        return None, None
     try:
         if len(files) <= _FOOTER_DRIVER_MAX_FILES:
-            results = [_footer_null_count_one(f, col) for f in files]
+            per_file = [_footer_row_groups(f, col) for f in files]
         else:
-            sc = df.sparkSession.sparkContext
-            results = (
-                sc.parallelize(files, max(1, len(files) // 256))
-                .map(lambda f: _footer_null_count_one(f, col))
+            per_file = (
+                df.sparkSession.sparkContext
+                .parallelize(files, max(1, len(files) // 256))
+                .map(lambda f: _footer_row_groups(f, col))
                 .collect()
             )
     except Exception:
-        return None
-    if any(r is None for r in results) or not results:
-        return None
-    return int(sum(results))
+        return None, None
+    if any(r is None for r in per_file):
+        return None, None
+    rgs = [rg for r in per_file for rg in r]
+    bounds = None
+    if rgs and all(lo is not None for lo, _, _ in rgs):
+        lo = min(rg[0] for rg in rgs)
+        if isinstance(lo, _dt.datetime):
+            bounds = (lo, max(rg[1] for rg in rgs))
+    null_count = None
+    if _is_bare_scan(df) and all(n is not None for _, _, n in rgs):
+        null_count = int(sum(n for _, _, n in rgs))
+    return bounds, null_count
+
+
+def _candidate_dates(df: DataFrame, bounds: tuple | None) -> list[str]:
+    """The dates of :meth:`QualitySink.discover_partitions`, given the
+    footer ``bounds`` of ``ts`` (None: aggregate them in Spark)."""
+    if bounds is None:
+        row = df.agg(
+            F.min(F.to_date("ts")).alias("lo"), F.max(F.to_date("ts")).alias("hi")
+        ).first()
+        if row is None or row["lo"] is None:
+            return []
+        lo, hi = row["lo"], row["hi"]
+    else:
+        # footer stats are tz-aware UTC — consistent with session UTC
+        lo, hi = bounds[0].date(), bounds[1].date()
+    n_dates = (hi - lo).days + 1
+    if n_dates > _MAX_DISCOVERY_DATES:
+        return [
+            str(r[0])
+            for r in df.where(F.col("ts").isNotNull())
+            .select(F.to_date("ts").alias("d"))
+            .distinct()
+            .orderBy("d")
+            .collect()
+        ]
+    return [str(lo + _dt.timedelta(days=i)) for i in range(n_dates)]
 
 
 class QualitySink:
@@ -299,10 +282,12 @@ class QualitySink:
         2. **Fallback** — ``min(ts)/max(ts)`` aggregation: a single-column
            pruned scan with map-side partial aggregation and no shuffle.
 
-        The contiguous [min_date, max_date] range is the candidate set; a
-        date inside the range with no rows is processed as empty but NOT
-        ledgered, so late-arriving data for it is still picked up by a
-        later run. If the range spans more than ``_MAX_DISCOVERY_DATES``
+        The contiguous [min_date, max_date] range is the candidate set. A
+        date inside the range with no rows is processed as empty and
+        ledgered with zero counts; :meth:`run` re-checks the most recent
+        ``_MAX_RECHECK_DATES`` zero-ledgered dates for rows on every run,
+        so late-arriving data for them is still picked up. If the range
+        spans more than ``_MAX_DISCOVERY_DATES``
         (one corrupt epoch-0 or far-future timestamp would otherwise
         explode the candidate set), discovery falls back to the exact
         distinct-date scan — correctness over cheapness for dirty input.
@@ -312,30 +297,7 @@ class QualitySink:
         collected naive timestamp, which PySpark renders in the driver
         OS timezone and can shift boundary partitions on non-UTC hosts.
         """
-        import datetime as _dt
-
-        bounds = _parquet_footer_ts_bounds(df, "ts")
-        if bounds is None:
-            row = df.agg(
-                F.min(F.to_date("ts")).alias("lo"), F.max(F.to_date("ts")).alias("hi")
-            ).first()
-            if row is None or row["lo"] is None:
-                return []
-            lo, hi = row["lo"], row["hi"]
-        else:
-            # footer stats are tz-aware UTC — consistent with session UTC
-            lo, hi = bounds[0].date(), bounds[1].date()
-        n_dates = (hi - lo).days + 1
-        if n_dates > _MAX_DISCOVERY_DATES:
-            return [
-                str(r[0])
-                for r in df.where(F.col("ts").isNotNull())
-                .select(F.to_date("ts").alias("d"))
-                .distinct()
-                .orderBy("d")
-                .collect()
-            ]
-        return [str(lo + _dt.timedelta(days=i)) for i in range(n_dates)]
+        return _candidate_dates(df, _parquet_footer_ts(df, "ts")[0])
 
     # -- main entry ----------------------------------------------------------
     def run(
@@ -351,13 +313,13 @@ class QualitySink:
         (for incremental/checkpoint-test runs); None = all pending.
         """
         spark = df.sparkSession
-        all_parts = self.discover_partitions(df)
+        bounds, n_null_ts = _parquet_footer_ts(df, "ts")
+        all_parts = _candidate_dates(df, bounds)
         # rows without an event time have no partition and would silently
         # vanish from the output — surface the drop. For a bare parquet
         # scan (the 10^12-row production shape) footer null_count answers
         # with zero data I/O; transformed or non-parquet inputs pay one
         # ts-pruned count scan so the summary is always a real number.
-        n_null_ts = _parquet_footer_null_count(df, "ts")
         if n_null_ts is None:
             n_null_ts = df.filter(F.col("ts").isNull()).count()
         if n_null_ts:
@@ -380,8 +342,6 @@ class QualitySink:
         # OR predicate and a scan job on every no-op resume forever).
         zero_dates = sorted(done - nonzero_done)[-_MAX_RECHECK_DATES:]
         if zero_dates:
-            import datetime as _dt
-
             cond = None
             for d in zero_dates:
                 d0 = _dt.date.fromisoformat(d)
@@ -428,7 +388,7 @@ class QualitySink:
         # dynamic partition overwrite keeps partition re-runs idempotent.
         # repartition by part_date so each date directory gets one writer
         # (no small-files explosion: tasks × dates files otherwise).
-        written = self._write_turns(out.repartition("part_date"))
+        written = self._write_turns(out.repartition("part_date"), pending)
 
         # every per-date fact of THIS batch comes from one aggregation over
         # the WRITTEN output (never the raw input), collected once — the
@@ -441,9 +401,7 @@ class QualitySink:
         # O(#partitions × #buckets) rows, never a re-read of the
         # accumulated table — and converges to exactly what an
         # uninterrupted run would produce.
-        totals = self._write_partials(
-            written.filter(F.col("part_date").isin(pending)), time_interval
-        ).to_pylist()
+        totals = self._write_partials(written, time_interval).to_pylist()
         # partials are keyed by bucket granularity: a run with a NEW
         # time_interval starts a fresh partials tree, and partitions
         # completed under a different interval are backfilled ONCE (a scan
@@ -500,15 +458,17 @@ class QualitySink:
             },
         }
 
-    def _write_turns(self, out: DataFrame) -> DataFrame:
+    def _write_turns(self, out: DataFrame, pending: list[str]) -> DataFrame:
         """Commit one batch of partitions (dynamic overwrite: idempotent
-        re-runs); return it read back with ``out``'s schema (no inference)."""
+        re-runs); return the ``pending`` dates read back with ``out``'s
+        schema (no inference)."""
         spark = out.sparkSession
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         out.write.mode("overwrite").partitionBy("part_date").parquet(
             self.turns_dir
         )
-        return spark.read.schema(out.schema).parquet(self.turns_dir)
+        return (spark.read.schema(out.schema).parquet(self.turns_dir)
+                .filter(F.col("part_date").isin(pending)))
 
     def _write_stats(self, spark: SparkSession, stats: pd.DataFrame) -> None:
         """Publish the combined interval-stats artifact, one file swapped in
@@ -550,19 +510,28 @@ class IcebergQualitySink(QualitySink):
     10^12-row fact table.
 
     Scale note: ``read_iceberg`` plans one scan per live partition value
-    and unions them — fine for the per-batch stats re-read here (bounded
-    by the batch's date count); a whole-table analytical read at
+    and unions them. The per-batch read-back in ``_write_turns`` prunes to
+    the batch's dates in the manifests, so its plan grows with the batch,
+    not with the table's history; a whole-table analytical read
+    (``read_turns``) still plans one scan per committed date, and at
     production scale goes through the runtime jar's single scan node.
     """
 
-    def _write_turns(self, out: DataFrame) -> DataFrame:
+    def _write_turns(self, out: DataFrame, pending: list[str]) -> DataFrame:
+        """Commit one batch as a snapshot; read back only the ``pending``
+        partitions (manifest values are epoch days), so the read plans one
+        scan per batch date whatever the table's history."""
+        from ..sources.iceberg_lite import read_iceberg as _ri
         from ..sources.iceberg_lite import write_iceberg as _wi
 
         self._last_turns_snapshot = _wi(
             out, self.turns_dir, partition_by=["part_date"],
             mode="overwrite_partitions",
         )
-        return self.read_turns(out.sparkSession)
+        epoch = _dt.date(1970, 1, 1)
+        days = {(_dt.date.fromisoformat(d) - epoch).days for d in pending}
+        return _ri(out.sparkSession, self.turns_dir,
+                   partition_filter={"part_date": lambda v: v in days})
 
     def read_turns(self, spark: SparkSession) -> DataFrame:
         from ..sources.iceberg_lite import read_iceberg as _ri

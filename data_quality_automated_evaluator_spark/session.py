@@ -58,17 +58,14 @@ def get_spark(
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # pure-Python sweeps favor 2-4k rows/batch (cache residency), but
         # in-Spark A/B shows Arrow IPC overhead cancels the gain — 10k is
-        # equal within measurement noise; knob kept for cluster tuning
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("SPARK_GRAFT_ARROW_BATCH", "10000"),
-        )
+        # equal within measurement noise
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # UDF-heavy text workloads want smaller input splits than the 128m
         # default so scan+score tasks are seconds, not minutes, and all
         # cores engage even on modest inputs
         .config("spark.sql.files.maxPartitionBytes", "33554432")
         .config("spark.ui.enabled", "false")
-        # keep stdout clean: the bench contract is ONE parseable JSON
+        # keep stdout clean: perfbench's result is ONE parseable JSON
         # line on stdout; progress bars must never interleave with it
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))

@@ -6,6 +6,7 @@ re-runs via dynamic partition overwrite."""
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 
 import pandas as pd
@@ -44,8 +45,6 @@ def test_identity_date_partition_roundtrip(spark, tmp_path):
     """Identity partitioning on a DATE column: hive ISO directory names
     coerce to the spec's days-from-epoch ints in the manifests, and the
     reader restores them as typed date literals (not NULLs)."""
-    import datetime as dt
-
     loc = str(tmp_path / "dated")
     df = spark.createDataFrame(
         [(i, dt.date(2024, 1, 1 + i % 3), f"r{i}") for i in range(12)],
@@ -243,3 +242,41 @@ def test_sink_maintain_expires_and_sweeps(spark, sdf, tmp_path):
     s = sink.run(sdf)
     assert s["processed_partitions"] == 0
     pd.testing.assert_frame_equal(before, _read_sorted(spark, sink))
+
+
+class _ReadBackSink(IcebergQualitySink):
+    """Keeps the frame ``_write_turns`` hands to the facts aggregation."""
+
+    def _write_turns(self, *args):
+        self.read_back = super()._write_turns(*args)
+        return self.read_back
+
+
+def _days(spark, first: int, n: int):
+    """One two-turn conversation on each of ``n`` dates from day ``first``."""
+    rows = [
+        (f"c{d:04d}", t, role, "Could you explain how tides work, please?",
+         None, dt.datetime(2025, 1, 1, 12, t) + dt.timedelta(days=d))
+        for d in range(first, first + n)
+        for t, role in enumerate(("user", "assistant"))
+    ]
+    return spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp")
+
+
+def test_daily_read_back_independent_of_history(spark, tmp_path):
+    """A one-day run reads back only the day it committed: the frame the
+    facts aggregate over plans as many parquet scans after 40 history
+    dates as after 5, not one per committed date."""
+    scans, rows = [], []
+    for history in (5, 40):
+        sink = _ReadBackSink(str(tmp_path / f"h{history}"))
+        sink.run(_days(spark, 0, history))
+        s = sink.run(_days(spark, history, 1))
+        assert s["processed_partitions"] == 1
+        plan = sink.read_back._jdf.queryExecution().analyzed()
+        scans.append(plan.collectLeaves().size())
+        rows.append(sink.read_back.count())
+    assert scans[0] == scans[1] == 1
+    assert rows == [2, 2]

@@ -1,5 +1,5 @@
 """Baseline JPEG codec (functions/jpeg.py): encode→decode round trips
-across qualities × subsampling × restart intervals, grayscale, resize,
+across qualities × subsampling × restart intervals, grayscale,
 and honest rejection of unsupported/progressive/truncated input."""
 
 from __future__ import annotations
@@ -11,7 +11,6 @@ from data_quality_automated_evaluator_spark.functions.jpeg import (
     JpegFormatError,
     decode_jpeg,
     encode_jpeg,
-    resize_jpeg,
 )
 
 
@@ -70,13 +69,6 @@ def test_restart_markers_present_and_equivalent():
     assert b"\xff\xdd" in rst and b"\xff\xdd" not in plain  # DRI written
     # byte-identical pixels: restarts change the container, not the math
     assert (decode_jpeg(rst) == decode_jpeg(plain)).all()
-
-
-def test_resize_jpeg():
-    img = _gradient(40, 24)
-    out = resize_jpeg(encode_jpeg(img, 90), 10, 6)
-    dec = decode_jpeg(out)
-    assert dec.shape == (6, 10, 3)
 
 
 def test_rejections():

@@ -5,9 +5,9 @@ executor cluster must produce exactly the rows local mode produces.
 Worker process each) with netty block-transfer shuffle and serialized
 task dispatch — the closest thing to a real N-executor cluster that
 runs in this sandbox, and the topology the north rule's "multi-executor
-cluster at N and 4N executors" criterion describes (bench.py measures
-the N→4N throughput pair on the same topology; this test pins the
-CORRECTNESS side: labels identical to single-JVM local mode).
+cluster at N and 4N executors" criterion describes (``scripts/scaling.py``
+measures the N→4N throughput pair, on CPU-pinned ``local[k]`` JVMs; this
+test pins the CORRECTNESS side: labels identical to single-JVM local mode).
 
 The cluster session runs in a fresh subprocess: two different masters
 cannot share one JVM/gateway, and a fresh interpreter also proves the

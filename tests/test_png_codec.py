@@ -13,8 +13,6 @@ from data_quality_automated_evaluator_spark.functions.png import (
     PngFormatError,
     decode_png,
     encode_png,
-    resize_nearest,
-    resize_png,
 )
 
 
@@ -30,16 +28,6 @@ def test_round_trip_all_filters_and_layouts(ch, filter_type):
     back = decode_png(encode_png(img, filter_type=filter_type))
     assert back.shape == img.shape
     assert (back == img).all()
-
-
-def test_resize_nearest_shape_and_identity():
-    img = _img(20, 10, 3)
-    out = resize_nearest(img, 5, 4)
-    assert out.shape == (4, 5, 3)
-    same = resize_nearest(img, 10, 20)
-    assert (same == img).all()  # same size -> exact identity
-    up = decode_png(resize_png(encode_png(img), 40, 60))
-    assert up.shape == (60, 40, 3)
 
 
 def test_decode_rejects_garbage():

@@ -2,8 +2,8 @@
 
 Walks ``import`` statements with ``ast`` (module level and inside
 functions) from the CLI (``app``), the registered queries
-(``entry_queries``, ``__spark_entry__``), ``scripts/``, the benchmarks
-(``bench.py``, ``bench_worker.py``, ``perfbench/``), and fails when a
+(``entry_queries``, ``__spark_entry__``), ``scripts/``, the benchmark
+(``perfbench/``), and fails when a
 package module is imported by nothing but ``tests/`` — such a module is
 dead code with a test suite, and gets deleted rather than kept."""
 
@@ -59,7 +59,7 @@ def _imports(path: pathlib.Path, name: str, known: set[str]) -> set[str]:
 def reachable() -> set[str]:
     modules = _package_modules()
     files: dict[str, pathlib.Path] = dict(modules)
-    for p in [ROOT / "__spark_entry__.py", ROOT / "bench.py", ROOT / "bench_worker.py",
+    for p in [ROOT / "__spark_entry__.py",
               *(ROOT / "scripts").glob("*.py"), *(ROOT / "perfbench").glob("*.py")]:
         files[f"{p.parent}/{p.stem}"] = p
     roots = [f"{PKG}.app", f"{PKG}.entry_queries",

@@ -72,14 +72,14 @@ def test_partition_discovery_uses_parquet_footers(spark, sdf, tmp_path_factory):
     statistics (metadata-only), not a distinct() scan, and must cover the
     full contiguous date range of ts."""
     from data_quality_automated_evaluator_spark.pipeline.sinks import (
-        _parquet_footer_ts_bounds,
+        _parquet_footer_ts,
     )
 
     src = str(tmp_path_factory.mktemp("discovery") / "transcripts")
     sdf.write.mode("overwrite").parquet(src)
     pdf = spark.read.parquet(src)
 
-    bounds = _parquet_footer_ts_bounds(pdf, "ts")
+    bounds = _parquet_footer_ts(pdf, "ts")[0]
     assert bounds is not None, "footer path must engage for parquet input"
     parts = QualitySink.discover_partitions(pdf)
     truth = sorted(
@@ -90,8 +90,20 @@ def test_partition_discovery_uses_parquet_footers(spark, sdf, tmp_path_factory):
     assert set(truth) <= set(parts)
     assert parts[0] == truth[0] and parts[-1] == truth[-1]
     # non-parquet input falls back (still no shuffle — min/max agg)
-    assert _parquet_footer_ts_bounds(sdf, "ts") is None
+    assert _parquet_footer_ts(sdf, "ts")[0] is None
     assert set(truth) <= set(QualitySink.discover_partitions(sdf))
+
+
+def test_partition_discovery_skips_empty_parquet_files(spark, sdf, tmp_path):
+    """An empty append leaves a parquet file with no row groups beside the
+    data; its footer has no statistics to give, so discovery reads the
+    bounds from the other files instead of failing."""
+    src = str(tmp_path / "transcripts")
+    sdf.write.parquet(src)
+    sdf.limit(0).write.mode("append").parquet(src)
+    truth = sorted(str(r[0]) for r in sdf.selectExpr("to_date(ts) d").distinct().collect())
+    parts = QualitySink.discover_partitions(spark.read.parquet(src))
+    assert parts[0] == truth[0] and parts[-1] == truth[-1]
 
 
 def test_stats_incremental_and_convergent(spark, sdf, tmp_path_factory):
@@ -320,9 +332,9 @@ def test_ledger_facts_exact(spark, sdf, tmp_path_factory, sink_cls):
 
 
 class _PlanCapturingSink(QualitySink):
-    def _write_turns(self, out):
+    def _write_turns(self, out, pending):
         self.plan = out._jdf.queryExecution().executedPlan().toString()
-        return super()._write_turns(out)
+        return super()._write_turns(out, pending)
 
 
 def test_udf_stage_is_one_wave(spark, sdf, tmp_path):

@@ -71,8 +71,8 @@ class _JobGroups:
 
     tag = "budget"
 
-    def _write_turns(self, out):
-        written = super()._write_turns(out)
+    def _write_turns(self, out, pending):
+        written = super()._write_turns(out, pending)
         _switch(f"{self.tag}-facts")
         return written
 
@@ -139,8 +139,9 @@ def test_turns_read_back_launches_no_job(spark, src, tmp_path, monkeypatch, sink
 
     monkeypatch.setattr(DataFrameWriter, "parquet", write_then_switch)
     df = src.select("conv_id", "turn_idx", "ts", F.to_date("ts").alias("part_date"))
+    dates = [str(r[0]) for r in df.select("part_date").distinct().collect()]
     try:
-        written = sink_cls(str(tmp_path / "out"))._write_turns(df)
+        written = sink_cls(str(tmp_path / "out"))._write_turns(df, dates)
         pending = written.filter(F.col("part_date").isin(["2025-01-02"]))
         assert written.dtypes == pending.dtypes == df.dtypes
     finally:

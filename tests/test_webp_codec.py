@@ -20,7 +20,6 @@ from data_quality_automated_evaluator_spark.functions.webp import (
     WebpFormatError,
     decode_webp,
     encode_webp,
-    webp_meta,
 )
 
 
@@ -84,19 +83,6 @@ def test_round_trip_hypothesis(h, w, seed, palette):
     img = (rng.randint(0, palette, size=(h, w, 3)) % 256).astype(np.uint8)
     back = decode_webp(encode_webp(img))
     assert (back == img).all()
-
-
-def test_meta_parsers():
-    img = _img(17, 33, 3)
-    assert webp_meta(encode_webp(img)) == (33, 17)
-    # VP8X extended header: canvas size at bytes 24..30 (minus one, LE24)
-    vp8x = (
-        b"RIFF" + struct.pack("<I", 22) + b"WEBP"
-        + b"VP8X" + struct.pack("<I", 10)
-        + b"\x00" * 4 + (639).to_bytes(3, "little") + (479).to_bytes(3, "little")
-    )
-    assert webp_meta(vp8x) == (640, 480)
-    assert webp_meta(b"RIFF\x00\x00\x00\x00WAVE") is None
 
 
 def test_decode_rejects_unsupported_and_truncated():
