@@ -17,9 +17,18 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .functions.textstats import (
+    N_CHARS,
+    N_SYMBOLS,
+    N_TOKENS,
+    bpe_token_count_sql,
+    rule_inputs_sql,
+)
 from .operators.dedup import fingerprint_oracle_sql as _fp_oracle
 from .operators.dedup import simhash_md5_oracle_sql as _simhash_oracle
-from .pipeline.oracle_sql import keep_flags_oracle_sql
+from .pipeline.oracle_sql import heuristic_rules_sql, keep_flags_oracle_sql
+from .pipeline.oracle_sql import langid_sql as _langid_sql
+from .pipeline.rules import Thresholds
 
 # committed deterministic fixture (seed=42, 400 convs — same generator as
 # the flagship query) so the DuckDB side of the keep-flags oracle can read
@@ -333,21 +342,9 @@ def revenue_by_region_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "quality_rules_documents",
-    oracle=r"""
-    WITH f AS (
-      SELECT doc_id,
-             length(text) AS n_chars,
-             length(regexp_extract_all(text, '\S+')) AS n_tokens,
-             length(regexp_extract_all(text, '[!-/:-@\[-`{-~]')) AS n_symbols,
-             length(list_distinct(regexp_extract_all(lower(trim(text)), '\S+')))
-               AS n_distinct
-      FROM documents
-    )
-    SELECT doc_id,
-           (n_chars >= 1 AND n_chars <= 8000) AS r_len,
-           (CASE WHEN n_chars > 0 THEN CAST(n_symbols AS DOUBLE)/n_chars ELSE 0 END <= 0.30)
-             AS r_symbol,
-           (n_tokens < 10 OR CAST(n_distinct AS DOUBLE)/n_tokens >= 0.30) AS r_repetition
+    oracle=f"""
+    WITH f AS (SELECT doc_id, {rule_inputs_sql("text")} FROM documents)
+    SELECT doc_id, {heuristic_rules_sql(Thresholds())}
     FROM f ORDER BY doc_id
     """,
 )
@@ -355,11 +352,10 @@ def quality_rules_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The heuristic per-turn rules (length / symbol-ratio / repetition)
     applied to the documents table — SQL-oracle-checked end to end."""
     from .functions.textstats import with_text_features
-    from .pipeline.rules import Thresholds, rule_columns
+    from .pipeline.rules import rule_columns
 
-    t = Thresholds()
     df = with_text_features(_t(spark, sf_dir, "documents"))
-    rules = rule_columns(t)
+    rules = rule_columns(Thresholds())
     return df.select(
         "doc_id",
         rules["r_len"].alias("r_len"),
@@ -451,11 +447,11 @@ def dedup_exact_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_stats_documents",
-    oracle=r"""
+    oracle=rf"""
     SELECT doc_id,
-           length(text) AS n_chars,
-           length(regexp_extract_all(text, '\S+')) AS n_tokens,
-           length(regexp_extract_all(text, '[!-/:-@\[-`{-~]')) AS n_symbols,
+           {N_CHARS.sql("text")} AS n_chars,
+           {N_TOKENS.sql("text")} AS n_tokens,
+           {N_SYMBOLS.sql("text")} AS n_symbols,
            length(regexp_extract_all(lower(text),
              '\b(?:the|and|of|is|to|a|in|for|with|on|it|this|that|we|our|an|be|as|at|by)\b'))
              AS n_stopwords,
@@ -466,15 +462,16 @@ def dedup_exact_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_stats_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting, symbol counting, stopword counting, content
     fingerprint — the text-analysis feature set, JVM-side only."""
-    from .functions.textstats import SYMBOL_CLASS, TOKEN_CLASS, STOPWORDS
+    from .functions.textstats import STOPWORDS
 
     stop_re = r"\b(?:" + "|".join(STOPWORDS) + r")\b"
     df = _t(spark, sf_dir, "documents")
+    text = F.col("text")
     return df.select(
         "doc_id",
-        F.length("text").alias("n_chars"),
-        F.regexp_count("text", F.lit(TOKEN_CLASS)).alias("n_tokens"),
-        F.regexp_count("text", F.lit(SYMBOL_CLASS)).alias("n_symbols"),
+        N_CHARS.spark(text).alias("n_chars"),
+        N_TOKENS.spark(text).alias("n_tokens"),
+        N_SYMBOLS.spark(text).alias("n_symbols"),
         F.regexp_count(F.lower("text"), F.lit(stop_re)).alias("n_stopwords"),
         F.md5(F.lower(F.trim("text"))).alias("fingerprint"),
     ).orderBy("doc_id")
@@ -766,22 +763,16 @@ def repetition_stats_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return repetition_stats(docs.unionAll(probes)).orderBy("doc_id")
 
 
-# Planted multilingual probes for the langid oracle. Chosen so every \b
-# dictionary-word hit is adjacent only to ASCII: DuckDB's RE2 treats
-# non-ASCII as non-word while the byte-domain backend treats it as word,
-# so keeping accents/Cyrillic/CJK away from dictionary words makes the
-# two boundary definitions agree exactly; the single-char accent/script
-# class counts are position-independent and always agree. For the same
-# reason probes use only the ASCII words of each language's dictionary
-# (não/são/também/più never appear — RE2's ASCII \b cannot see a
-# boundary next to an accented letter, Unicode \b can).
+# Planted multilingual probes for the langid oracle: one per language,
+# with accent-edged dictionary words (über, não, também) that an ASCII-only
+# word boundary would miss.
 _LANGID_PROBES = [
     "le chat et la mer avec des amis et chaque jour est beau é è ç û",
-    "der hund und die katze laufen mit freude am ufer entlang ä ö ü ß",
+    "der hund und die katze laufen mit freude über das ufer ä ö ü ß",
     "привет мир это хорошо и ясно сегодня",
     "天 好 公 园 散 步 天 好",
     "el gato y los perros como siempre una vez por ano pero bueno ñ ¿ ¡",
-    "uma casa dos homens das coisas mas tudo bem em paz ã õ ã õ",
+    "uma casa dos homens não são coisas mas também em paz ã õ",
     "il cane che corre per strada sono felice della nella vita ì ò",
     "こんにちは せかい きょうは いい てんき です ね",
     "0 1 2 3 4 ! ? . . .",
@@ -790,16 +781,6 @@ _LANGID_PROBES_SQL = " UNION ALL ".join(
     f"SELECT '{t}' AS text" for t in _LANGID_PROBES
 )
 
-# The detector's DuckDB/RE2 score spec lives in pipeline/oracle_sql.py
-# (LANGID_SQL_SCORES) — the SAME table also builds the full quality
-# pipeline's keep-flags oracle, so the three langid oracles cannot drift.
-from .pipeline.oracle_sql import langid_label_case as _langid_label_case
-from .pipeline.oracle_sql import langid_scored_select as _langid_scored_sel
-
-
-def _langid_scored_select() -> str:
-    return _langid_scored_sel("s")
-
 
 @register(
     "langid_documents",
@@ -807,24 +788,18 @@ def _langid_scored_select() -> str:
     WITH corpus AS (
       SELECT text FROM documents
       UNION ALL {_LANGID_PROBES_SQL}
-    ), scored AS (
-      SELECT
-        {_langid_scored_select()}
-      FROM (SELECT lower(substr(coalesce(text, ''), 1, 400)) AS s FROM corpus)
-    ), labeled AS (
-      SELECT {_langid_label_case()} AS lang
-      FROM scored
     )
-    SELECT lang, count(*) AS n_docs FROM labeled GROUP BY lang ORDER BY lang
+    SELECT lang, count(*) AS n_docs FROM ({_langid_sql("corpus")})
+    GROUP BY lang ORDER BY lang
     """,
 )
 def langid_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-ID labels + per-language counts over documents plus five
     planted multilingual probes (Arrow-batched char-ngram linear model).
-    Value-checked end-to-end: the DuckDB oracle re-implements the model's
-    regex spec (functions/langid.py _FEATURES, weights, MIN_SCORE, argmax
-    tie order) in SQL — every label the vectorized byte-domain backend
-    emits must match it exactly."""
+    Value-checked end-to-end: the DuckDB oracle is generated from the
+    same model table as the numpy kernel (functions/langid.py MODEL,
+    weights, fold, MIN_SCORE, argmax tie order) — every label the
+    vectorized byte-domain kernel emits must match it exactly."""
     from .pipeline.features import langid_udf
 
     df = _t(spark, sf_dir, "documents").select("text")
@@ -1064,13 +1039,12 @@ def ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "token_counts_documents",
-    oracle=r"""
+    oracle=f"""
     SELECT source,
            count(*) AS n_docs,
-           CAST(sum(len(regexp_extract_all(text,
-             '''(?:s|t|re|ve|m|ll|d)| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+|\s+')))
+           CAST(sum({bpe_token_count_sql("text")})
              AS BIGINT) AS total_bpe_tokens,
-           CAST(sum(len(regexp_extract_all(text, '\S+'))) AS BIGINT)
+           CAST(sum({N_TOKENS.sql("text")}) AS BIGINT)
              AS total_ws_tokens,
            CAST(sum(length(text)) AS BIGINT) AS total_chars
     FROM documents GROUP BY source ORDER BY source
@@ -1080,7 +1054,7 @@ def token_counts_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token budgeting: whitespace + BPE-ish (GPT-2-flavored pretokenizer
     regex) token counts per source, all JVM-side regexp_count — the
     length-accounting pass of a training-data pipeline."""
-    from .functions.textstats import TOKEN_CLASS, bpe_token_count
+    from .functions.textstats import bpe_token_count
 
     df = _t(spark, sf_dir, "documents")
     return (
@@ -1088,7 +1062,7 @@ def token_counts_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum(bpe_token_count(F.col("text"))).alias("total_bpe_tokens"),
-            F.sum(F.regexp_count("text", F.lit(TOKEN_CLASS))).alias("total_ws_tokens"),
+            F.sum(N_TOKENS.spark(F.col("text"))).alias("total_ws_tokens"),
             F.sum(F.length("text")).alias("total_chars"),
         )
         .orderBy("source")
@@ -3307,15 +3281,9 @@ ORACLES["near_loop_transcripts"] = _near_loop_oracle(FIXTURE_TRANSCRIPTS)
 @register(
     "lang_confusion_documents",
     oracle=f"""
-    WITH scored AS (
-      SELECT doc_id, declared,
-        {_langid_scored_select()}
-      FROM (SELECT doc_id, lang AS declared,
-                   lower(substr(coalesce(text, ''), 1, 400)) AS s
-            FROM documents)
-    ), labeled AS (
-      SELECT declared, {_langid_label_case()} AS predicted
-      FROM scored
+    WITH labeled AS (
+      SELECT declared, lang AS predicted FROM ({_langid_sql(
+          "(SELECT lang AS declared, text FROM documents)", ("declared",))})
     )
     SELECT declared, predicted,
            CAST(count(*) AS BIGINT) AS n_docs
@@ -3329,8 +3297,8 @@ def lang_confusion_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpora routinely carry unreliable language metadata, and the
     mismatch mass per declared language is the signal that decides
     whether to trust the column or re-detect. One Arrow langid pass +
-    one tiny (declared, predicted) aggregation; the DuckDB oracle
-    re-implements the detector's full regex spec, so every cell of the
+    one tiny (declared, predicted) aggregation; the DuckDB oracle is
+    generated from the detector's model table, so every cell of the
     matrix is value-checked."""
     from .pipeline.features import langid_udf
 
@@ -3347,21 +3315,10 @@ def lang_confusion_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _langid_turns_cte(path: str) -> str:
     """Shared oracle CTE: per-turn langid labels over a transcripts
-    parquet (the pipeline LANGID_SCORE_SQL spec, keyed by conv/turn/ts)."""
-    from .pipeline.oracle_sql import LANGID_SCORE_SQL
-
-    langid = (
-        LANGID_SCORE_SQL
-        .replace("__KEYS__", "conv_id, turn_idx, ts")
-        .replace("__SCORE_SRC__", "feat")
-    )
+    parquet (the generated langid SQL, keyed by conv/turn/ts)."""
+    langid = _langid_sql(f"read_parquet('{path}')", ("conv_id", "turn_idx", "ts"))
     return f"""
-    WITH feat AS (
-      SELECT conv_id, turn_idx, ts,
-             lower(substr(coalesce(text, ''), 1, 400)) AS sl
-      FROM read_parquet('{path}')
-    ),
-    lang AS (
+    WITH lang AS (
 {langid}
     )"""
 
@@ -3404,7 +3361,7 @@ def mixed_lang_convs_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     mode pattern: a (conv_id, lang) count aggregation (map-side partial,
     8-byte labels in the shuffle — never text) feeding a conv_id window;
     the window reuses the first Exchange's clustering. Oracle: the same
-    spec via pipeline LANGID_SCORE_SQL + a recursive-free SQL mode."""
+    spec via the generated langid SQL + a recursive-free SQL mode."""
     from .pipeline.features import langid_udf
     from .testdata import write_transcripts_parquet
 
@@ -4180,7 +4137,7 @@ from .operators.sampling import (  # noqa: E402
         "source",
         "n_chars",
         "doc_id",
-        r"len(regexp_extract_all(text, '\S+'))",
+        N_TOKENS.sql("text"),
         800,
     ),
 )
@@ -4189,8 +4146,7 @@ def token_budget_mix_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/sampling.token_budget_select): longest-first greedy fill
     of an 800-whitespace-token allowance per source — one cumulative
     BIGINT window per group over the (priority, key) order, exact keep
-    frontier, JVM-side token counts (functions/textstats.TOKEN_CLASS)."""
-    from .functions.textstats import TOKEN_CLASS
+    frontier, JVM-side token counts (functions/textstats.n_tokens)."""
     from .operators.sampling import token_budget_select
 
     docs = _t(spark, sf_dir, "documents")
@@ -4199,7 +4155,7 @@ def token_budget_mix_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         group_col="source",
         priority_col="n_chars",
         key_col="doc_id",
-        token_count_col=F.regexp_count("text", F.lit(TOKEN_CLASS)),
+        token_count_col=N_TOKENS.spark(F.col("text")),
         budget=800,
     )
     return out.select(
@@ -5463,23 +5419,20 @@ def bm25_topk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tokenizer_fertility_documents",
-    oracle=r"""
+    oracle=f"""
     SELECT lang,
            CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(len(regexp_extract_all(text,
-             '''(?:s|t|re|ve|m|ll|d)| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+|\s+')))
+           CAST(sum({bpe_token_count_sql("text")})
              AS BIGINT) AS bpe_tokens,
-           CAST(sum(len(regexp_extract_all(text, '\S+'))) AS BIGINT)
+           CAST(sum({N_TOKENS.sql("text")}) AS BIGINT)
              AS ws_tokens,
            CAST(sum(strlen(text)) AS BIGINT) AS n_bytes,
-           round(CAST(sum(len(regexp_extract_all(text,
-             '''(?:s|t|re|ve|m|ll|d)| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+|\s+')))
+           round(CAST(sum({bpe_token_count_sql("text")})
              AS BIGINT)
-             / CAST(sum(len(regexp_extract_all(text, '\S+'))) AS BIGINT), 6)
+             / CAST(sum({N_TOKENS.sql("text")}) AS BIGINT), 6)
              AS fertility,
            round(CAST(sum(strlen(text)) AS BIGINT)
-             / CAST(sum(len(regexp_extract_all(text,
-             '''(?:s|t|re|ve|m|ll|d)| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+|\s+')))
+             / CAST(sum({bpe_token_count_sql("text")})
              AS BIGINT), 6) AS bytes_per_token,
     FROM documents GROUP BY lang ORDER BY lang
     """,
@@ -5492,11 +5445,11 @@ def tokenizer_fertility_documents(spark: SparkSession, sf_dir: str) -> DataFrame
     + one lang-sized agg; the two ratios each divide exact BIGINT sums
     (single correctly-rounded double division — bit-identical across
     engines)."""
-    from .functions.textstats import TOKEN_CLASS, bpe_token_count
+    from .functions.textstats import bpe_token_count
 
     df = _t(spark, sf_dir, "documents")
     bpe = F.sum(bpe_token_count(F.col("text")))
-    ws = F.sum(F.regexp_count("text", F.lit(TOKEN_CLASS)))
+    ws = F.sum(N_TOKENS.spark(F.col("text")))
     nb = F.sum(F.octet_length("text"))
     return (
         df.groupBy("lang")
@@ -5736,12 +5689,12 @@ ORACLES["parrot_rate_transcripts"] = _parrot_oracle(FIXTURE_TRANSCRIPTS)
 
 @register(
     "corpus_datacard_documents",
-    oracle=r"""
+    oracle=f"""
     SELECT CAST(count(*) AS BIGINT) AS n_docs,
            CAST(count(DISTINCT source) AS BIGINT) AS n_sources,
            CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
            CAST(sum(length(text)) AS BIGINT) AS total_chars,
-           CAST(sum(len(regexp_extract_all(text, '\S+'))) AS BIGINT)
+           CAST(sum({N_TOKENS.sql("text")}) AS BIGINT)
              AS total_ws_tokens,
            round(CAST(sum(length(text)) AS BIGINT)
                  / CAST(count(*) AS BIGINT), 6) AS mean_doc_chars,
@@ -5764,7 +5717,7 @@ def corpus_datacard_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("source").alias("n_sources"),
         F.countDistinct("lang").alias("n_langs"),
         F.sum(F.length("text")).alias("total_chars"),
-        F.sum(F.regexp_count("text", F.lit(r"\S+"))).alias("total_ws_tokens"),
+        F.sum(N_TOKENS.spark(F.col("text"))).alias("total_ws_tokens"),
         F.round(F.sum(F.length("text")) / F.count(F.lit(1)), 6).alias(
             "mean_doc_chars"
         ),
@@ -5779,10 +5732,10 @@ def corpus_datacard_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "feature_corr_documents",
-    oracle=r"""
+    oracle=f"""
     WITH f AS (
       SELECT source, CAST(length(text) AS BIGINT) AS x,
-             CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS y
+             CAST({N_TOKENS.sql("text")} AS BIGINT) AS y
       FROM documents
     ), s AS (
       SELECT source, CAST(count(*) AS BIGINT) AS n,
@@ -5814,7 +5767,7 @@ def feature_corr_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     variance orders would diverge)."""
     df = _t(spark, sf_dir, "documents")
     x = F.length("text").cast("long")
-    y = F.regexp_count("text", F.lit(r"\S+")).cast("long")
+    y = N_TOKENS.spark(F.col("text")).cast("long")
     s = df.select(
         "source", x.alias("x"), y.alias("y")
     ).groupBy("source").agg(

@@ -2,7 +2,7 @@
 rolling fingerprints.
 
 All numpy-vectorized over Arrow batches (pandas UDF hot path) and shared
-with tests/oracles. Hash function: splitmix64 over FNV-1a seeds —
+with tests/oracles. Hash function: splitmix64 over an FNV-prime polynomial —
 deterministic, seedable, public-domain constructions.
 """
 
@@ -21,13 +21,6 @@ def _splitmix64(x: np.ndarray) -> np.ndarray:
     x = ((x ^ (x >> _U64(30))) * _U64(0xBF58476D1CE4E5B9)) & _MASK
     x = ((x ^ (x >> _U64(27))) * _U64(0x94D049BB133111EB)) & _MASK
     return x ^ (x >> _U64(31))
-
-
-def hash_bytes_fnv(data: bytes) -> int:
-    h = 0xCBF29CE484222325
-    for b in data:
-        h = ((h ^ b) * 0x100000001B3) & 0xFFFFFFFFFFFFFFFF
-    return h
 
 
 def char_shingles(text: str, k: int = 5) -> np.ndarray:
@@ -76,14 +69,6 @@ def simhash_batch(texts: pd.Series, k: int = 5) -> pd.Series:
         sim = (counts * 2 > len(sh)).astype(np.uint64)
         out[i] = (sim << np.arange(64, dtype=np.uint64)).sum(dtype=np.uint64).astype(np.int64)
     return pd.Series(out, index=texts.index)
-
-
-def hamming64(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Hamming distance between two int64 simhash Series (vectorized)."""
-    x = a.to_numpy(dtype=np.int64).view(np.uint64) ^ b.to_numpy(np.int64).view(np.uint64)
-    # popcount via unpackbits on the byte view
-    bytes_view = x.view(np.uint8).reshape(-1, 8)
-    return pd.Series(np.unpackbits(bytes_view, axis=1).sum(axis=1), index=a.index)
 
 
 def jaccard_pairs_batch(ta: pd.Series, tb: pd.Series, k: int = 5) -> pd.Series:

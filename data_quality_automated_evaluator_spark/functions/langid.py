@@ -1,28 +1,31 @@
 """Vectorized character-n-gram language identification.
 
-A fastText-flavored linear model: per-language scores are weighted
-counts of discriminative character n-grams / character classes. The
-:func:`langid_frame` core runs inside the Spark pandas UDF (Arrow
-batches); the DuckDB oracle re-expresses the same model spec in SQL
-(``pipeline/oracle_sql.LANGID_SQL_SCORES``).
+A fastText-flavored linear model: each language's score is a weighted
+count of dictionary words, character n-grams, single characters and
+code-point ranges, plus a small bonus per ASCII letter. :data:`MODEL`,
+:data:`_LATIN_BONUS` and :data:`FOLD` are the whole model, and both
+engines are derived from them:
 
-Two counting backends:
+- :func:`langid_frame` (what the Spark pandas UDF runs) joins the batch
+  into one NUL-separated UTF-8 buffer and builds its numpy matchers from
+  the table: a dictionary word is a whole run of word bytes, looked up by
+  its packed bytes; an n-gram is a byte pattern; character classes and
+  ranges are tested on the code points decoded at UTF-8 lead bytes. Hits
+  are summed per string through the start offsets, with no per-row
+  Python beyond the prefix slice and fold.
+- ``pipeline/oracle_sql.langid_sql`` generates the DuckDB expressions of
+  the same features for every langid oracle.
 
-- **numpy byte-domain** (:func:`langid_frame`, what the UDF runs): the
-  batch is joined into one NUL-separated UTF-8 buffer; every feature becomes
-  shifted byte-equality masks (word boundaries via a 256-entry
-  word-char table, accented classes via their UTF-8 lead/continuation
-  bytes) accumulated per language and summed per string with
-  ``np.add.reduceat``. Zero per-row Python, ~5× the regex backend.
-- **regex reference** (:func:`langid_frame_regex`): the readable spec,
-  pandas ``str.count`` per feature. The parity test pins numpy == regex
-  on realistic corpora.
-
-Model weights are embedded constants (public-knowledge character
-statistics), deterministic by construction.
+Both engines read the first :data:`PREFIX_CHARS` characters, drop NUL,
+and fold with :data:`FOLD`, not ``lower()``, whose results differ
+between Java, DuckDB and Python. :func:`check_model` rejects a table the
+two engines would count differently. Model weights are embedded constants
+(public-knowledge character statistics), deterministic by construction.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -35,102 +38,161 @@ raise_mmap_threshold()  # batch temporaries must stay in the arena
 # original 5-language tie behavior is unchanged on old corpora
 LANGS = ["en", "fr", "de", "ru", "zh", "es", "pt", "it", "ja"]
 
-# (language, regex pattern, weight); counts are per-character-ngram hits.
-_FEATURES: list[tuple[str, str, float]] = [
+
+class Feature(NamedTuple):
+    """One weighted feature; each hit adds ``weight`` to ``lang``.
+
+    ``kind`` is ``word`` (a whole run of word characters equal to one of
+    ``items``), ``ngram`` (every occurrence of each of ``items``), ``char``
+    (each character in ``items``) or ``range`` (each character whose code
+    point is in ``items = (low, high)``)."""
+
+    lang: str
+    kind: str
+    items: tuple
+    weight: float
+
+
+MODEL: tuple[Feature, ...] = (
     # English function words / ngrams
-    ("en", r"\bthe\b|\band\b|\bof\b|\bis\b|\bto\b|\bwith\b|\bfor\b", 3.0),
-    ("en", r"th|ing|ion", 1.0),
+    Feature("en", "word", ("the", "and", "of", "is", "to", "with", "for"), 3.0),
+    Feature("en", "ngram", ("th", "ing", "ion"), 1.0),
     # French: accents + function words
-    ("fr", r"[éèêàâçùûîôœ]", 2.0),
-    ("fr", r"\ble\b|\bla\b|\bles\b|\bet\b|\bde\b|\bdes\b|\bavec\b|\bchaque\b", 3.0),
+    Feature("fr", "char", tuple("éèêàâçùûîôœ"), 2.0),
+    Feature("fr", "word",
+            ("le", "la", "les", "et", "de", "des", "avec", "chaque"), 3.0),
     # German: umlauts/ß + function words
-    ("de", r"[äöüß]", 2.0),
-    ("de", r"\bder\b|\bdie\b|\bdas\b|\bund\b|\bmit\b|\bjeden\b|\büber\b", 3.0),
-    ("de", r"sch|ung", 1.0),
+    Feature("de", "char", tuple("äöüß"), 2.0),
+    Feature("de", "word",
+            ("der", "die", "das", "und", "mit", "jeden", "über"), 3.0),
+    Feature("de", "ngram", ("sch", "ung"), 1.0),
     # Russian: Cyrillic block
-    ("ru", r"[Ѐ-ӿ]", 2.0),
+    Feature("ru", "range", (0x0400, 0x04FF), 2.0),
     # Chinese: CJK unified ideographs
-    ("zh", r"[一-鿿]", 2.0),
+    Feature("zh", "range", (0x4E00, 0x9FFF), 2.0),
     # Spanish: ñ + inverted punctuation + function words
-    ("es", r"[ñ¿¡]", 2.0),
-    ("es", r"\bel\b|\blos\b|\blas\b|\buna\b|\bpor\b|\bcon\b|\bcomo\b|\bpero\b", 3.0),
+    Feature("es", "char", tuple("ñ¿¡"), 2.0),
+    Feature("es", "word",
+            ("el", "los", "las", "una", "por", "con", "como", "pero"), 3.0),
     # Portuguese: nasal vowels (ã õ — absent from the fr/es/it classes)
     # + function words
-    ("pt", r"[ãõ]", 2.0),
-    ("pt", r"\bnão\b|\buma\b|\bdos\b|\bdas\b|\bmas\b|\bsão\b|\btambém\b|\bem\b", 3.0),
-    # Italian: grave accents not in the fr class + function words.
-    # Every dictionary word is ASCII-edged: RE2's \b (the DuckDB oracle
-    # dialect) is ASCII-only, so an accent-final word like "più" can
-    # never match \bword\b there while both Python backends count it —
-    # "non" carries the same everyday-Italian signal without the trap.
-    ("it", r"[ìò]", 2.0),
-    ("it", r"\bil\b|\bdella\b|\bnella\b|\bche\b|\bper\b|\bsono\b|\bnon\b|\bgli\b", 3.0),
+    Feature("pt", "char", tuple("ãõ"), 2.0),
+    Feature("pt", "word",
+            ("não", "uma", "dos", "das", "mas", "são", "também", "em"), 3.0),
+    # Italian: grave accents not in the fr class + function words
+    Feature("it", "char", tuple("ìò"), 2.0),
+    Feature("it", "word",
+            ("il", "della", "nella", "che", "per", "sono", "non", "gli"), 3.0),
     # Japanese: hiragana + katakana (kanji scores zh; kana is the
     # ja-unique signal, and real Japanese text is kana-dominant)
-    ("ja", r"[ぁ-ヿ]", 2.0),
-]
+    Feature("ja", "range", (0x3041, 0x30FF), 2.0),
+)
 
 # Latin letters weakly indicate the Latin-script languages (ties broken by
 # the stronger features above); keeps plain ASCII junk from scoring zero
-# everywhere and lets the confidence threshold kick in.
+# everywhere and lets the confidence threshold kick in. One hit per [a-z]
+# character, added after every MODEL feature.
 _LATIN_BONUS = {
     "en": 0.05, "fr": 0.02, "de": 0.02, "es": 0.02, "pt": 0.02, "it": 0.02,
 }
+
+# The fold applied to the prefix before any feature is counted; every
+# entry maps one character to one character.
+FOLD: dict[str, str] = {
+    # typographic punctuation → the (equally non-word) ASCII it stands for
+    "\u00a0": " ", "\u2009": " ", "\u202f": " ",  # NBSP, thin, narrow NBSP
+    "‘": "'", "’": "'", "“": '"', "”": '"',       # curly quotes
+    "«": '"', "»": '"',                            # guillemets
+    "…": " ",                                      # ellipsis
+    "–": "-", "—": "-",                            # en/em dash
+    # case: ASCII, Latin-1 À–Þ except ×, and Œ
+    **{chr(c): chr(c + 0x20) for c in range(ord("A"), ord("Z") + 1)},
+    **{chr(c): chr(c + 0x20) for c in range(0xC0, 0xDF) if c != 0xD7},
+    "Œ": "œ",
+}
+
+# A word character, checked after the fold: [0-9a-z_] or any non-ASCII
+# character except the Spanish inverted marks.
+WORD_ASCII = "0123456789_abcdefghijklmnopqrstuvwxyz"
+NONWORD = "¿¡"
 
 UNKNOWN = "und"
 MIN_SCORE = 0.5  # absolute score floor; below it the label is 'und'
 
 # Language ID needs only a prefix (fastText-style models routinely cap input);
-# keeps 8KB junk blobs from dominating batch cost. Part of the model spec —
-# the oracle runs this same function, so parity is structural.
+# keeps 8KB junk blobs from dominating batch cost.
 PREFIX_CHARS = 400
 
+_MAX_WORD_BYTES = 8  # a dictionary word's bytes pack into one uint64
+
+
+def check_model(model: tuple[Feature, ...] = MODEL) -> None:
+    """Raise ``ValueError`` for a feature the numpy kernel and the DuckDB
+    SQL generated from it would count differently."""
+    for f in model:
+        bad = f"{f.lang} {f.kind} feature {f.items!r}"
+        if f.weight != int(f.weight):
+            # integral weights keep every partial sum exact, so the two
+            # engines' different summation orders give equal scores
+            raise ValueError(f"{bad}: non-integral weight")
+        if (f.kind == "range" and f.items[0] < 0x80) or (f.kind == "char" and any(
+                len(c) != 1 or c < "\x80" for c in f.items)):
+            # the kernel decodes code points at non-ASCII lead bytes only
+            raise ValueError(f"{bad}: not non-ASCII characters")
+        if f.kind == "word" and (len(set(f.items)) < len(f.items) or any(
+                len(w.encode()) > _MAX_WORD_BYTES for w in f.items)):
+            # the kernel packs each word into a uint64 and would add a
+            # repeated word twice
+            raise ValueError(f"{bad}: repeated or longer than {_MAX_WORD_BYTES} bytes")
+        if f.kind == "ngram" and any(
+                g[:k] == g[-k:] for g in f.items for k in range(1, len(g))):
+            # numpy counts every start, DuckDB non-overlapping matches
+            raise ValueError(f"{bad}: an ngram can overlap itself")
+
+
+check_model()
+
 # ---------------------------------------------------------------------------
-# numpy byte-domain backend
+# numpy matchers, built from the table
 # ---------------------------------------------------------------------------
 
-# word characters for \b: ASCII [a-zA-Z0-9_] plus every byte >= 0x80
-# (continuation/lead bytes of non-ASCII letters — accented chars are word
-# characters under Unicode \b, and they are the overwhelmingly common
-# non-ASCII neighbors of our dictionary words).
-_WORDCHAR = np.zeros(256, dtype=bool)
-for _b in range(128):
-    _WORDCHAR[_b] = chr(_b).isalnum() or _b == ord("_")
-_WORDCHAR[128:] = True
+_LANG_IX = {lang: i for i, lang in enumerate(LANGS)}
+_FOLD_TABLE = str.maketrans({**FOLD, "\x00": None})
 
-# ASCII + Latin-1-supplement lowercase (É→é handled in the C3 pair pass).
-_ASCII_LOWER = np.arange(256, dtype=np.uint8)
-_ASCII_LOWER[ord("A"):ord("Z") + 1] += 32
+_WORD_BYTE = np.zeros(256, dtype=bool)  # NONWORD chars are cleared per batch
+_WORD_BYTE[list(WORD_ASCII.encode())] = True
+_WORD_BYTE[0x80:] = True
+_NONWORD = [(ord(c), len(c.encode())) for c in NONWORD]
 
-# word-list features, compiled to UTF-8 byte strings
-_WORD_SETS: list[tuple[str, list[bytes], float]] = [
-    ("en", [w.encode() for w in
-            ("the", "and", "of", "is", "to", "with", "for")], 3.0),
-    ("fr", [w.encode() for w in
-            ("le", "la", "les", "et", "de", "des", "avec", "chaque")], 3.0),
-    ("de", [w.encode("utf-8") for w in
-            ("der", "die", "das", "und", "mit", "jeden", "über")], 3.0),
-    ("es", [w.encode() for w in
-            ("el", "los", "las", "una", "por", "con", "como", "pero")], 3.0),
-    ("pt", [w.encode("utf-8") for w in
-            ("não", "uma", "dos", "das", "mas", "são", "também", "em")], 3.0),
-    ("it", [w.encode("utf-8") for w in
-            ("il", "della", "nella", "che", "per", "sono", "non", "gli")], 3.0),
+
+def _word_table() -> tuple[np.ndarray, np.ndarray]:
+    """Every dictionary word's bytes packed little-endian into a uint64
+    (sorted), and its weight per language."""
+    weights: dict[int, np.ndarray] = {}
+    for f in MODEL:
+        for w in f.items if f.kind == "word" else ():
+            key = int.from_bytes(w.encode(), "little")
+            weights.setdefault(key, np.zeros(len(LANGS)))[_LANG_IX[f.lang]] += f.weight
+    keys = sorted(weights)
+    return np.array(keys, dtype=np.uint64), np.array([weights[k] for k in keys])
+
+
+_WORD_KEYS, _WORD_WEIGHTS = _word_table()
+_WORD_LANGS = np.flatnonzero(_WORD_WEIGHTS.any(axis=0))
+_WORD_LENS = [len(w.encode()) for f in MODEL if f.kind == "word" for w in f.items]
+
+_NGRAMS = [(_LANG_IX[f.lang], g.encode(), f.weight)
+           for f in MODEL if f.kind == "ngram" for g in f.items]
+_CODE_POINT_FEATURES = [
+    (_LANG_IX[f.lang], f.kind,
+     np.array([ord(c) for c in f.items]) if f.kind == "char" else f.items,
+     f.weight)
+    for f in MODEL if f.kind in ("char", "range")
 ]
-# bare-substring ngram features (no boundaries)
-_SUBSTR_SETS: list[tuple[str, list[bytes], float]] = [
-    ("en", [b"th", b"ing", b"ion"], 1.0),
-    ("de", [b"sch", b"ung"], 1.0),
-]
-# accented single-char classes as (lead byte, continuation-byte values)
-_FR_ACCENT_C3 = bytes("éèêàâçùûîôœ", "utf-8")  # œ is C5 93
-_FR_CONT = [b for a, b in zip(_FR_ACCENT_C3[::2], _FR_ACCENT_C3[1::2]) if a == 0xC3]
-_DE_CONT = [bytes(c, "utf-8")[1] for c in "äöüß"]  # all C3-lead
 
 
 def _pattern_positions(buf: np.ndarray, pat: bytes) -> np.ndarray:
-    """Candidate start indices where ``pat`` occurs in ``buf`` (overlap-free
-    for our patterns by construction — no pattern can overlap itself)."""
+    """Start indices of every occurrence of ``pat`` in ``buf``."""
     limit = len(buf) - len(pat) + 1
     if limit <= 0:
         # pattern longer than buffer; a negative slice bound would wrap
@@ -144,65 +206,41 @@ def _pattern_positions(buf: np.ndarray, pat: bytes) -> np.ndarray:
     return idx
 
 
-def _word_positions(buf: np.ndarray, wc: np.ndarray, word: bytes) -> np.ndarray:
-    """Start indices of \\b word \\b matches."""
-    idx = _pattern_positions(buf, word)
-    if not idx.size:
-        return idx
-    left_ok = np.ones(len(idx), dtype=bool)
-    inner = idx > 0
-    left_ok[inner] = ~wc[buf[idx[inner] - 1]]
-    end = idx + len(word)
-    right_ok = np.ones(len(idx), dtype=bool)
-    inner = end < len(buf)
-    right_ok[inner] = ~wc[buf[end[inner]]]
-    return idx[left_ok & right_ok]
-
-
-# Typographic punctuation → ASCII, all 1-char→1-char so \b boundary
-# semantics match the regex spec byte-for-byte: the byte backend treats
-# every >=0x80 byte as a word char, but NBSP / curly quotes / ellipsis /
-# guillemets / dashes are NON-word under Unicode \b. Normalizing them to
-# their (equally non-word) ASCII forms before encoding removes the
-# divergence the restricted-alphabet parity test used to hide.
-_TYPOGRAPHIC = str.maketrans({
-    " ": " ",  # NBSP (C2 A0)
-    " ": " ",  # thin space
-    " ": " ",  # narrow NBSP (French punctuation spacing)
-    "‘": "'", "’": "'",   # curly apostrophes
-    "“": '"', "”": '"',   # curly quotes
-    "«": '"', "»": '"',   # guillemets
-    "…": " ",  # ellipsis
-    "–": "-", "—": "-",   # en/em dash
-})
-
-
-def _encode_lower(texts: pd.Series) -> tuple[np.ndarray, np.ndarray, int]:
-    """Join a batch into one NUL-separated lowercased UTF-8 buffer.
-
-    Returns (buf, starts, n). ASCII lowering via table; Latin-1-supplement
-    uppercase (C3 80–9E except ×) lowered by +0x20 on the continuation
-    byte — together covering every cased character our features read.
-    """
-    s = texts.fillna("").astype(str).str.slice(0, PREFIX_CHARS)
-    s = s.str.translate(_TYPOGRAPHIC)
-    s = s.str.replace("\x00", "", regex=False)
-    n = len(s)
-    joined = "\x00".join(s.tolist())
-    buf = np.frombuffer(
-        joined.encode("utf-8", "surrogatepass"), dtype=np.uint8
+def _code_points(buf: np.ndarray, lead: np.ndarray) -> np.ndarray:
+    """Code points of the non-ASCII characters whose lead bytes are at
+    ``lead`` (the buffer is valid UTF-8, surrogates passed through)."""
+    last = len(buf) - 1
+    b0 = buf[lead].astype(np.int64)
+    b1, b2, b3 = (
+        buf[np.minimum(lead + k, last)].astype(np.int64) & 0x3F for k in (1, 2, 3)
     )
-    buf = _ASCII_LOWER[buf]  # copy (frombuffer is read-only)
-    if len(buf) >= 2:
-        sec = buf[1:]
-        m = (
-            (buf[:-1] == 0xC3)
-            & (sec >= 0x80) & (sec <= 0x9E) & (sec != 0x97)
-        )
-        sec[m] += 0x20
-    sep = np.flatnonzero(buf == 0)
-    starts = np.concatenate([[0], sep + 1])
-    return buf, starts, n
+    return np.where(
+        b0 < 0xE0, ((b0 & 0x1F) << 6) | b1,
+        np.where(b0 < 0xF0, ((b0 & 0x0F) << 12) | (b1 << 6) | b2,
+                 ((b0 & 0x07) << 18) | (b1 << 12) | (b2 << 6) | b3),
+    )
+
+
+def _word_hits(buf: np.ndarray, lead: np.ndarray, cps: np.ndarray):
+    """(start, dictionary row) of every run of word bytes that is a
+    dictionary word."""
+    wc = _WORD_BYTE[buf]
+    for cp, width in _NONWORD:
+        at = lead[cps == cp]
+        for k in range(width):
+            wc[at + k] = False
+    edges = np.flatnonzero(np.diff(wc, prepend=False, append=False))
+    run_start, run_len = edges[0::2], edges[1::2] - edges[0::2]
+    cand = (run_len >= min(_WORD_LENS)) & (run_len <= max(_WORD_LENS))
+    run_start, run_len = run_start[cand], run_len[cand]
+    key = np.zeros(len(run_start), dtype=np.uint64)
+    for j in range(max(_WORD_LENS)):
+        byte = buf[np.minimum(run_start + j, len(buf) - 1)].astype(np.uint64)
+        byte[run_len <= j] = 0
+        key |= byte << np.uint64(8 * j)
+    row = np.minimum(np.searchsorted(_WORD_KEYS, key), len(_WORD_KEYS) - 1)
+    hit = _WORD_KEYS[row] == key
+    return run_start[hit], row[hit]
 
 
 def langid_frame(texts: pd.Series) -> pd.DataFrame:
@@ -211,74 +249,43 @@ def langid_frame(texts: pd.Series) -> pd.DataFrame:
     Returns a DataFrame with one ``score_<lang>`` column per language
     plus ``lang`` (argmax label, ``und`` when max score < MIN_SCORE).
     """
-    buf, starts, n = _encode_lower(texts)
-    lang_ix = {l: i for i, l in enumerate(LANGS)}
+    prefixes = [
+        t[:PREFIX_CHARS].translate(_FOLD_TABLE)
+        for t in texts.fillna("").astype(str).tolist()
+    ]
+    n = len(prefixes)
+    buf = np.frombuffer(
+        "\x00".join(prefixes).encode("utf-8", "surrogatepass"), dtype=np.uint8
+    )
+    starts = np.concatenate([[0], np.flatnonzero(buf == 0) + 1])
     scores = np.zeros((n, len(LANGS)), dtype=np.float64)
 
-    def add_hits(lang: str, idx: np.ndarray, w: float) -> None:
-        # match positions → owning string via the start offsets (sparse:
-        # O(hits·log n), no per-byte accumulator)
-        if idx.size:
-            seg = np.searchsorted(starts, idx, side="right") - 1
-            scores[:, lang_ix[lang]] += np.bincount(seg, minlength=n) * w
+    def segments(pos: np.ndarray) -> np.ndarray:
+        # match positions → owning string via the start offsets
+        return np.searchsorted(starts, pos, side="right") - 1
 
-    # Spanish inverted punctuation ¿ (C2 BF) ¡ (C2 A1): count FIRST, then
-    # neutralize the byte pair to ASCII "??" BEFORE the word-boundary
-    # pass. Under Unicode \b (regex backend) and RE2 \b (DuckDB oracles)
-    # these are NON-word characters, so "¿por qué" still boundary-matches
-    # \bpor\b — but the byte backend's word table marks every >=0x80 byte
-    # as word, which would silently eat the boundary and flip labels on
-    # ordinary Spanish text.
-    if len(buf) >= 2:
-        m_inv = (buf[:-1] == 0xC2) & ((buf[1:] == 0xBF) | (buf[1:] == 0xA1))
-        pos_inv = np.flatnonzero(m_inv)
-        add_hits("es", pos_inv, 2.0)
-        if pos_inv.size:
-            buf[pos_inv] = ord("?")
-            buf[pos_inv + 1] = ord("?")
+    def add_hits(lang: int, pos: np.ndarray, w: float) -> None:
+        if pos.size:
+            scores[:, lang] += np.bincount(segments(pos), minlength=n) * w
 
-    for lang, words, w in _WORD_SETS:
-        for word in words:
-            add_hits(lang, _word_positions(buf, _WORDCHAR, word), w)
-    for lang, pats, w in _SUBSTR_SETS:
-        for pat in pats:
-            add_hits(lang, _pattern_positions(buf, pat), w)
+    lead = np.flatnonzero(buf >= 0xC0)
+    cps = _code_points(buf, lead)
 
-    if len(buf) >= 2:
-        sec = buf[1:]
-        lead = buf[:-1]
-        # French accents: C3+cont in set, plus œ = C5 93
-        m = (lead == 0xC3) & np.isin(sec, _FR_CONT)
-        m |= (lead == 0xC5) & (sec == 0x93)
-        add_hits("fr", np.flatnonzero(m), 2.0)
-        # German umlauts/ß: C3+cont in set
-        m = (lead == 0xC3) & np.isin(sec, _DE_CONT)
-        add_hits("de", np.flatnonzero(m), 2.0)
-        # Cyrillic U+0400–U+04FF: lead byte D0–D3
-        m = (lead >= 0xD0) & (lead <= 0xD3) & (sec >= 0x80)
-        add_hits("ru", np.flatnonzero(m), 2.0)
-        # CJK U+4E00–U+9FFF: 3-byte lead E4 (cont1 ≥ B8) or E5–E9
-        m = ((lead == 0xE4) & (sec >= 0xB8)) | ((lead >= 0xE5) & (lead <= 0xE9))
-        add_hits("zh", np.flatnonzero(m), 2.0)
-        # Spanish: ñ (C3 B1) — ¿/¡ were counted (and neutralized) above
-        m = (lead == 0xC3) & (sec == 0xB1)
-        add_hits("es", np.flatnonzero(m), 2.0)
-        # Portuguese nasal vowels: ã (C3 A3), õ (C3 B5)
-        m = (lead == 0xC3) & ((sec == 0xA3) | (sec == 0xB5))
-        add_hits("pt", np.flatnonzero(m), 2.0)
-        # Italian grave accents outside the fr class: ì (C3 AC), ò (C3 B2)
-        m = (lead == 0xC3) & ((sec == 0xAC) | (sec == 0xB2))
-        add_hits("it", np.flatnonzero(m), 2.0)
-
-    if len(buf) >= 3:
-        # Japanese kana U+3041–U+30FF: E3 81 81–BF | E3 82 * | E3 83 *
-        # (the 3rd-byte check on the 81 page excludes unassigned U+3040,
-        # keeping the mask exactly equal to the regex class [ぁ-ヿ])
-        l3, s3, t3 = buf[:-2], buf[1:-1], buf[2:]
-        m3 = (l3 == 0xE3) & (
-            ((s3 == 0x81) & (t3 >= 0x81)) | (s3 == 0x82) | (s3 == 0x83)
-        )
-        add_hits("ja", np.flatnonzero(m3), 2.0)
+    word_pos, word_row = _word_hits(buf, lead, cps)
+    if word_pos.size:
+        seg = segments(word_pos)
+        for lang in _WORD_LANGS:
+            scores[:, lang] += np.bincount(
+                seg, weights=_WORD_WEIGHTS[word_row, lang], minlength=n
+            )
+    for lang, pat, w in _NGRAMS:
+        add_hits(lang, _pattern_positions(buf, pat), w)
+    for lang, kind, items, w in _CODE_POINT_FEATURES:
+        if kind == "char":
+            m = np.isin(cps, items)
+        else:
+            m = (cps >= items[0]) & (cps <= items[1])
+        add_hits(lang, lead[m], w)
 
     # Latin [a-z] bonus — dense, so segment-sum an int mask instead of
     # walking sparse indices (reduceat segments exact: starts strictly
@@ -288,7 +295,7 @@ def langid_frame(texts: pd.Series) -> pd.DataFrame:
         latin = np.append(latin, 0)  # keep every start index in range
         latin_counts = np.add.reduceat(latin, starts).astype(np.float64)
         for lang, w in _LATIN_BONUS.items():
-            scores[:, lang_ix[lang]] += latin_counts * w
+            scores[:, _LANG_IX[lang]] += latin_counts * w
 
     best = scores.argmax(axis=1)
     best_score = scores.max(axis=1)
@@ -297,27 +304,6 @@ def langid_frame(texts: pd.Series) -> pd.DataFrame:
     out = pd.DataFrame(
         scores, index=texts.index, columns=[f"score_{l}" for l in LANGS]
     )
-    out["lang"] = labels
-    return out
-
-
-def langid_frame_regex(texts: pd.Series) -> pd.DataFrame:
-    """Reference backend: the same model via pandas ``str.count`` regexes.
-    Kept as the readable spec and the parity-test oracle."""
-    s = texts.fillna("").astype(str).str.slice(0, PREFIX_CHARS).str.lower()
-    scores = pd.DataFrame(0.0, index=s.index, columns=LANGS)
-    for lang, pat, w in _FEATURES:
-        scores[lang] += s.str.count(pat) * w
-    latin = s.str.count(r"[a-z]")
-    for lang, w in _LATIN_BONUS.items():
-        scores[lang] += latin * w
-
-    arr = scores.to_numpy()
-    best = arr.argmax(axis=1)
-    best_score = arr.max(axis=1)
-    labels = np.array(LANGS, dtype=object)[best]
-    labels[best_score < MIN_SCORE] = UNKNOWN
-    out = scores.add_prefix("score_")
     out["lang"] = labels
     return out
 

@@ -1,30 +1,37 @@
-"""Per-turn heuristic text statistics as Spark Column expressions.
+r"""Per-turn heuristic text statistics as Spark Column expressions.
 
 They stay 100% JVM (built-in ``pyspark.sql.functions`` inside
 whole-stage codegen — these are the hot-path features at 10^12 rows).
-The reference is the DuckDB SQL of
-:func:`..pipeline.oracle_sql.keep_flags_oracle_sql`; parity holds by
-using only regex constructs with identical semantics in Java regex and
-RE2 (explicit ASCII classes, ``\\S``, no locale-dependent classes) —
-verified by the golden tests over the full fixture distribution.
+Each keep-rule input (:data:`RULE_INPUTS`) is one Spark Column builder
+plus one DuckDB SQL builder over the same class constants, which avoid
+what means different things in Java and RE2: ``\s`` (Java's includes
+``\x0B``), ``\b`` (ASCII-only in RE2) and bare ``lower()`` (:data:`CASE_PRE`).
 
 Features:
 - ``n_chars``   code-point length
-- ``n_tokens``  count of ``\\S+`` runs (whitespace tokenization)
+- ``n_tokens``  count of non-whitespace runs (:data:`TOKEN_CLASS`)
 - ``symbol_ratio``      ASCII-punctuation chars / n_chars
-- ``distinct_token_ratio``  distinct lowercase tokens / tokens
+- ``distinct_token_ratio``  distinct case-folded tokens / tokens
 - ``stopword_ratio``    English stopword tokens / tokens (quality score input)
 - ``quality_score``     composite in [0,1] (length/punct/stopword blend)
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from typing import NamedTuple
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Explicit ASCII punctuation/symbol set: '!'..'/'  ':'..'@'  '['..'`'  '{'..'~'
 SYMBOL_CLASS = r"[!-/:-@\[-`{-~]"
-TOKEN_CLASS = r"\S+"
+# A token is a run of anything but Java's \s whitespace, spelled out
+TOKEN_CLASS = r"[^\t\n\x0B\f\r ]+"
+# lower() gives the same tokens in Java and DuckDB once these characters
+# are mapped first: Java lowers İ to "i̇" and a word-final Σ to "ς",
+# DuckDB to "i" and "σ"
+CASE_PRE = ("İΣ", "iσ")
 
 STOPWORDS = [
     "the", "and", "of", "is", "to", "a", "in", "for", "with", "on",
@@ -47,30 +54,66 @@ def bpe_token_count(text: Column) -> Column:
     return F.regexp_count(text, F.lit(BPE_TOKEN_RE))
 
 
+def bpe_token_count_sql(text: str) -> str:
+    pattern = BPE_TOKEN_RE.replace("'", "''")
+    return f"len(regexp_extract_all({text}, '{pattern}'))"
+
+
+class TextStat(NamedTuple):
+    """One keep-rule input: its Spark Column and its DuckDB SQL."""
+
+    spark: Callable[[Column], Column]
+    sql: Callable[[str], str]
+
+
+def _distinct_tokens(text: Column) -> Column:
+    pre = F.when(  # translate is per-character, so only on the rare rows
+        text.contains(CASE_PRE[0][0]) | text.contains(CASE_PRE[0][1]),
+        F.translate(text, *CASE_PRE),
+    ).otherwise(text)
+    toks = F.regexp_extract_all(F.lower(pre), F.lit(TOKEN_CLASS), F.lit(0))
+    return F.array_size(F.array_distinct(toks))
+
+
+N_CHARS = TextStat(F.length, lambda t: f"length({t})")
+N_TOKENS = TextStat(lambda t: F.regexp_count(t, F.lit(TOKEN_CLASS)),
+                    lambda t: f"len(regexp_extract_all({t}, '{TOKEN_CLASS}'))")
+N_SYMBOLS = TextStat(lambda t: F.regexp_count(t, F.lit(SYMBOL_CLASS)),
+                     lambda t: f"len(regexp_extract_all({t}, '{SYMBOL_CLASS}'))")
+# distinct case-folded tokens, taken from the runs N_TOKENS counts
+N_DISTINCT = TextStat(_distinct_tokens, lambda t: (
+    f"len(list_distinct(regexp_extract_all(lower(translate("
+    f"{t}, '{CASE_PRE[0]}', '{CASE_PRE[1]}')), '{TOKEN_CLASS}')))"))
+RULE_INPUTS = {"n_chars": N_CHARS, "n_tokens": N_TOKENS,
+               "n_symbols": N_SYMBOLS, "n_distinct": N_DISTINCT}
+
+
+def rule_inputs_sql(text: str) -> str:
+    """SELECT-list of the four keep-rule inputs of SQL expression ``text``."""
+    return ",\n         ".join(
+        f"{stat.sql(text)} AS {name}" for name, stat in RULE_INPUTS.items()
+    )
+
+
 # ---------------------------------------------------------------------------
 # Spark side (Column expressions — JVM, codegen)
 # ---------------------------------------------------------------------------
 
 def spark_text_features(text: Column) -> dict[str, Column]:
     """Build the feature Columns for a text column."""
-    n_chars = F.length(text)
-    n_tokens = F.regexp_count(text, F.lit(TOKEN_CLASS))
-    n_symbols = F.regexp_count(text, F.lit(SYMBOL_CLASS))
-    tokens = F.split(F.trim(F.lower(text)), r"\s+")
-    # split('') yields [''] — guard via n_tokens
-    n_distinct = F.when(n_tokens > 0, F.array_size(F.array_distinct(tokens))).otherwise(F.lit(0))
+    chars, tokens = N_CHARS.spark(text), N_TOKENS.spark(text)
     n_stop = F.regexp_count(F.lower(text), F.lit(_STOPWORD_RE.replace("(?i)", "")))
-    symbol_ratio = F.when(n_chars > 0, n_symbols / n_chars).otherwise(F.lit(0.0))
-    distinct_ratio = F.when(n_tokens > 0, n_distinct / n_tokens).otherwise(F.lit(1.0))
-    stopword_ratio = F.when(n_tokens > 0, n_stop / n_tokens).otherwise(F.lit(0.0))
+    symbol_ratio = F.when(chars > 0, N_SYMBOLS.spark(text) / chars).otherwise(F.lit(0.0))
+    distinct_ratio = F.when(tokens > 0, N_DISTINCT.spark(text) / tokens).otherwise(F.lit(1.0))
+    stopword_ratio = F.when(tokens > 0, n_stop / tokens).otherwise(F.lit(0.0))
     quality = (
-        F.least(n_tokens / F.lit(20.0), F.lit(1.0)) * 0.4
+        F.least(tokens / F.lit(20.0), F.lit(1.0)) * 0.4
         + (F.lit(1.0) - F.least(symbol_ratio * 2, F.lit(1.0))) * 0.3
         + F.least(stopword_ratio * 4, F.lit(1.0)) * 0.3
     )
     return {
-        "n_chars": n_chars.cast("int"),
-        "n_tokens": n_tokens.cast("int"),
+        "n_chars": chars.cast("int"),
+        "n_tokens": tokens.cast("int"),
         "symbol_ratio": symbol_ratio.cast("double"),
         "distinct_token_ratio": distinct_ratio.cast("double"),
         "stopword_ratio": stopword_ratio.cast("double"),

@@ -21,9 +21,10 @@ in one DuckDB SQL statement:
   the 49×49 LM → ``avg`` log-prob → ``exp(-m)`` clamped to the same
   sentinel. Measured max relative ppl difference vs the numpy scorer on
   the full fixture: 3e-14 — far inside the keep-threshold margin;
-- all other features reuse the already-oracled SQL specs (textstats
-  regexes, the langid model spec, window-function conversation
-  features) with thresholds interpolated from the SAME
+- the text-stat inputs and langid come from the SQL generated from
+  their one definitions (``functions/textstats`` builders, the
+  ``functions/langid`` model table), the conversation features from
+  window functions, and the thresholds from the SAME
   :class:`..pipeline.rules.Thresholds` object the Spark side uses.
 
 Cited reference behavior: the reference evaluates quality rules and
@@ -34,7 +35,13 @@ BASELINE quality_filter tier contract.
 
 from __future__ import annotations
 
+from ..functions.langid import (
+    _LATIN_BONUS, FOLD, LANGS, MIN_SCORE, MODEL, NONWORD, UNKNOWN, WORD_ASCII,
+    Feature,
+)
+from ..functions.langid import PREFIX_CHARS as LANGID_PREFIX
 from ..functions.perplexity import PPL_MAX, PREFIX_CHARS, _ALPHABET, _CORPUS
+from ..functions.textstats import rule_inputs_sql
 from .rules import Thresholds
 
 _V = len(_ALPHABET) + 1  # 49 classes: alphabet + OOV
@@ -61,72 +68,84 @@ _CLS_TEMPLATE = """
   )
 """
 
-# langid model spec (functions/langid.py) re-expressed as DuckDB/RE2
-# score expressions over the lowered 400-char prefix — the ONE table
-# behind every langid oracle (this pipeline oracle, langid_documents,
-# lang_confusion_documents), so they cannot drift apart. Order = argmax
-# tie order = functions/langid.py LANGS. ``__S__`` is the prefix column.
-LANGID_SQL_SCORES: list[tuple[str, str]] = [
-    ("en",
-     r"len(regexp_extract_all(__S__, '\bthe\b|\band\b|\bof\b|\bis\b|\bto\b|\bwith\b|\bfor\b'))*3.0"
-     r" + len(regexp_extract_all(__S__, 'th|ing|ion'))*1.0"
-     r" + len(regexp_extract_all(__S__, '[a-z]'))*0.05"),
-    ("fr",
-     r"len(regexp_extract_all(__S__, '[éèêàâçùûîôœ]'))*2.0"
-     r" + len(regexp_extract_all(__S__, '\ble\b|\bla\b|\bles\b|\bet\b|\bde\b|\bdes\b|\bavec\b|\bchaque\b'))*3.0"
-     r" + len(regexp_extract_all(__S__, '[a-z]'))*0.02"),
-    ("de",
-     r"len(regexp_extract_all(__S__, '[äöüß]'))*2.0"
-     r" + len(regexp_extract_all(__S__, '\bder\b|\bdie\b|\bdas\b|\bund\b|\bmit\b|\bjeden\b|\büber\b'))*3.0"
-     r" + len(regexp_extract_all(__S__, 'sch|ung'))*1.0"
-     r" + len(regexp_extract_all(__S__, '[a-z]'))*0.02"),
-    ("ru", r"len(regexp_extract_all(__S__, '[Ѐ-ӿ]'))*2.0"),
-    ("zh", r"len(regexp_extract_all(__S__, '[一-鿿]'))*2.0"),
-    ("es",
-     r"len(regexp_extract_all(__S__, '[ñ¿¡]'))*2.0"
-     r" + len(regexp_extract_all(__S__, '\bel\b|\blos\b|\blas\b|\buna\b|\bpor\b|\bcon\b|\bcomo\b|\bpero\b'))*3.0"
-     r" + len(regexp_extract_all(__S__, '[a-z]'))*0.02"),
-    ("pt",
-     r"len(regexp_extract_all(__S__, '[ãõ]'))*2.0"
-     r" + len(regexp_extract_all(__S__, '\bnão\b|\buma\b|\bdos\b|\bdas\b|\bmas\b|\bsão\b|\btambém\b|\bem\b'))*3.0"
-     r" + len(regexp_extract_all(__S__, '[a-z]'))*0.02"),
-    ("it",
-     r"len(regexp_extract_all(__S__, '[ìò]'))*2.0"
-     r" + len(regexp_extract_all(__S__, '\bil\b|\bdella\b|\bnella\b|\bche\b|\bper\b|\bsono\b|\bnon\b|\bgli\b'))*3.0"
-     r" + len(regexp_extract_all(__S__, '[a-z]'))*0.02"),
-    ("ja", r"len(regexp_extract_all(__S__, '[ぁ-ヿ]'))*2.0"),
-]
+def _sql_str(s: str) -> str:
+    return "'" + s.replace("'", "''") + "'"
 
 
-def langid_scored_select(col: str = "s") -> str:
-    """SELECT-list of per-language score expressions over prefix ``col``."""
-    return ",\n        ".join(
-        f"{expr.replace('__S__', col)} AS {lang}"
-        for lang, expr in LANGID_SQL_SCORES
-    )
+def _re_class(ranges: list[tuple[int, int]]) -> str:
+    """RE2 character class of code-point ranges (merged, escaped)."""
+    merged: list[tuple[int, int]] = []
+    for lo, hi in sorted(ranges):
+        if merged and merged[-1][1] + 1 >= lo:
+            lo, hi = merged[-1][0], max(hi, merged.pop()[1])
+        merged.append((lo, hi))
+    return "[" + "".join(
+        f"\\x{{{lo:x}}}" + (f"-\\x{{{hi:x}}}" if hi > lo else "") for lo, hi in merged
+    ) + "]"
 
 
-def langid_label_case() -> str:
-    """The model's argmax as a SQL CASE chain: first language in LANGS
-    order whose score >= every later language's score; 'und' below the
-    MIN_SCORE floor."""
-    langs = [lang for lang, _ in LANGID_SQL_SCORES]
-    clauses = [f"WHEN greatest({', '.join(langs)}) < 0.5 THEN 'und'"]
-    for i, lang in enumerate(langs[:-1]):
-        cond = " AND ".join(f"{lang} >= {r}" for r in langs[i + 1:])
+def _word_run_re() -> str:
+    """RE2 pattern of one maximal run of langid word characters."""
+    ranges, lo = [(ord(c), ord(c)) for c in WORD_ASCII], 0x80
+    for c in sorted(NONWORD):
+        ranges.append((lo, ord(c) - 1))
+        lo = ord(c) + 1
+    return _re_class(ranges + [(lo, 0x10FFFF)]) + "+"
+
+
+def _feature_counts_sql(f: Feature) -> list[str]:
+    """Hit counts of one MODEL feature over prefix ``s`` and its word
+    runs ``w``."""
+    if f.kind == "word":
+        words = ", ".join(map(_sql_str, f.items))
+        return [f"len(list_filter(w, x -> x IN ({words})))"]
+    if f.kind == "ngram":
+        return [f"(len(string_split(s, {_sql_str(g)})) - 1)" for g in f.items]
+    if f.kind == "char":
+        return [f"(length(s) - length(translate(s, {_sql_str(''.join(f.items))}, '')))"]
+    return [f"len(regexp_extract_all(s, '{_re_class([f.items])}'))"]
+
+
+def _score_sql(lang: str) -> str:
+    terms = [
+        f"CAST({count} AS DOUBLE) * {f.weight!r}::DOUBLE"
+        for f in MODEL if f.lang == lang for count in _feature_counts_sql(f)
+    ]
+    if lang in _LATIN_BONUS:
+        terms.append(f"CAST(latin AS DOUBLE) * {_LATIN_BONUS[lang]!r}::DOUBLE")
+    return " + ".join(terms) or "0.0"
+
+
+def langid_sql(src: str, keys: tuple[str, ...] = (), text: str = "text") -> str:
+    """``SELECT keys…, score_<lang>…, lang FROM src``: the langid model's
+    per-language scores of column ``text`` and their argmax (first in
+    LANGS order on ties, UNKNOWN below MIN_SCORE), generated from
+    functions/langid.MODEL — the one DuckDB twin of ``langid_frame``
+    behind every langid oracle."""
+    k = "".join(f"{c}, " for c in keys)
+    cols = [f"score_{lang}" for lang in LANGS]
+    scores = ",\n      ".join(f"{_score_sql(lang)} AS {c}" for lang, c in zip(LANGS, cols))
+    clauses = [f"WHEN greatest({', '.join(cols)}) < {MIN_SCORE!r} THEN '{UNKNOWN}'"]
+    for i, (lang, col) in enumerate(zip(LANGS[:-1], cols)):
+        cond = " AND ".join(f"{col} >= {r}" for r in cols[i + 1:])
         clauses.append(f"WHEN {cond} THEN '{lang}'")
-    clauses.append(f"ELSE '{langs[-1]}'")
-    return "CASE\n        " + "\n        ".join(clauses) + " END"
-
-
-LANGID_SCORE_SQL = f"""
-    SELECT __KEYS__, {langid_label_case()} AS lang
-    FROM (
-      SELECT __KEYS__,
-        {langid_scored_select('sl')}
-      FROM __SCORE_SRC__
-    )
-"""
+    clauses.append(f"ELSE '{LANGS[-1]}'")
+    case = "\n    ".join(clauses)
+    latin = _re_class([(ord("a"), ord("z"))])
+    # the prefix: the first PREFIX_CHARS characters, NUL removed, folded
+    prefix = (f"translate(replace(substr(coalesce({text}, ''), 1, {LANGID_PREFIX}), chr(0), ''),"
+              f" {_sql_str(''.join(FOLD))}, {_sql_str(''.join(FOLD.values()))})")
+    return f"""SELECT *, CASE
+    {case} END AS lang
+FROM (
+  SELECT {k}
+      {scores}
+  FROM (
+    SELECT {k}s, regexp_extract_all(s, '{_word_run_re()}') AS w,
+           len(regexp_extract_all(s, '{latin}')) AS latin
+    FROM (SELECT {k}{prefix} AS s FROM {src})
+  )
+)"""
 
 
 def ppl_chain_ctes() -> str:
@@ -177,6 +196,18 @@ ppl AS (
 )"""
 
 
+def heuristic_rules_sql(t: Thresholds) -> str:
+    """``r_len``, ``r_symbol`` and ``r_repetition`` over the rule-input
+    columns (``textstats.rule_inputs_sql``), as ``rules.rule_columns``
+    and ``textstats.spark_text_features`` define them."""
+    return f"""(n_chars >= 1 AND n_chars <= {t.max_chars}) AS r_len,
+    (CASE WHEN n_chars > 0 THEN CAST(n_symbols AS DOUBLE) / n_chars ELSE 0.0 END
+       <= {t.max_symbol_ratio}) AS r_symbol,
+    (n_tokens < {t.repetition_min_tokens} OR
+     CASE WHEN n_tokens > 0 THEN CAST(n_distinct AS DOUBLE) / n_tokens ELSE 1.0 END
+       >= {t.min_distinct_ratio}) AS r_repetition"""
+
+
 def keep_flags_oracle_sql(
     parquet_path: str, t: Thresholds | None = None, by_lang: bool = False
 ) -> str:
@@ -190,27 +221,17 @@ def keep_flags_oracle_sql(
     keep_rate) — the fairness/mix view of the pipeline's labels.
     """
     t = t or Thresholds()
-    assert t.allowed_langs == ("en",), "SQL oracle encodes the default langs"
-    langid = (
-        LANGID_SCORE_SQL
-        .replace("__KEYS__", "conv_id, turn_idx")
-        .replace("__SCORE_SRC__", "feat")
-    )
-    return rf"""
+    return f"""
 WITH t AS (
   SELECT conv_id, turn_idx, role, tool, text FROM read_parquet('{parquet_path}')
 ),
 feat AS (
   SELECT conv_id, turn_idx, role, tool,
-         length(coalesce(text,'')) AS n_chars,
-         len(regexp_extract_all(coalesce(text,''), '\S+')) AS n_tokens,
-         len(regexp_extract_all(coalesce(text,''), '[!-/:-@\[-`{{-~]')) AS n_symbols,
-         len(list_distinct(string_split_regex(trim(lower(coalesce(text,''))), '\s+'))) AS n_distinct,
-         lower(substr(coalesce(text, ''), 1, 400)) AS sl
+         {rule_inputs_sql("coalesce(text, '')")}
   FROM t
 ),
 lang AS (
-{langid}
+{langid_sql("t", ("conv_id", "turn_idx"))}
 ),
 {ppl_chain_ctes()},
 conv AS (
@@ -234,13 +255,8 @@ viol AS (
 ),
 flags AS (
   SELECT conv_id, turn_idx, lang,
-    (n_chars >= 1 AND n_chars <= {t.max_chars}) AS r_len,
-    (CASE WHEN n_chars > 0 THEN CAST(n_symbols AS DOUBLE)/n_chars ELSE 0 END
-       <= {t.max_symbol_ratio}) AS r_symbol,
-    (n_tokens < {t.repetition_min_tokens} OR
-     CAST(CASE WHEN n_tokens > 0 THEN n_distinct ELSE 0 END AS DOUBLE)
-       / n_tokens >= {t.min_distinct_ratio}) AS r_repetition,
-    (lang = 'en') AS r_lang,
+    {heuristic_rules_sql(t)},
+    (lang IN ({', '.join(map(_sql_str, t.allowed_langs))})) AS r_lang,
     (ppl <= {t.max_ppl}) AS r_ppl,
     (role IN ('user','assistant','tool','system')
        AND ((tool IS NOT NULL) = (role = 'tool'))) AS r_role,

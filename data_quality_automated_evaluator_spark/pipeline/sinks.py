@@ -482,10 +482,20 @@ class QualitySink:
     def read_turns(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self.turns_dir)
 
-    def read_stats(self, spark: SparkSession, time_interval: str = "1d") -> DataFrame:
+    def read_stats(
+        self, spark: SparkSession, time_interval: str | None = None
+    ) -> DataFrame:
         """Combined interval stats at one granularity, folded from the
         per-partition partials (equivalent to interval_rule_stats over the
-        whole written table, without scanning it)."""
+        whole written table, without scanning it). Without
+        ``time_interval``, the sink's one partials tree is read: none gives
+        an empty frame, several raise ``ValueError``."""
+        if time_interval is None:
+            root = self.stats_partials_dir
+            trees = sorted(os.listdir(root)) if os.path.isdir(root) else []
+            if len(trees) > 1:
+                raise ValueError(f"stats partials hold intervals {trees}; pass one")
+            time_interval = (trees or ["1d"])[0]
         return spark.createDataFrame(
             combine_rule_partials(self._partials_dir(time_interval)), RULE_STATS_SCHEMA
         )

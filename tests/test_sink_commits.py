@@ -275,6 +275,21 @@ def test_artifact_schema_pinned(spark, src, tmp_path, interval):
     assert sink.read_stats(spark, interval).dtypes == STATS_DTYPES
 
 
+def test_read_stats_reads_the_one_interval_tree(spark, src, tmp_path):
+    """Without an interval, read_stats reads the sink's one partials tree:
+    empty before any run, the 1h tree after a 1h run, and an error naming
+    both trees once a 1d run adds a second."""
+    sink = QualitySink(str(tmp_path / "out"))
+    assert sink.read_stats(spark).count() == 0
+    sink.run(src, time_interval="1h")
+    got = sink.read_stats(spark).toPandas()
+    assert len(got) > 0
+    pd.testing.assert_frame_equal(got, sink.read_stats(spark, "1h").toPandas())
+    sink.run(src, time_interval="1d")
+    with pytest.raises(ValueError, match=r"1d.*1h"):
+        sink.read_stats(spark)
+
+
 def _rewrite_with_spark(spark, path: str, partition_by: list[str]) -> None:
     """Replace a driver-written tree by the same rows written with
     Spark's parquet writer (``_SUCCESS`` marker, ``.crc`` side files)."""
