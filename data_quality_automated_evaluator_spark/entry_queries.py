@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from .functions.textstats import (
     N_CHARS,
+    N_STOPWORDS,
     N_SYMBOLS,
     N_TOKENS,
     bpe_token_count_sql,
@@ -65,16 +66,6 @@ def _round_doubles(df: DataFrame, digits: int = 6) -> DataFrame:
         else:
             exprs.append(F.col(f_.name))
     return df.select(*exprs)
-
-
-
-def _carry_cached(outer: DataFrame, inner: DataFrame) -> DataFrame:
-    """Propagate the operator's caller-owned cleanup hook through the
-    .select()/.orderBy() wrappers (plain Python attributes do not survive
-    DataFrame transformations); dedup.release_cached(result) then works on
-    what queries() hands back."""
-    outer._persisted_inputs = getattr(inner, "_persisted_inputs", [])
-    return outer
 
 
 @register("quality_pipeline_transcripts")  # rows-only: needs the transcripts
@@ -447,14 +438,12 @@ def dedup_exact_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_stats_documents",
-    oracle=rf"""
+    oracle=f"""
     SELECT doc_id,
            {N_CHARS.sql("text")} AS n_chars,
            {N_TOKENS.sql("text")} AS n_tokens,
            {N_SYMBOLS.sql("text")} AS n_symbols,
-           length(regexp_extract_all(lower(text),
-             '\b(?:the|and|of|is|to|a|in|for|with|on|it|this|that|we|our|an|be|as|at|by)\b'))
-             AS n_stopwords,
+           {N_STOPWORDS.sql("text")} AS n_stopwords,
            md5(lower(trim(text))) AS fingerprint
     FROM documents ORDER BY doc_id
     """,
@@ -462,9 +451,6 @@ def dedup_exact_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_stats_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting, symbol counting, stopword counting, content
     fingerprint — the text-analysis feature set, JVM-side only."""
-    from .functions.textstats import STOPWORDS
-
-    stop_re = r"\b(?:" + "|".join(STOPWORDS) + r")\b"
     df = _t(spark, sf_dir, "documents")
     text = F.col("text")
     return df.select(
@@ -472,7 +458,7 @@ def text_stats_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         N_CHARS.spark(text).alias("n_chars"),
         N_TOKENS.spark(text).alias("n_tokens"),
         N_SYMBOLS.spark(text).alias("n_symbols"),
-        F.regexp_count(F.lower("text"), F.lit(stop_re)).alias("n_stopwords"),
+        N_STOPWORDS.spark(text).alias("n_stopwords"),
         F.md5(F.lower(F.trim("text"))).alias("fingerprint"),
     ).orderBy("doc_id")
 
@@ -563,10 +549,9 @@ def embedding_pairs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = _t(spark, sf_dir, "embeddings")
     inner = exact_cosine_pairs(e, threshold=0.5)
-    return _carry_cached(
+    return (
         inner.select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
-        .orderBy("id_a", "id_b"),
-        inner,
+        .orderBy("id_a", "id_b")
     )
 
 
@@ -617,10 +602,9 @@ def minhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     inner = minhash_lsh_dedup_pairs(
         docs.unionAll(mutated), threshold=0.6, num_perm=64, bands=32
     )
-    return _carry_cached(
+    return (
         inner.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-        .orderBy("id_a", "id_b"),
-        inner,
+        .orderBy("id_a", "id_b")
     )
 
 
@@ -703,8 +687,7 @@ def fingerprint_candidates_documents(spark: SparkSession, sf_dir: str) -> DataFr
         .withColumn("doc_id", F.col("doc_id") + 100000)
         .withColumn("text", F.concat(F.col("text"), F.lit(" tail")))
     )
-    inner = fingerprint_overlap_pairs(docs.unionAll(mutated), min_shared=4)
-    return _carry_cached(inner.orderBy("id_a", "id_b"), inner)
+    return fingerprint_overlap_pairs(docs.unionAll(mutated), min_shared=4).orderBy("id_a", "id_b")
 
 
 # Planted repetition probes: a keyword-stuffed doc and a looping doc so
@@ -1126,9 +1109,7 @@ def simhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5-nibble variant, value-checked end-to-end: the DuckDB oracle
     rebuilds the SAME 64-bit signatures from the same block expressions
     (operators/dedup.py simhash_block_expr), so emitted pairs AND hamming
-    values must agree bit-for-bit. The Arrow/numpy simhash
-    (simhash_dedup_pairs) remains pytest-gated as the alternative
-    backend."""
+    values must agree bit-for-bit."""
     from .operators.dedup import simhash_md5_pairs
 
     docs = (
@@ -1139,8 +1120,7 @@ def simhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("doc_id", F.col("doc_id") + 100000)
         .withColumn("text", F.concat(F.col("text"), F.lit(" tail")))
     )
-    inner = simhash_md5_pairs(docs.unionAll(mutated), max_hamming=3)
-    return _carry_cached(inner.orderBy("id_a", "id_b"), inner)
+    return simhash_md5_pairs(docs.unionAll(mutated), max_hamming=3).orderBy("id_a", "id_b")
 
 
 @register(
@@ -4550,10 +4530,9 @@ def conv_near_dup_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
         num_perm=64,
         bands=32,
     )
-    return _carry_cached(
+    return (
         inner.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
-        .orderBy("id_a", "id_b"),
-        inner,
+        .orderBy("id_a", "id_b")
     )
 
 
@@ -4640,8 +4619,7 @@ def nb_langid_confusion_documents(
         .select("lang", "text")
         .filter("doc_id < 400")
     )
-    inner = nb_langid_confusion(docs, "lang")
-    return _carry_cached(inner, inner)
+    return nb_langid_confusion(docs, "lang")
 
 
 # --------------------------------------------------------------------------
@@ -5549,7 +5527,7 @@ def editdist_near_dup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("id_a", "id_b", "n_shared", "dist", "maxlen")
         .orderBy("id_a", "id_b")
     )
-    return _carry_cached(out, cand)
+    return out
 
 
 def _rrf_oracle() -> str:

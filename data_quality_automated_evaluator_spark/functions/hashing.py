@@ -57,20 +57,6 @@ def minhash_batch(texts: pd.Series, k: int = 5, num_perm: int = 64, seed: int = 
     return pd.Series(out, index=texts.index)
 
 
-def simhash_batch(texts: pd.Series, k: int = 5) -> pd.Series:
-    """64-bit SimHash over char shingles → Series[int64]."""
-    out = np.zeros(len(texts), dtype=np.int64)
-    for i, t in enumerate(texts.fillna("").astype(str)):
-        sh = char_shingles(t, k)
-        if len(sh) == 0:
-            continue
-        bits = ((sh[:, None] >> np.arange(64, dtype=np.uint64)) & _U64(1)).astype(np.int64)
-        counts = bits.sum(axis=0)
-        sim = (counts * 2 > len(sh)).astype(np.uint64)
-        out[i] = (sim << np.arange(64, dtype=np.uint64)).sum(dtype=np.uint64).astype(np.int64)
-    return pd.Series(out, index=texts.index)
-
-
 def jaccard_pairs_batch(ta: pd.Series, tb: pd.Series, k: int = 5) -> pd.Series:
     """Exact k-shingle Jaccard for a batch of text PAIRS.
 
@@ -100,14 +86,3 @@ def jaccard_pairs_batch(ta: pd.Series, tb: pd.Series, k: int = 5) -> pd.Series:
     return pd.Series(out, index=ta.index)
 
 
-def rolling_fingerprint_batch(texts: pd.Series, k: int = 8, size: int = 8) -> pd.Series:
-    """Winnowing-style document fingerprint: the ``size`` smallest k-gram
-    rolling hashes per document (sorted list[int64]). Identical documents
-    get identical fingerprints; near-identical documents share most
-    entries — a compact containment-check key."""
-    out = []
-    for t in texts.fillna("").astype(str):
-        sh = char_shingles(t, k)
-        sh.sort()
-        out.append(sh[:size].view(np.int64).tolist())
-    return pd.Series(out, index=texts.index)

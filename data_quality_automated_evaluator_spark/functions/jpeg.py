@@ -1,20 +1,12 @@
 """Baseline JPEG codec — pure stdlib + numpy, no third-party deps.
 
-The chart exporter's ``fmt="jpeg"`` encoder, with its decoder as the
-round-trip reference. ``decode_jpeg`` implements baseline sequential DCT (ITU-T T.81 / ISO
-10918-1): marker walk, DQT (8/16-bit), SOF0, DHT, DRI/RSTn restart
-handling, per-MCU Huffman entropy decode with byte-stuffing, dequant +
-dezigzag, orthonormal-matrix IDCT (numpy), chroma upsampling for any
-(h, v) sampling factors, and JFIF full-range YCbCr→RGB. ``encode_jpeg``
-writes baseline 4:4:4 (or grayscale) with the Annex-K quantization
+The chart exporter's ``fmt="jpeg"`` encoder; its round-trip tests
+decode with the baseline sequential DCT decoder (ITU-T T.81 / ISO
+10918-1) in ``tests/image_decoders.py``. ``encode_jpeg`` writes
+baseline 4:4:4 or 4:2:0 (or grayscale) with the Annex-K quantization
 tables scaled by the libjpeg quality formula and the Annex-K "typical"
-Huffman tables.
-
-Scope is honest: progressive (SOF2), arithmetic coding, and 12-bit
-precision raise :class:`JpegFormatError` — the dominant web-image case
-(baseline sequential, the overwhelming majority of JPEGs) decodes for
-real. The entropy loop is per-block Python (fine for chart-sized
-images); the IDCT and color math are vectorized.
+Huffman tables. The entropy loop is per-block Python (fine for
+chart-sized images); the DCT and color math are vectorized.
 
 Everything here derives from the public JPEG specification; the DCT
 matrix identity is F = T·B·Tᵀ with the orthonormal DCT-II matrix T, so
@@ -27,7 +19,7 @@ import struct
 
 import numpy as np
 
-__all__ = ["JpegFormatError", "decode_jpeg", "encode_jpeg"]
+__all__ = ["JpegFormatError", "encode_jpeg"]
 
 
 class JpegFormatError(ValueError):
@@ -124,20 +116,6 @@ def _dct_matrix() -> np.ndarray:
 _T = _dct_matrix()          # orthonormal: forward F = T B Tᵀ, inverse B = Tᵀ F T
 
 
-def _build_decode_table(bits: list[int], vals: list[int]) -> dict[tuple[int, int], int]:
-    """Canonical Huffman: {(length, code) -> symbol}."""
-    table: dict[tuple[int, int], int] = {}
-    code = 0
-    vi = 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            table[(length, code)] = vals[vi]
-            vi += 1
-            code += 1
-        code <<= 1
-    return table
-
-
 def _build_encode_table(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
     """Canonical Huffman: {symbol -> (code, length)}."""
     out: dict[int, tuple[int, int]] = {}
@@ -155,250 +133,6 @@ def _build_encode_table(bits: list[int], vals: list[int]) -> dict[int, tuple[int
 # ---------------------------------------------------------------------------
 # Decoder
 # ---------------------------------------------------------------------------
-
-class _BitReader:
-    """MSB-first bit reader over entropy-coded data with 0xFF00
-    byte-stuffing removal; RSTn markers are handled by the caller."""
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.buf = 0
-        self.nbits = 0
-
-    def _fill(self) -> None:
-        while self.nbits <= 24:
-            if self.pos >= len(self.data):
-                # pad with 1-bits past the end (T.81 F.2.2.5 allows the
-                # final byte's tail to be padding)
-                self.buf = (self.buf << 8) | 0xFF
-                self.nbits += 8
-                continue
-            b = self.data[self.pos]
-            self.pos += 1
-            if b == 0xFF:
-                nxt = self.data[self.pos] if self.pos < len(self.data) else 0
-                if nxt == 0x00:
-                    self.pos += 1  # stuffed byte
-                else:
-                    # a real marker: rewind and pad — caller resyncs
-                    self.pos -= 1
-                    self.buf = (self.buf << 8) | 0xFF
-                    self.nbits += 8
-                    continue
-            self.buf = (self.buf << 8) | b
-            self.nbits += 8
-
-    def read_bit(self) -> int:
-        if self.nbits == 0:
-            self._fill()
-        self.nbits -= 1
-        return (self.buf >> self.nbits) & 1
-
-    def read_bits(self, n: int) -> int:
-        if n == 0:
-            return 0
-        while self.nbits < n:
-            self._fill()
-        self.nbits -= n
-        v = (self.buf >> self.nbits) & ((1 << n) - 1)
-        self.buf &= (1 << self.nbits) - 1
-        return v
-
-    def decode_huff(self, table: dict[tuple[int, int], int]) -> int:
-        code = 0
-        for length in range(1, 17):
-            code = (code << 1) | self.read_bit()
-            sym = table.get((length, code))
-            if sym is not None:
-                return sym
-        raise JpegFormatError("invalid huffman code in entropy stream")
-
-
-def _extend(v: int, size: int) -> int:
-    """T.81 F.2.2.1 EXTEND: map ``size``-bit magnitude to signed value."""
-    if size == 0:
-        return 0
-    if v < (1 << (size - 1)):
-        return v - (1 << size) + 1
-    return v
-
-
-def decode_jpeg(data: bytes) -> np.ndarray:
-    """Decode baseline sequential JPEG bytes → HxWx3 uint8 RGB (grayscale
-    is replicated to 3 channels). Raises :class:`JpegFormatError` for
-    non-JPEG or unsupported (progressive/arithmetic/12-bit) input."""
-    if len(data) < 4 or data[:2] != b"\xff\xd8":
-        raise JpegFormatError("not a JPEG (missing SOI)")
-    quant: dict[int, np.ndarray] = {}
-    huff_dc: dict[int, dict] = {}
-    huff_ac: dict[int, dict] = {}
-    restart_interval = 0
-    frame = None           # (h, w, components)
-    pos = 2
-    while pos + 4 <= len(data):
-        if data[pos] != 0xFF:
-            raise JpegFormatError("marker desync")
-        marker = data[pos + 1]
-        if marker == 0xD9:  # EOI
-            break
-        if marker == 0x01 or 0xD0 <= marker <= 0xD7:
-            pos += 2
-            continue
-        (seg_len,) = struct.unpack(">H", data[pos + 2 : pos + 4])
-        seg = data[pos + 4 : pos + 2 + seg_len]
-        if marker == 0xDB:  # DQT
-            i = 0
-            while i < len(seg):
-                prec, tid = seg[i] >> 4, seg[i] & 0x0F
-                i += 1
-                if prec == 0:
-                    q = np.frombuffer(seg[i : i + 64], dtype=np.uint8).astype(np.int64)
-                    i += 64
-                else:
-                    q = np.frombuffer(seg[i : i + 128], dtype=">u2").astype(np.int64)
-                    i += 128
-                nat = np.zeros(64, dtype=np.int64)
-                nat[ZIGZAG] = q
-                quant[tid] = nat.reshape(8, 8)
-        elif marker == 0xC4:  # DHT
-            i = 0
-            while i < len(seg):
-                cls, tid = seg[i] >> 4, seg[i] & 0x0F
-                bits = list(seg[i + 1 : i + 17])
-                n = sum(bits)
-                vals = list(seg[i + 17 : i + 17 + n])
-                table = _build_decode_table(bits, vals)
-                (huff_dc if cls == 0 else huff_ac)[tid] = table
-                i += 17 + n
-        elif marker == 0xC0 or marker == 0xC1:  # SOF0/1 (baseline/ext seq)
-            if seg[0] != 8:
-                raise JpegFormatError("only 8-bit precision supported")
-            h, w = struct.unpack(">HH", seg[1:5])
-            ncomp = seg[5]
-            comps = []
-            for c in range(ncomp):
-                cid, hv, qid = seg[6 + 3 * c : 9 + 3 * c]
-                comps.append({"id": cid, "h": hv >> 4, "v": hv & 0x0F, "q": qid})
-            frame = (int(h), int(w), comps)
-        elif marker in (0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB,
-                        0xCD, 0xCE, 0xCF):
-            raise JpegFormatError(
-                f"unsupported SOF marker 0x{marker:02x} (progressive/"
-                "arithmetic/hierarchical) — baseline sequential only"
-            )
-        elif marker == 0xDD:  # DRI
-            (restart_interval,) = struct.unpack(">H", seg[:2])
-        elif marker == 0xDA:  # SOS — entropy data follows
-            if frame is None:
-                raise JpegFormatError("SOS before SOF")
-            ns = seg[0]
-            scan_map = {}
-            for c in range(ns):
-                cid, tids = seg[1 + 2 * c], seg[2 + 2 * c]
-                scan_map[cid] = (tids >> 4, tids & 0x0F)
-            scan_start = pos + 2 + seg_len
-            return _decode_scan(
-                data, scan_start, frame, scan_map, quant, huff_dc, huff_ac,
-                restart_interval,
-            )
-        pos += 2 + seg_len
-    raise JpegFormatError("no SOS marker found")
-
-
-def _decode_scan(data, start, frame, scan_map, quant, huff_dc, huff_ac,
-                 restart_interval) -> np.ndarray:
-    h, w, comps = frame
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    mcus_x = -(-w // (8 * hmax))
-    mcus_y = -(-h // (8 * vmax))
-    planes = []
-    for c in comps:
-        planes.append(
-            np.zeros((mcus_y * c["v"] * 8, mcus_x * c["h"] * 8), dtype=np.float64)
-        )
-    # split entropy stream on restart markers so each interval resets
-    # cleanly (T.81 E.1.2); the reader itself never crosses a marker
-    reader = _BitReader(data[start:])
-    preds = [0] * len(comps)
-    mcu_count = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if restart_interval and mcu_count and mcu_count % restart_interval == 0:
-                _skip_to_rst(reader)
-                preds = [0] * len(comps)
-            for ci, c in enumerate(comps):
-                dc_t = huff_dc[scan_map[c["id"]][0]]
-                ac_t = huff_ac[scan_map[c["id"]][1]]
-                q = quant[c["q"]]
-                for by in range(c["v"]):
-                    for bx in range(c["h"]):
-                        block = _decode_block(reader, dc_t, ac_t, preds, ci, q)
-                        y0 = (my * c["v"] + by) * 8
-                        x0 = (mx * c["h"] + bx) * 8
-                        planes[ci][y0 : y0 + 8, x0 : x0 + 8] = block
-            mcu_count += 1
-    # upsample to full MCU-padded resolution, then crop
-    full_h, full_w = mcus_y * vmax * 8, mcus_x * hmax * 8
-    out_planes = []
-    for ci, c in enumerate(comps):
-        p = planes[ci]
-        ry, rx = vmax // c["v"], hmax // c["h"]
-        if ry > 1 or rx > 1:
-            p = np.repeat(np.repeat(p, ry, axis=0), rx, axis=1)
-        out_planes.append(p[:full_h, :full_w][:h, :w])
-    if len(out_planes) == 1:
-        g = np.clip(np.round(out_planes[0] + 128.0), 0, 255).astype(np.uint8)
-        return np.stack([g, g, g], axis=2)
-    y = out_planes[0] + 128.0
-    cb = out_planes[1]
-    cr = out_planes[2]
-    r = y + 1.402 * cr
-    g = y - 0.344136 * cb - 0.714136 * cr
-    b = y + 1.772 * cb
-    rgb = np.stack([r, g, b], axis=2)
-    return np.clip(np.round(rgb), 0, 255).astype(np.uint8)
-
-
-def _skip_to_rst(reader: _BitReader) -> None:
-    """Advance the reader past the next RSTn marker and reset bit state."""
-    d, p = reader.data, reader.pos
-    while p + 1 < len(d):
-        if d[p] == 0xFF and 0xD0 <= d[p + 1] <= 0xD7:
-            reader.pos = p + 2
-            reader.buf = 0
-            reader.nbits = 0
-            return
-        p += 1
-    raise JpegFormatError("expected restart marker")
-
-
-def _decode_block(reader, dc_t, ac_t, preds, ci, q) -> np.ndarray:
-    zz = np.zeros(64, dtype=np.float64)
-    size = reader.decode_huff(dc_t)
-    diff = _extend(reader.read_bits(size), size)
-    preds[ci] += diff
-    zz[0] = preds[ci]
-    k = 1
-    while k < 64:
-        rs = reader.decode_huff(ac_t)
-        run, size = rs >> 4, rs & 0x0F
-        if size == 0:
-            if run == 15:  # ZRL
-                k += 16
-                continue
-            break  # EOB
-        k += run
-        if k > 63:
-            raise JpegFormatError("AC run past end of block")
-        zz[k] = _extend(reader.read_bits(size), size)
-        k += 1
-    coef = np.zeros(64, dtype=np.float64)
-    coef[ZIGZAG] = zz
-    coef = coef.reshape(8, 8) * q
-    return _T.T @ coef @ _T  # IDCT (values still centered on 0)
-
 
 # ---------------------------------------------------------------------------
 # Encoder
@@ -463,7 +197,7 @@ def encode_jpeg(
 
     ``subsampling``: ``"444"`` (no chroma subsampling — max fidelity) or
     ``"420"`` (2x2 box-averaged chroma — the dominant web-JPEG shape;
-    also exercises the decoder's interleaved-MCU + upsampling path).
+    the dominant web-JPEG shape's interleaved MCUs).
     ``restart_interval`` > 0 writes DRI and emits RSTn markers every N
     MCUs (resyncable streams, the large-scan production layout).
     """

@@ -70,10 +70,3 @@ def scrub_batch(texts: pd.Series) -> pd.Series:
     return out
 
 
-def scrub_text(text: str | None) -> str | None:
-    """Single-string variant (oracle/tests convenience)."""
-    if text is None:
-        return None
-    for pat, repl in _COMPILED:
-        text = pat.sub(repl, text)
-    return text

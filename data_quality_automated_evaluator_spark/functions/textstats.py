@@ -5,7 +5,9 @@ whole-stage codegen — these are the hot-path features at 10^12 rows).
 Each keep-rule input (:data:`RULE_INPUTS`) is one Spark Column builder
 plus one DuckDB SQL builder over the same class constants, which avoid
 what means different things in Java and RE2: ``\s`` (Java's includes
-``\x0B``), ``\b`` (ASCII-only in RE2) and bare ``lower()`` (:data:`CASE_PRE`).
+``\x0B``), ``\b`` (ASCII-only in RE2; :data:`WORD_CLASS`) and bare
+``lower()`` (:data:`CASE_PRE`). The stopword count (:data:`N_STOPWORDS`)
+is built the same way.
 
 Features:
 - ``n_chars``   code-point length
@@ -32,12 +34,17 @@ TOKEN_CLASS = r"[^\t\n\x0B\f\r ]+"
 # are mapped first: Java lowers İ to "i̇" and a word-final Σ to "ς",
 # DuckDB to "i" and "σ"
 CASE_PRE = ("İΣ", "iσ")
+# A word is a run of what Java's \b counts as word characters, spelled
+# out (RE2's \b knows ASCII only): letters, decimal digits and "_", and
+# the non-spacing marks after them (Java's \b alone leaves out a mark
+# right after "_"). Two classes, not a repeated group: Java's regex
+# recurses once per group iteration and overflows its stack on a long word.
+WORD_CLASS = r"[\p{L}\p{Nd}_][\p{L}\p{Mn}\p{Nd}_]*"
 
 STOPWORDS = [
     "the", "and", "of", "is", "to", "a", "in", "for", "with", "on",
     "it", "this", "that", "we", "our", "an", "be", "as", "at", "by",
 ]
-_STOPWORD_RE = r"(?i)\b(?:" + "|".join(STOPWORDS) + r")\b"
 
 # GPT-2-flavored pretokenizer, restricted to constructs with identical
 # semantics in Java regex and RE2/DuckDB (no lookahead — RE2 lacks it):
@@ -86,6 +93,15 @@ N_DISTINCT = TextStat(_distinct_tokens, lambda t: (
     f"{t}, '{CASE_PRE[0]}', '{CASE_PRE[1]}')), '{TOKEN_CLASS}')))"))
 RULE_INPUTS = {"n_chars": N_CHARS, "n_tokens": N_TOKENS,
                "n_symbols": N_SYMBOLS, "n_distinct": N_DISTINCT}
+# words equal to a stopword after lower(); DuckDB is given Java's "i̇"
+# for İ, so a lowered İ stays a non-ASCII word on both sides
+_STOP_IN = ", ".join(f"'{w}'" for w in STOPWORDS)
+N_STOPWORDS = TextStat(
+    lambda t: F.array_size(F.filter(
+        F.regexp_extract_all(F.lower(t), F.lit(WORD_CLASS), F.lit(0)),
+        lambda w: w.isin(STOPWORDS))),
+    lambda t: (f"len(list_filter(regexp_extract_all(lower(replace({t}, 'İ', 'i\u0307')), "
+               f"'{WORD_CLASS}'), w -> w IN ({_STOP_IN})))"))
 
 
 def rule_inputs_sql(text: str) -> str:
@@ -102,7 +118,7 @@ def rule_inputs_sql(text: str) -> str:
 def spark_text_features(text: Column) -> dict[str, Column]:
     """Build the feature Columns for a text column."""
     chars, tokens = N_CHARS.spark(text), N_TOKENS.spark(text)
-    n_stop = F.regexp_count(F.lower(text), F.lit(_STOPWORD_RE.replace("(?i)", "")))
+    n_stop = N_STOPWORDS.spark(text)
     symbol_ratio = F.when(chars > 0, N_SYMBOLS.spark(text) / chars).otherwise(F.lit(0.0))
     distinct_ratio = F.when(tokens > 0, N_DISTINCT.spark(text) / tokens).otherwise(F.lit(1.0))
     stopword_ratio = F.when(tokens > 0, n_stop / tokens).otherwise(F.lit(0.0))

@@ -1,5 +1,5 @@
-"""Published web-scale document filters (Gopher + C4 style) as pure
-Catalyst expressions — zero shuffle, zero Python.
+"""Published web-scale document filters (Gopher + C4 style) — zero
+shuffle.
 
 The rule families re-implemented here are public knowledge:
 
@@ -22,12 +22,13 @@ The rule families re-implemented here are public knowledge:
   (code) marker.
 
 Scale shape: every metric is computed per document from a split-word /
-split-line ARRAY via higher-order functions (``transform``, ``filter``,
-``aggregate``) inside one projection — a map-only plan with no Exchange
-and no Python worker, which is exactly what a 100 TB document filter
-must be. The duplicate/top-gram statistics use a single ``aggregate``
-pass over the SORTED gram array (run-length walk) instead of an
-explode + groupBy, so no per-gram shuffle ever happens.
+split-line ARRAY inside one projection — a map-only plan with no
+Exchange, which is exactly what a 100 TB document filter must be. The
+quality and C4 metrics are Catalyst higher-order functions
+(``transform``, ``filter``, ``aggregate``); the duplicate/top-gram
+counts of the repetition filters come from one Arrow batch kernel
+(:func:`gopher_repetition_stats_arrow`) instead of an explode + groupBy,
+so no per-gram shuffle ever happens.
 
 Cited reference behavior: the reference evaluates per-column quality
 rules over a single table (reference evaluate.py); these named filter
@@ -37,13 +38,13 @@ graft brief requires.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 __all__ = [
     "GOPHER_STOP_WORDS",
     "augmented_lines",
-    "gopher_repetition_columns",
+    "gopher_repetition_stats_arrow",
     "gopher_quality_columns",
     "c4_columns",
 ]
@@ -101,123 +102,6 @@ def augmented_lines(text: Column, doc_id: Column) -> Column:
         ),
     )
     return F.concat(base, extras)
-
-
-def _run_stats(arr: Column) -> Column:
-    """One ``aggregate`` pass over the SORTED array computing duplicate
-    and mode statistics from run lengths — the shuffle-free equivalent
-    of explode → groupBy → count per document.
-
-    Returns ``struct(dup_elems, dup_chars, best_cnt, best_val)``:
-    - ``dup_elems``: number of elements belonging to a value occurring ≥ 2
-    - ``dup_chars``: sum of ``length(value)`` over those elements
-    - ``best_cnt`` / ``best_val``: the mode and its count (ties broken
-      toward the lexicographically smallest value, so the result is
-      deterministic)
-    """
-    acc_t = (
-        "struct<prev:string,run:bigint,dup_elems:bigint,dup_chars:bigint,"
-        "best_cnt:bigint,best_val:string>"
-    )
-    init = F.expr(
-        "named_struct('prev', cast(null as string), 'run', 0L, "
-        "'dup_elems', 0L, 'dup_chars', 0L, 'best_cnt', 0L, "
-        "'best_val', cast(null as string))"
-    ).cast(acc_t)
-
-    def close_run(acc):
-        # fold the just-finished run (acc.prev × acc.run) into the stats
-        run_dups = F.when(acc.run >= 2, acc.run).otherwise(F.lit(0))
-        # guard the chars term the same way: 0 * length(NULL prev) is
-        # NULL in SQL and would poison the whole fold
-        run_dup_chars = F.when(
-            acc.run >= 2, acc.run * F.length(acc.prev)
-        ).otherwise(F.lit(0))
-        better = (acc.run > acc.best_cnt) | (
-            (acc.run == acc.best_cnt) & (acc.prev < acc.best_val)
-        )
-        return (
-            acc.dup_elems + run_dups,
-            acc.dup_chars + run_dup_chars,
-            F.when(better, acc.run).otherwise(acc.best_cnt),
-            F.when(better, acc.prev).otherwise(acc.best_val),
-        )
-
-    def merge(acc, x):
-        same = acc.prev.isNotNull() & (x == acc.prev)
-        de, dc, bc, bv = close_run(acc)
-        return F.when(
-            same,
-            F.struct(
-                acc.prev.alias("prev"),
-                (acc.run + 1).alias("run"),
-                acc.dup_elems.alias("dup_elems"),
-                acc.dup_chars.alias("dup_chars"),
-                acc.best_cnt.alias("best_cnt"),
-                acc.best_val.alias("best_val"),
-            ),
-        ).otherwise(
-            F.struct(
-                x.alias("prev"),
-                F.lit(1).cast("bigint").alias("run"),
-                de.alias("dup_elems"),
-                dc.alias("dup_chars"),
-                bc.alias("best_cnt"),
-                bv.alias("best_val"),
-            )
-        )
-
-    def finish(acc):
-        de, dc, bc, bv = close_run(acc)
-        return F.struct(
-            de.alias("dup_elems"),
-            dc.alias("dup_chars"),
-            bc.alias("best_cnt"),
-            bv.alias("best_val"),
-        )
-
-    return F.aggregate(F.sort_array(arr), init, merge, finish)
-
-
-def _ngrams(words: Column, n: int) -> Column:
-    """Word n-grams joined with single spaces (empty when < n words)."""
-    return F.when(
-        F.size(words) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(words) - (n - 1)),
-            lambda i: F.array_join(F.slice(words, i, n), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
-def gopher_repetition_columns(
-    lines: Column, words: Column, doc_chars: Column
-) -> dict[str, Column]:
-    """Gopher repetition metrics from pre-split line/word arrays.
-
-    ``doc_chars`` is the character count the fractions normalize by
-    (length of the reconstructed document). All fractions are rounded
-    to 6 places to pin float parity with the SQL oracle.
-    """
-    safe_chars = F.nullif(doc_chars, F.lit(0))
-    line_stats = _run_stats(lines)
-    out: dict[str, Column] = {
-        "n_lines": F.size(lines).cast("bigint"),
-        "dup_line_frac": F.round(
-            line_stats.dup_elems / F.nullif(F.size(lines), F.lit(0)), 6
-        ),
-        "dup_line_char_frac": F.round(line_stats.dup_chars / safe_chars, 6),
-    }
-    for n in (2, 3, 4):
-        g = _run_stats(_ngrams(words, n))
-        out[f"top_{n}gram_char_frac"] = F.round(
-            F.coalesce(g.best_cnt * F.length(g.best_val), F.lit(0))
-            / safe_chars,
-            6,
-        )
-    g5 = _run_stats(_ngrams(words, 5))
-    out["dup_5gram_char_frac"] = F.round(g5.dup_chars / safe_chars, 6)
-    return out
 
 
 def gopher_quality_columns(lines: Column, words: Column) -> dict[str, Column]:
@@ -327,11 +211,10 @@ def c4_columns(lines: Column) -> dict[str, Column]:
 
 
 def gopher_repetition_stats_arrow():
-    """Arrow-batched twin of the repetition statistics consumed by
-    ``gopher_repetition_columns`` — EXACT integer parity, ~6x faster.
+    """Arrow-batched repetition statistics — EXACT integer parity with
+    the Catalyst run-length folds (``tests/references.py``), ~6x faster.
 
-    The Catalyst run-length folds (`_run_stats` over `_ngrams`) evaluate
-    interpreted (higher-order functions are CodegenFallback), paying
+    Those folds evaluate interpreted (higher-order functions are CodegenFallback), paying
     per-element lambda dispatch for every gram of every document.  All
     the statistics are pure INTEGER counts, so a Counter-based batch
     computation is parity-safe by construction: same n-gram strings

@@ -1,4 +1,4 @@
-"""Pure-stdlib lossless WebP (VP8L) codec: real encode/decode.
+"""Pure-stdlib lossless WebP (VP8L) encoder.
 
 Closes the last chart-export parity gap with the reference
 (``plot.py:67-71`` offers png/jpeg/webp/svg/pdf through plotly/kaleido).
@@ -8,10 +8,8 @@ color cache, one prefix-code group, literal pixels plus LZ77
 back-references for horizontal (distance 1) and vertical (distance =
 width) runs — the two run shapes that dominate chart rasters — with
 real canonical prefix codes built per image by package-merge
-(length-limited, optimal). The decoder covers that subset plus color
-cache and the simple-code forms, i.e. any transform-free single-group
-VP8L stream; transforms / meta prefix images / lossy VP8 raise
-``WebpFormatError`` so callers fall through to their honest seams.
+(length-limited, optimal). Its round-trip tests decode with
+``tests/image_decoders.py``.
 
 Reference: the public "WebP Lossless Bitstream Specification"
 (RFC 9649 §3-§5): LSB-first bit packing, DEFLATE-style canonical
@@ -31,7 +29,6 @@ _CL_ORDER = (17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15)
 _NUM_LEN_CODES = 24        # green symbols 256..279 are length prefix codes
 _NUM_DIST_CODES = 40
 _MAX_LZ_LEN = 4096         # largest value the 24 length prefix codes reach
-_HASH_MUL = 0x1E35A7BD     # color-cache hash (spec §4.2.3)
 
 
 class WebpFormatError(ValueError):
@@ -66,23 +63,6 @@ class _BitWriter:
             self._acc = 0
             self._n = 0
         return bytes(self._out)
-
-
-class _BitReader:
-    def __init__(self, data: bytes) -> None:
-        self._d = data
-        self._pos = 0      # bit position
-
-    def bits(self, n: int) -> int:
-        v = 0
-        for i in range(n):
-            p = self._pos + i
-            byte = p >> 3
-            if byte >= len(self._d):
-                raise WebpFormatError("truncated VP8L stream")
-            v |= ((self._d[byte] >> (p & 7)) & 1) << i
-        self._pos += n
-        return v
 
 
 # ---------------------------------------------------------------------------
@@ -129,44 +109,6 @@ def _canonical_codes(lengths: dict[int, int]) -> dict[int, tuple[int, int]]:
     return codes
 
 
-class _PrefixDecoder:
-    """Bit-by-bit canonical decode; a 0-length table returns its single
-    symbol without consuming bits (simple code with one symbol)."""
-
-    def __init__(self, lengths: dict[int, int]) -> None:
-        used = {s: ln for s, ln in lengths.items() if ln > 0}
-        if not used:
-            raise WebpFormatError("empty prefix code")
-        if len(used) == 1:
-            # libwebp treats a single-symbol code as 0 bits per symbol
-            (self._only,) = used
-            self._map: dict[tuple[int, int], int] = {}
-            return
-        self._only = None
-        self._map = {
-            (ln, code): s
-            for s, (code, ln) in _canonical_codes(used).items()
-        }
-
-    @classmethod
-    def single(cls, symbol: int) -> "_PrefixDecoder":
-        d = cls.__new__(cls)
-        d._only = symbol
-        d._map = {}
-        return d
-
-    def read(self, br: _BitReader) -> int:
-        if self._only is not None:
-            return self._only
-        code = 0
-        for ln in range(1, 16):
-            code = (code << 1) | br.bits(1)
-            sym = self._map.get((ln, code))
-            if sym is not None:
-                return sym
-        raise WebpFormatError("invalid prefix code in stream")
-
-
 # ---------------------------------------------------------------------------
 # LZ77 prefix-coded values (spec §4.2.2)
 
@@ -179,14 +121,6 @@ def _prefix_encode_value(v: int) -> tuple[int, int, int]:
     e = b - 1
     s = (x >> e) & 1
     return 2 * b + s, x & ((1 << e) - 1), e
-
-
-def _prefix_decode_value(code: int, br: _BitReader) -> int:
-    if code < 4:
-        return code + 1
-    e = (code - 2) >> 1
-    offset = (2 + (code & 1)) << e
-    return offset + br.bits(e) + 1
 
 
 # ---------------------------------------------------------------------------
@@ -283,52 +217,6 @@ def _write_prefix_code(
     arr = [lengths.get(s, 0) for s in range(alphabet)]
     _write_code_lengths(bw, arr)
     return _canonical_codes(lengths)
-
-
-def _read_prefix_code(br: _BitReader, alphabet: int) -> _PrefixDecoder:
-    if br.bits(1):                        # simple
-        num_symbols = br.bits(1) + 1
-        if br.bits(1):
-            sym0 = br.bits(8)
-        else:
-            sym0 = br.bits(1)
-        if num_symbols == 1:
-            return _PrefixDecoder.single(sym0)
-        sym1 = br.bits(8)
-        return _PrefixDecoder({sym0: 1, sym1: 1})
-    num_codes = br.bits(4) + 4
-    cl_lengths: dict[int, int] = {}
-    for s in _CL_ORDER[:num_codes]:
-        cl_lengths[s] = br.bits(3)
-    cl_dec = _PrefixDecoder({s: ln for s, ln in cl_lengths.items() if ln})
-    max_symbol = alphabet
-    if br.bits(1):
-        length_nbits = 2 + 2 * br.bits(3)
-        max_symbol = 2 + br.bits(length_nbits)
-    lengths: dict[int, int] = {}
-    prev = 8
-    sym = 0
-    while sym < alphabet:
-        if max_symbol == 0:
-            break
-        max_symbol -= 1
-        c = cl_dec.read(br)
-        if c < 16:
-            if c:
-                lengths[sym] = c
-                prev = c
-            sym += 1
-        elif c == 16:
-            rep = 3 + br.bits(2)
-            for _ in range(rep):
-                if sym < alphabet:
-                    lengths[sym] = prev
-                sym += 1
-        elif c == 17:
-            sym += 3 + br.bits(3)
-        else:
-            sym += 11 + br.bits(7)
-    return _PrefixDecoder(lengths)
 
 
 # ---------------------------------------------------------------------------
@@ -443,114 +331,3 @@ def encode_webp(img: np.ndarray) -> bytes:
     if len(payload) & 1:
         chunk += b"\x00"
     return b"RIFF" + struct.pack("<I", 4 + len(chunk)) + b"WEBP" + chunk
-
-
-# ---------------------------------------------------------------------------
-# decode
-
-def decode_webp(data: bytes) -> np.ndarray:
-    """Lossless WebP bytes → uint8 array (H, W, 3) or (H, W, 4)."""
-    if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"WEBP":
-        raise WebpFormatError("not a WebP container")
-    pos = 12
-    payload = None
-    while pos + 8 <= len(data):
-        tag = data[pos:pos + 4]
-        (size,) = struct.unpack("<I", data[pos + 4:pos + 8])
-        body = data[pos + 8:pos + 8 + size]
-        if tag == b"VP8L":
-            payload = body
-            break
-        if tag in (b"VP8 ", b"VP8X"):
-            raise WebpFormatError(f"unsupported WebP variant {tag!r}")
-        pos += 8 + size + (size & 1)
-    if payload is None or not payload or payload[0] != 0x2F:
-        raise WebpFormatError("no VP8L chunk")
-    br = _BitReader(payload[1:])
-    w = br.bits(14) + 1
-    h = br.bits(14) + 1
-    br.bits(1)                      # alpha hint
-    if br.bits(3) != 0:
-        raise WebpFormatError("unknown VP8L version")
-    if br.bits(1):
-        raise WebpFormatError("VP8L transforms not supported")
-    cache_bits = 0
-    if br.bits(1):
-        cache_bits = br.bits(4)
-        if not 1 <= cache_bits <= 11:
-            raise WebpFormatError("invalid color cache size")
-    if br.bits(1):
-        raise WebpFormatError("meta prefix image not supported")
-    cache_size = (1 << cache_bits) if cache_bits else 0
-    g_dec = _read_prefix_code(br, 256 + _NUM_LEN_CODES + cache_size)
-    r_dec = _read_prefix_code(br, 256)
-    b_dec = _read_prefix_code(br, 256)
-    a_dec = _read_prefix_code(br, 256)
-    d_dec = _read_prefix_code(br, _NUM_DIST_CODES)
-    n = w * h
-    out = np.empty(n, np.uint32)
-    cache = [0] * cache_size
-    i = 0
-    while i < n:
-        s = g_dec.read(br)
-        if s < 256:
-            rr = r_dec.read(br)
-            bb = b_dec.read(br)
-            aa = a_dec.read(br)
-            px = (aa << 24) | (rr << 16) | (s << 8) | bb
-            out[i] = px
-            i += 1
-        elif s < 256 + _NUM_LEN_CODES:
-            length = _prefix_decode_value(s - 256, br)
-            dcode = _prefix_decode_value(d_dec.read(br), br)
-            dist = _plane_code_to_distance(w, dcode)
-            if dist > i or i + length > n:
-                raise WebpFormatError("back-reference out of range")
-            for k in range(length):
-                out[i + k] = out[i + k - dist]
-            if cache_size:
-                for k in range(length):
-                    px = int(out[i + k])
-                    cache[(_HASH_MUL * px & 0xFFFFFFFF) >> (32 - cache_bits)] = px
-            i += length
-            continue
-        else:
-            px = cache[s - 256 - _NUM_LEN_CODES]
-            out[i] = px
-            i += 1
-        if cache_size:
-            cache[(_HASH_MUL * int(px) & 0xFFFFFFFF) >> (32 - cache_bits)] = int(px)
-    a = (out >> 24).astype(np.uint8).reshape(h, w)
-    r = ((out >> 16) & 0xFF).astype(np.uint8).reshape(h, w)
-    g = ((out >> 8) & 0xFF).astype(np.uint8).reshape(h, w)
-    b = (out & 0xFF).astype(np.uint8).reshape(h, w)
-    if (a != 255).any():
-        return np.stack([r, g, b, a], axis=-1)
-    return np.stack([r, g, b], axis=-1)
-
-
-# spec §4.2.2: the first 120 distance codes are 2-D neighbor offsets
-_DIST_MAP = (
-    (0, 1), (1, 0), (1, 1), (-1, 1), (0, 2), (2, 0), (1, 2), (-1, 2),
-    (2, 1), (-2, 1), (2, 2), (-2, 2), (0, 3), (3, 0), (1, 3), (-1, 3),
-    (3, 1), (-3, 1), (2, 3), (-2, 3), (3, 2), (-3, 2), (0, 4), (4, 0),
-    (1, 4), (-1, 4), (4, 1), (-4, 1), (3, 3), (-3, 3), (2, 4), (-2, 4),
-    (4, 2), (-4, 2), (0, 5), (3, 4), (-3, 4), (4, 3), (-4, 3), (5, 0),
-    (1, 5), (-1, 5), (5, 1), (-5, 1), (2, 5), (-2, 5), (5, 2), (-5, 2),
-    (4, 4), (-4, 4), (3, 5), (-3, 5), (5, 3), (-5, 3), (0, 6), (6, 0),
-    (1, 6), (-1, 6), (6, 1), (-6, 1), (2, 6), (-2, 6), (6, 2), (-6, 2),
-    (4, 5), (-4, 5), (5, 4), (-5, 4), (3, 6), (-3, 6), (6, 3), (-6, 3),
-    (0, 7), (7, 0), (1, 7), (-1, 7), (5, 5), (-5, 5), (7, 1), (-7, 1),
-    (4, 6), (-4, 6), (6, 4), (-6, 4), (2, 7), (-2, 7), (7, 2), (-7, 2),
-    (3, 7), (-3, 7), (7, 3), (-7, 3), (5, 6), (-5, 6), (6, 5), (-6, 5),
-    (8, 0), (4, 7), (-4, 7), (7, 4), (-7, 4), (8, 1), (8, 2), (6, 6),
-    (-6, 6), (2, 8), (-2, 8), (7, 5), (-7, 5), (5, 7), (-5, 7), (8, 3),
-    (-3, 8), (3, 8), (6, 7), (-6, 7), (7, 6), (-7, 6), (8, 4),
-)
-
-
-def _plane_code_to_distance(w: int, code: int) -> int:
-    if code > 120:
-        return code - 120
-    dx, dy = _DIST_MAP[code - 1]
-    return max(1, dy * w + dx)

@@ -26,7 +26,7 @@ Scale shape per round:
 The per-round DataFrame loop is inherently iterative (each round's
 counts depend on the previous merge), which is why this operator is
 pytest-golden-gated against a pure-Python reference implementation
-(:func:`bpe_train_reference`) rather than SQL-oracled — the documented
+(``tests/references.py``) rather than SQL-oracled — the documented
 carve-out for iterative algorithms.
 
 Cited reference behavior: the reference has no tokenizer training; this
@@ -37,10 +37,10 @@ counts assume.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["word_counts", "bpe_train", "bpe_train_reference", "bpe_segment"]
+__all__ = ["word_counts", "bpe_train", "bpe_segment"]
 
 # lineage checkpoint cadence: each round nests another fold into the
 # vocab frame's plan; cut it every few rounds (the dominant per-round
@@ -137,41 +137,6 @@ def bpe_train(
         if (it + 1) % _CHECKPOINT_EVERY == 0:
             vocab = vocab.localCheckpoint()
     return merges, vocab
-
-
-def bpe_train_reference(
-    texts: list[str], n_merges: int
-) -> list[tuple[str, str, int]]:
-    """Pure-Python reference BPE trainer (the pytest golden)."""
-    from collections import Counter
-
-    wc: Counter[str] = Counter()
-    for t in texts:
-        for w in (t or "").lower().split():
-            wc[w] += 1
-    vocab: dict[tuple[str, ...], int] = {tuple(w): n for w, n in wc.items()}
-    merges: list[tuple[str, str, int]] = []
-    for _ in range(n_merges):
-        pc: Counter[tuple[str, str]] = Counter()
-        for sym, n in vocab.items():
-            for i in range(len(sym) - 1):
-                pc[(sym[i], sym[i + 1])] += n
-        if not pc:
-            break
-        best = min(pc.items(), key=lambda kv: (-kv[1], kv[0]))
-        (a, b), cnt = best
-        merges.append((a, b, cnt))
-        out: dict[tuple[str, ...], int] = {}
-        for sym, n in vocab.items():
-            acc: list[str] = []
-            for x in sym:
-                if acc and acc[-1] == a and x == b:
-                    acc[-1] = a + b
-                else:
-                    acc.append(x)
-            out[tuple(acc)] = out.get(tuple(acc), 0) + n
-        vocab = out
-    return merges
 
 
 def bpe_segment(

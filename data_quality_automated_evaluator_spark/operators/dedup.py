@@ -23,11 +23,11 @@ Five families, each scale-shaped for 100 TB inputs:
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.hashing import jaccard_pairs_batch, minhash_batch, simhash_batch
+from ..functions.hashing import jaccard_pairs_batch, minhash_batch
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -45,32 +45,12 @@ def _minhash_fn(texts: pd.Series) -> pd.Series:
     return minhash_batch(texts)
 
 
-def _simhash_fn(texts: pd.Series) -> pd.Series:
-    return simhash_batch(texts)
-
-
 minhash_udf = F.pandas_udf(_minhash_fn, returnType=T.ArrayType(T.LongType()))
-simhash_udf = F.pandas_udf(_simhash_fn, returnType=T.LongType())
 
 
 # ---------------------------------------------------------------------------
 # exact dedup
 # ---------------------------------------------------------------------------
-
-def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Keep one representative (min id) per exact text digest.
-
-    groupBy on md5(text): one hash shuffle keyed by digest — uniform by
-    construction, no skew; survives any scale the shuffle does.
-    """
-    digest = F.md5(F.col(text_col))
-    return (
-        df.withColumn("_digest", digest)
-        .withColumn("_rn", F.row_number().over(Window.partitionBy("_digest").orderBy(id_col)))
-        .filter(F.col("_rn") == 1)
-        .drop("_digest", "_rn")
-    )
-
 
 def exact_dup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """(digest, n_docs, keep_id) for every duplicate group (n_docs > 1)."""
@@ -88,17 +68,6 @@ def exact_dup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_i
 # ---------------------------------------------------------------------------
 # MinHash + LSH
 # ---------------------------------------------------------------------------
-
-def release_cached(df: DataFrame) -> None:
-    """Unpersist any cached inputs a dedup operator attached to its result
-    (``_persisted_inputs``). Call after the consuming action — long-lived
-    sessions otherwise accumulate signature blocks in the block manager."""
-    for cached in getattr(df, "_persisted_inputs", ()):
-        try:
-            cached.unpersist()
-        except Exception:
-            pass
-
 
 def minhash_lsh_candidates(
     df: DataFrame,
@@ -145,16 +114,12 @@ def minhash_lsh_candidates(
     banded = banded.persist()
     a = banded.select(F.col("_id").alias("id_a"), "band_idx", "band_hash")
     b = banded.select(F.col("_id").alias("id_b"), "band_idx", "band_hash")
-    out = (
+    return (
         a.join(b, ["band_idx", "band_hash"])
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .distinct()
     )
-    # caller-owned cleanup: after the consuming action,
-    # release_cached(out) drops the signature blocks from the cache
-    out._persisted_inputs = [banded]
-    return out
 
 
 def minhash_lsh_dedup_pairs(
@@ -189,71 +154,15 @@ def minhash_lsh_dedup_pairs(
     def jaccard_udf(ta: pd.Series, tb: pd.Series) -> pd.Series:
         return jaccard_pairs_batch(ta, tb, shingle_k)
 
-    out = (
+    return (
         pairs.withColumn("jaccard", jaccard_udf("_ta", "_tb"))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    out._persisted_inputs = getattr(cands, "_persisted_inputs", [])
-    return out
 
 
 # ---------------------------------------------------------------------------
-# SimHash
-# ---------------------------------------------------------------------------
-
-def simhash_dedup_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-) -> DataFrame:
-    """Near-duplicate pairs with SimHash Hamming distance ≤ max_hamming.
-
-    Pigeonhole candidate generation: the 64-bit signature splits into
-    max_hamming+1 blocks; any pair within distance d matches on ≥1 whole
-    block → per-block equijoins, then exact Hamming verification.
-    """
-    nblocks = max_hamming + 1
-    bits = 64 // nblocks
-    sig = _spread(df.select(id_col, text_col)).select(
-        F.col(id_col).alias("_id"), simhash_udf(F.col(text_col)).alias("_sim")
-    )
-    # persisted for the same branch-twice reason as minhash_lsh_candidates
-    sig = sig.persist()
-    blocks = sig.select(
-        "_id", "_sim",
-        F.posexplode(
-            F.array(*[
-                F.shiftrightunsigned(F.col("_sim"), i * bits).bitwiseAND(
-                    F.lit((1 << bits) - 1)
-                )
-                for i in range(nblocks)
-            ])
-        ).alias("block_idx", "block_val"),
-    )
-    a = blocks.select(F.col("_id").alias("id_a"), F.col("_sim").alias("sim_a"),
-                      "block_idx", "block_val")
-    b = blocks.select(F.col("_id").alias("id_b"), F.col("_sim").alias("sim_b"),
-                      "block_idx", "block_val")
-    cands = (
-        a.join(b, ["block_idx", "block_val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "sim_a", "sim_b")
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
-    out = (
-        cands.withColumn("hamming", hamming.cast("int"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
-    out._persisted_inputs = [sig]
-    return out
-
-
-# ---------------------------------------------------------------------------
-# SimHash, pure-Catalyst variant (md5-nibble signatures, SQL-reproducible)
+# SimHash (md5-nibble signatures, pure Catalyst, SQL-reproducible)
 # ---------------------------------------------------------------------------
 
 # SimHash from md5 nibbles: bit b of the 64-bit signature lives in hex
@@ -299,9 +208,7 @@ def simhash_md5_pairs(
     Pigeonhole with 4 16-bit blocks guarantees exactness for
     max_hamming ≤ 3: any pair within distance 3 agrees on ≥1 whole block.
     The block equijoin is the only pair-touching shuffle; signatures are
-    64 map-side partial sums per doc (one HashAggregate). Reference
-    parity: same near-dup contract as the Arrow-backed
-    :func:`simhash_dedup_pairs`; this is the all-JVM plan shape.
+    64 map-side partial sums per doc (one HashAggregate).
     """
     if max_hamming > 3:
         raise ValueError("4×16-bit pigeonhole is exact only for max_hamming <= 3")
@@ -347,13 +254,11 @@ def simhash_md5_pairs(
     hamming = sum(
         F.bit_count(F.col(f"a{i}").bitwiseXOR(F.col(f"c{i}"))) for i in range(4)
     )
-    out = (
+    return (
         cands.withColumn("hamming", hamming.cast("int"))
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
     )
-    out._persisted_inputs = [sigs]
-    return out
 
 
 def simhash_md5_pairs_cte(
@@ -421,9 +326,8 @@ def fingerprint_md5(
     smallest md5 hashes of the document's distinct ``k_gram``-char grams
     (min-k sketch). Identical documents get identical fingerprints;
     near-identical documents share most entries — a compact containment
-    key. Pure Catalyst and exactly SQL-reproducible (md5 + sort + slice),
-    unlike the numpy :func:`rolling_fingerprint_batch` whose splitmix64
-    hashes have no SQL counterpart. Returns (id, fp: array<string>).
+    key. Pure Catalyst and exactly SQL-reproducible (md5 + sort + slice).
+    Returns (id, fp: array<string>).
     """
     grams = df.select(
         F.col(id_col).alias("_id"),
@@ -458,15 +362,13 @@ def fingerprint_overlap_pairs(
     entries = sigs.select("_id", F.explode("fp").alias("h"))
     a = entries.select(F.col("_id").alias("id_a"), "h")
     b = entries.select(F.col("_id").alias("id_b"), "h")
-    out = (
+    return (
         a.join(b, "h")
         .filter(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
     )
-    out._persisted_inputs = [sigs]
-    return out
 
 
 def fingerprint_oracle_sql(

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["content_digest_expr", "table_diff", "diff_summary"]
+__all__ = ["content_digest_expr", "table_diff"]
 
 _NULL = "__null__"
 
@@ -73,13 +73,3 @@ def table_diff(
     return j
 
 
-def diff_summary(
-    old: DataFrame,
-    new: DataFrame,
-    key_cols: list[str] | None = None,
-    compare_cols: list[str] | None = None,
-) -> DataFrame:
-    """(status, n) counts including ``unchanged`` — one extra hash
-    aggregation over the diff frame."""
-    d = table_diff(old, new, key_cols, compare_cols, include_unchanged=True)
-    return d.groupBy("status").agg(F.count("*").alias("n"))

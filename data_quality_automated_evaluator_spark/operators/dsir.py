@@ -69,19 +69,8 @@ def _feats_col(text_col: str):
     return F.concat(ws, bigrams)
 
 
-def _bucket_col(feat, n_buckets: int):
-    # polynomial hash over code points; ASCII-only by construction
-    # ([a-z0-9 ] survives the split), so ascii()/unicode() agree
-    h = F.aggregate(
-        F.split(feat, ""),
-        F.lit(_SEED).cast("bigint"),
-        lambda acc, ch: (acc * 31 + F.ascii(ch)) % _MOD,
-    )
-    return (h % n_buckets).cast("int")
-
-
 def _bucket_udf(n_buckets: int):
-    """Arrow-vectorized twin of :func:`_bucket_col` over a whole
+    """Arrow-vectorized polynomial hash bucket over a whole
     feature ARRAY: returns ``array<int>`` of bucket ids per document.
 
     The Catalyst per-character fold evaluates interpreted once per

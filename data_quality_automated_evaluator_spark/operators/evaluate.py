@@ -61,20 +61,6 @@ class ColumnEvaluation:
     pct_outliers_zscore: float
     chart_bounds: tuple[float | None, float | None] = (None, None)
 
-    def as_dict(self) -> dict:
-        return {
-            "Title": self.title,
-            "Mean ± Std": (self.mean, self.std),
-            "Range [Min]": self.min,
-            "Range [Max]": self.max,
-            "Range": self.max - self.min if pd.notna(self.max) else None,
-            "Q1": self.q1,
-            "Q3": self.q3,
-            "IQR outliers, %": self.pct_outliers_iqr,
-            "Z-score outliers, %": self.pct_outliers_zscore,
-        }
-
-
 @dataclass
 class EvaluationResult:
     evaluations: list[ColumnEvaluation] = field(default_factory=list)

@@ -37,7 +37,6 @@ __all__ = [
     "html_to_text",
     "strip_oracle_expr",
     "extract_urls",
-    "extract_links",
     "domain_expr",
     "url_domain_stats",
     "URL_PATTERN",
@@ -124,16 +123,6 @@ def extract_urls(
     """All URLs in ``col`` as an array column (JVM regexp_extract_all)."""
     return df.withColumn(
         out, F.regexp_extract_all(F.col(col), F.lit(URL_PATTERN), 0)
-    )
-
-
-def extract_links(
-    df: DataFrame, col: str = "html", out: str = "links"
-) -> DataFrame:
-    """href targets from anchor/link markup (group-1 extraction)."""
-    return df.withColumn(
-        out,
-        F.regexp_extract_all(F.col(col), F.lit(r"(?i)href=\"([^\"]+)\""), 1),
     )
 
 

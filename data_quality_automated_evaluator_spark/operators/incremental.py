@@ -7,17 +7,10 @@ history. Reference capability: the evaluator's checkpoint/resume notion
 applied to dedup state (SURVEY §2.10); the store layout follows the
 same partition-granular idempotence rules as ``pipeline/sinks.py``.
 
-Two stores:
-
-- :class:`ExactDedupStore` — one row per distinct content digest ever
-  seen, ``(digest, keep_id)``. An increment is digested, deduped
-  within-batch, probed against the store, and only genuinely-new
-  digests are appended.
-- :class:`MinHashBandStore` — LSH band hashes ``(band_idx, band_hash,
-  doc_id)`` for every ingested doc. An increment's bands probe the
-  store for new-vs-history candidates and self-join for new-vs-new,
-  exactly like :func:`.dedup.minhash_lsh_candidates` but with history
-  already signed.
+The store, :class:`ExactDedupStore`, holds one row per distinct
+content digest ever seen, ``(digest, keep_id)``. An increment is
+digested, deduped within-batch, probed against the store, and only
+genuinely-new digests are appended.
 
 Scale shape (10^12 docs): the store is the BIG side and is never
 shuffled — it is laid out bucketed by join key (``bucket_table``:
@@ -37,7 +30,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["ExactDedupStore", "MinHashBandStore"]
+__all__ = ["ExactDedupStore"]
 
 
 class ExactDedupStore:
@@ -134,154 +127,13 @@ class ExactDedupStore:
         # lineage makes recomputation impossible; on Iceberg the same
         # guarantee comes from reading a pinned snapshot. The increment
         # is the small side by construction, so materializing it is
-        # bounded; callers release with dedup.release_cached(out).
+        # bounded.
         out = out.localCheckpoint(eager=True)
         new_rows = (
             out.filter("is_new")
             .select("digest", F.col(id_col).cast("long").alias("keep_id"))
         )
         self._append(new_rows)
-        out._persisted_inputs = [out]
         return out
 
 
-class MinHashBandStore:
-    """Append-only store of MinHash LSH band hashes per ingested doc.
-
-    History is signed exactly once (at its own ingestion); each increment
-    pays the signature UDF only for its own rows, then two band joins:
-    increment-bands ⋈ store-bands (new-vs-history) and the increment
-    self-join (new-vs-new). ``bucket_table`` co-locates the store on
-    ``band_hash`` the same way :class:`ExactDedupStore` does on digest.
-    """
-
-    def __init__(self, root: str, bucket_table: str | None = None,
-                 n_buckets: int = 16, num_perm: int = 64, bands: int = 16):
-        # the precompiled minhash_udf emits exactly 64 signature slots;
-        # a mismatched num_perm would slice past the array (empty band
-        # arrays hash identically for every doc → all-pairs blow-up),
-        # and bands must tile the signature or trailing perms silently
-        # drop. Fail loudly instead.
-        if num_perm != 64:
-            raise ValueError(
-                "num_perm must be 64 (the width minhash_udf emits; see "
-                "functions/hashing.minhash_batch for other widths)"
-            )
-        if num_perm % bands != 0:
-            raise ValueError("bands must divide num_perm evenly")
-        self.root = root
-        self.bands_dir = os.path.join(root, "bands")
-        self.bucket_table = bucket_table
-        self.n_buckets = n_buckets
-        self.num_perm = num_perm
-        self.bands = bands
-
-    def _read(self, spark: SparkSession) -> DataFrame | None:
-        if self.bucket_table:
-            if not spark.catalog.tableExists(self.bucket_table):
-                return None
-            return spark.table(self.bucket_table)
-        if not os.path.isdir(self.bands_dir):
-            return None
-        return spark.read.parquet(self.bands_dir)
-
-    def _append(self, new_rows: DataFrame) -> None:
-        if self.bucket_table:
-            (new_rows.write.mode("append")
-             .bucketBy(self.n_buckets, "band_hash").sortBy("band_hash")
-             .option("path", self.bands_dir)
-             .format("parquet").saveAsTable(self.bucket_table))
-        else:
-            new_rows.write.mode("append").parquet(self.bands_dir)
-
-    def _band_rows(self, docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
-        from .dedup import _spread, minhash_udf
-
-        r = self.num_perm // self.bands
-        sig = _spread(docs.select(id_col, text_col)).select(
-            F.col(id_col).alias("doc_id_"), minhash_udf(F.col(text_col)).alias("_sig")
-        )
-        return sig.select(
-            "doc_id_",
-            F.posexplode(
-                F.array(*[
-                    F.slice("_sig", i * r + 1, r).cast("array<string>")
-                    for i in range(self.bands)
-                ])
-            ).alias("band_idx", "band_sig"),
-        ).select(
-            F.col("doc_id_").cast("long").alias("doc_id"),
-            # same 64-bit construction as minhash_lsh_candidates, so a
-            # store written by one is probe-compatible with the other
-            F.xxhash64(F.concat_ws(",", "band_sig"), "band_idx").alias("band_hash"),
-        )
-
-    def ingest(
-        self,
-        docs: DataFrame,
-        text_col: str = "text",
-        id_col: str = "doc_id",
-    ) -> DataFrame:
-        """Sign the increment, emit candidate near-dup pairs, append bands.
-
-        Returns ``(id_a, id_b)`` with ``id_b`` in the increment and
-        ``id_a`` the earlier partner (historical doc or lower-id increment
-        doc). Verification (exact Jaccard over the texts) is the caller's
-        second stage, as in :func:`.dedup.minhash_lsh_dedup_pairs` — the
-        store holds signatures only, never text.
-        """
-        spark = docs.sparkSession
-        inc = self._band_rows(docs, text_col, id_col)
-        # the self-join branches the signature plan; checkpoint so the
-        # UDF runs once AND the later band append can't trigger a
-        # recompute (see ExactDedupStore.ingest on recacheByPath)
-        inc = inc.localCheckpoint(eager=True)
-        store = self._read(spark)
-        a = inc.select(F.col("doc_id").alias("id_b"), "band_hash")
-        vs_new = (
-            inc.select(F.col("doc_id").alias("id_a"), "band_hash")
-            .join(a, "band_hash")
-            .filter(F.col("id_a") < F.col("id_b"))
-        )
-        to_append = inc.select("doc_id", "band_hash")
-        if store is not None:
-            hist_pairs = (
-                store.select(F.col("doc_id").alias("id_a"), "band_hash")
-                .join(a, "band_hash")
-            )
-            # crash-retry idempotence: signatures are deterministic, so a
-            # doc whose bands are already in the store band-matches ITSELF
-            # (id_a == id_b) — those rows are (a) dropped from the
-            # candidate pairs (an equi-join never pairs a row with
-            # itself) and (b) reused as the already-appended set. The
-            # skip is at (doc_id, band_hash) granularity, NOT doc level:
-            # if a previous append crashed after writing only some of a
-            # doc's bands, a doc-level skip would permanently lose the
-            # remaining bands (weakening future candidate recall) —
-            # band-level anti-join backfills exactly the missing ones.
-            # No extra store scan: both sets come from the probe join the
-            # candidate search already pays for. doc_ids are immutable
-            # content ids — "retry" means identical text, hence
-            # identical band hashes.
-            already = (
-                hist_pairs.filter(F.col("id_a") == F.col("id_b"))
-                .select(F.col("id_b").alias("doc_id"), "band_hash")
-                .distinct()
-            )
-            vs_hist = hist_pairs.filter(F.col("id_a") != F.col("id_b"))
-            cands = vs_new.unionByName(vs_hist)
-            to_append = to_append.join(
-                already, ["doc_id", "band_hash"], "left_anti"
-            )
-        else:
-            cands = vs_new
-        # same self-read hazard as ExactDedupStore: pin the candidate set
-        # before the append makes the increment's bands part of "history"
-        out = cands.select("id_a", "id_b").distinct().localCheckpoint(eager=True)
-        out._persisted_inputs = [inc, out]
-        # pin the append set too — it reads the store (left_anti), which
-        # the append below mutates
-        to_append = to_append.localCheckpoint(eager=True)
-        self._append(to_append)
-        to_append.unpersist()
-        return out

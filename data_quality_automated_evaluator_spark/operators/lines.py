@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 
 __all__ = [
     "dedup_lines_within_doc",
-    "line_frequencies",
     "remove_boilerplate_lines",
 ]
 
@@ -34,22 +33,6 @@ def _lines(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return docs.select(
         F.col(id_col).alias("_id"),
         F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),
-    )
-
-
-def line_frequencies(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_line_chars: int = 1,
-) -> DataFrame:
-    """(line, n_docs) for every distinct line of at least
-    ``min_line_chars`` characters — the boilerplate candidate table."""
-    return (
-        _lines(docs, text_col, id_col)
-        .filter(F.length("line") >= min_line_chars)
-        .groupBy("line")
-        .agg(F.count_distinct("_id").alias("n_docs"))
     )
 
 

@@ -146,7 +146,7 @@ def nb_langid_confusion(
         .limit(1)
         .collect()[0]["lang"]
     )
-    out = (
+    return (
         ids.join(best, "_row", "left")
         .select(
             "lang", F.coalesce(F.col("pred"), F.lit(fallback)).alias("pred")
@@ -155,8 +155,6 @@ def nb_langid_confusion(
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy("lang", "pred")
     )
-    out._persisted_inputs = [base, vocab, counts]
-    return out
 
 
 def nb_langid_oracle_sql(

@@ -65,7 +65,6 @@ __all__ = [
     "pq_code_col_arrow",
     "pq_encode",
     "pq_adc_topk",
-    "pq_reconstruct_col",
     "ivfpq_topk",
     "pq_oracle_sql",
     "pq_adc_oracle_sql",
@@ -294,8 +293,8 @@ def ivfpq_topk(
     ``n_probe`` cells nearest the query, and rank the survivors by ADC.
 
     The FAISS-style scale composition: the cell filter prunes the scan
-    (on a cell-partitioned store it becomes partition pruning — see
-    similarity.ivf_write_partitioned), PQ codes shrink what's scored
+    (on a cell-partitioned store it becomes partition pruning), PQ codes
+    shrink what's scored
     32x, and the driver only ever holds the centroid/codebook metadata.
     With ``n_probe = len(centroids)`` this is exactly ``pq_adc_topk``
     (pinned by tests/test_pq.py)."""
@@ -313,20 +312,6 @@ def ivfpq_topk(
         pruned, codebooks, vec_col=vec_col, id_col=id_col, backend=backend
     )
     return pq_adc_topk(codes, codebooks, query, k=k, id_col=id_col)
-
-
-def pq_reconstruct_col(codebooks: list[list[list[float]]], codes: Column) -> Column:
-    """Decode codes back to the approximate vector (concat of the
-    selected centroids) — for reconstruction-error audits."""
-    cb = F.array(
-        *[
-            F.array(*[F.array(*[F.lit(float(x)) for x in c]) for c in sub])
-            for sub in codebooks
-        ]
-    )
-    return F.flatten(
-        F.zip_with(codes, cb, lambda c, rows: F.element_at(rows, c + 1))
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -22,7 +22,7 @@ def _bucket_expr(key_col: str) -> str:
     """0..65535 from the first 4 hex chars of md5(key) — shared verbatim
     with the DuckDB oracle. NULL keys coalesce to a sentinel so they hash
     deterministically into one bucket instead of evaluating the filter to
-    NULL and silently vanishing from BOTH splits."""
+    NULL and silently vanishing from every sample."""
     key = f"coalesce(cast({key_col} as string), '__null_key__')"
     nib = lambda j: (  # noqa: E731 — tiny local template
         f"(instr('0123456789abcdef', substr(md5({key}), {j}, 1)) - 1)"
@@ -36,21 +36,12 @@ def deterministic_sample(
     """Stable ``rate``-fraction sample keyed on ``key_col``.
 
     Row-identity-hashed, so the decision is independent of partitioning,
-    ordering, engine, and run count; complementary rates partition the
-    data exactly (a row is in the 0.25 sample iff it is not in the
-    complementary 0.75 holdout built with ``deterministic_holdout``).
+    ordering, engine, and run count; samples are nested in the rate (the
+    0.25 sample lies inside the 0.5 sample).
     Pure Catalyst — the filter runs inside the scan's codegen stage.
     """
     threshold = int(rate * _BUCKETS)
     return df.filter(F.expr(f"{_bucket_expr(key_col)} < {threshold}"))
-
-
-def deterministic_holdout(
-    df: DataFrame, rate: float, key_col: str = "doc_id"
-) -> DataFrame:
-    """The exact complement of :func:`deterministic_sample` at ``rate``."""
-    threshold = int(rate * _BUCKETS)
-    return df.filter(F.expr(f"{_bucket_expr(key_col)} >= {threshold}"))
 
 
 def sample_oracle_predicate(rate: float, key_col: str = "doc_id") -> str:

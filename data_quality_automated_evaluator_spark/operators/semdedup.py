@@ -36,17 +36,15 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from typing import Iterable
-
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .kmeans import kmeans_assign_col, kmeans_fit
+from .kmeans import kmeans_assign_col
 
-__all__ = ["semantic_dedup_dropped", "semantic_dedup"]
+__all__ = ["semantic_dedup_dropped"]
 
 
 def semantic_dedup_dropped(
@@ -104,33 +102,3 @@ def semantic_dedup_dropped(
     )
 
 
-def semantic_dedup(
-    df: DataFrame,
-    k: int = 4,
-    iters: int = 1,
-    tau: float = 0.8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """End-to-end SemDeDup: fit k-means (``operators/kmeans``), mark
-    within-cluster duplicates, and return the input ids with
-    ``(cell, is_dup, max_sim)`` — callers filter ``~is_dup`` to keep the
-    semantically unique subset."""
-    centroids = kmeans_fit(df, k=k, iters=iters, vec_col=vec_col, id_col=id_col)
-    dropped = semantic_dedup_dropped(
-        df, centroids, tau=tau, vec_col=vec_col, id_col=id_col
-    )
-    v = F.col(vec_col).cast("array<double>")
-    assigned = df.select(F.col(id_col).alias("vec_id"), v.alias("_v")).withColumn(
-        "cell", kmeans_assign_col(centroids, F.col("_v"))
-    )
-    return (
-        assigned.select("vec_id", "cell")
-        .join(dropped.select("vec_id", "max_sim"), "vec_id", "left")
-        .select(
-            "vec_id",
-            "cell",
-            F.col("max_sim").isNotNull().alias("is_dup"),
-            "max_sim",
-        )
-    )

@@ -112,49 +112,6 @@ def lsh_bucket_col(vec_col, planes: np.ndarray):
     return out.cast("long")
 
 
-def lsh_topk(
-    df: DataFrame,
-    query: list[float],
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_planes: int = 6,
-    n_tables: int = 4,
-    seed: int = 42,
-    multiprobe: int = 1,
-) -> DataFrame:
-    """ANN top-k via multi-table random-hyperplane LSH.
-
-    ``n_tables`` independent hash tables of ``n_planes`` sign bits each;
-    a row is a candidate when it matches the query's bucket (or one of
-    ``multiprobe`` lowest-margin single-bit flips) in ANY table — the
-    standard recall amplification (miss prob = miss^L). Exact cosine
-    then ranks candidates. At scale the bucket columns are precomputed
-    and the table is partitioned/bucketed by them, so one probe touches
-    only matching partitions instead of scanning."""
-    q = np.asarray(query, dtype=np.float64)
-    v = F.col(vec_col).cast("array<double>")
-    match = None
-    for t in range(n_tables):
-        planes = _hyperplanes(len(q), n_planes, seed + 101 * t)
-        qbits = (planes @ q >= 0).astype(np.int64)
-        qbucket = int((qbits << np.arange(n_planes)).sum())
-        buckets = {qbucket}
-        margins = np.abs(planes @ q)
-        for i in np.argsort(margins)[:multiprobe]:
-            buckets.add(qbucket ^ (1 << int(i)))
-        cond = lsh_bucket_col(v, planes).isin(list(buckets))
-        match = cond if match is None else (match | cond)
-
-    qlit = F.array(*[F.lit(float(x)) for x in q])
-    return (
-        df.filter(match)
-        .select(F.col(id_col), cosine_col(v, qlit).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
-    )
-
-
 def embedding_dup_pairs(
     df: DataFrame,
     threshold: float = 0.95,
@@ -257,13 +214,7 @@ def exact_cosine_pairs(
     probe = df.select(
         F.col(id_col).alias("_id"), F.col(vec_col).cast("array<double>").alias("_v")
     )
-    out = probe.mapInPandas(gen, schema="id_a long, id_b long, cosine double")
-    # the broadcast must outlive execution of the (lazy) result, so it is
-    # handed to the caller for cleanup via the same hook the dedup
-    # operators use (Broadcast.unpersist duck-types with
-    # DataFrame.unpersist): dedup.release_cached(out) after the action.
-    out._persisted_inputs = [bcast]
-    return out
+    return probe.mapInPandas(gen, schema="id_a long, id_b long, cosine double")
 
 
 # --------------------------------------------------------------------------
@@ -332,51 +283,6 @@ def ivf_assign(df: DataFrame, centroids: np.ndarray,
     n_probe partitions at the source instead of scanning."""
     return df.withColumn(
         cell_col, ivf_cell_udf(centroids)(F.col(vec_col).cast("array<double>"))
-    )
-
-
-def ivf_write_partitioned(
-    df: DataFrame,
-    path: str,
-    centroids: np.ndarray,
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the IVF layout: parquet partitioned by ``ivf_cell``
-    (Iceberg equivalent: ``writeTo(tbl).partitionedBy("ivf_cell")``).
-
-    This is the one-time ingest cost that turns every subsequent probe
-    into source-level partition pruning — the scan plans only the
-    ``n_probe`` matching directories and never reads the rest."""
-    ivf_assign(df, centroids, vec_col=vec_col).repartition("ivf_cell").write.mode(
-        "overwrite"
-    ).partitionBy("ivf_cell").parquet(path)
-
-
-def ivf_topk_partitioned(
-    spark,
-    path: str,
-    query: list[float],
-    centroids: np.ndarray,
-    k: int = 10,
-    n_probe: int = 3,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Probe a pre-partitioned IVF layout: the ``ivf_cell IN probes``
-    filter is a partition-column predicate, so Spark prunes at planning
-    time — no cell-assignment UDF, no full scan. Exact cosine re-ranks
-    the surviving cells."""
-    q = np.asarray(query, dtype=np.float64)
-    qn = np.linalg.norm(q)
-    probes = np.argsort(-(centroids @ (q / (qn or 1.0))))[:n_probe].tolist()
-    qlit = F.array(*[F.lit(float(x)) for x in q])
-    v = F.col(vec_col).cast("array<double>")
-    return (
-        spark.read.parquet(path)
-        .filter(F.col("ivf_cell").isin(probes))
-        .select(F.col(id_col), cosine_col(v, qlit).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
     )
 
 

@@ -57,21 +57,6 @@ def labels_frame(result: DataFrame) -> DataFrame:
     return result.select("conv_id", "turn_idx", "keep", *RULE_NAMES)
 
 
-def interval_rule_stats(
-    result: DataFrame, time_interval: str = "1d"
-) -> DataFrame:
-    """Per-interval per-rule pass rates + keep rate (evaluator-core
-    interval aggregation applied to the rule columns).
-
-    One HashAggregate pass; output cardinality = #intervals — tiny.
-    """
-    bucket = truncate_to_interval(F.col("ts"), time_interval).alias("__time_interval")
-    aggs = [F.count(F.lit(1)).alias("n_turns"), F.avg(F.col("keep").cast("double")).alias("keep_rate")]
-    for r in RULE_NAMES:
-        aggs.append(F.avg(F.col(r).cast("double")).alias(f"{r}_pass_rate"))
-    return result.groupBy(bucket).agg(*aggs).orderBy("__time_interval")
-
-
 def interval_rule_facts(
     result: DataFrame, time_interval: str = "1d"
 ) -> DataFrame:
@@ -82,7 +67,8 @@ def interval_rule_facts(
     of rates, so stats over an ever-growing table stay incremental — each
     batch aggregates only its own partitions, the sink's driver writes them
     one file per date, and :func:`combine_rule_partials` folds them into
-    the rates :func:`interval_rule_stats` would compute over the full table.
+    the per-interval rates (``keep_rate``, ``<rule>_pass_rate``) an ``avg``
+    over the full table would compute.
     The two differ where a flag is NULL: conversation features are computed
     per batch, so a conversation whose turn 0 fell in an earlier batch gets
     NULL conversation flags (and a NULL ``keep``). ``sum / n_turns`` then
@@ -119,7 +105,7 @@ def interval_rule_facts(
     )
 
 
-# the interval_rule_stats columns, as combine_rule_partials returns them
+# the per-interval rate columns, as combine_rule_partials returns them
 RATE_COLUMNS = ["keep_rate", *(f"{r}_pass_rate" for r in RULE_NAMES)]
 RULE_STATS_SCHEMA = ", ".join(
     ["__time_interval timestamp", "n_turns bigint", *(f"{c} double" for c in RATE_COLUMNS)])

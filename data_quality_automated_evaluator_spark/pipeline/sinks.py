@@ -203,10 +203,7 @@ class QualitySink:
         missing = sorted(nonzero_done - self._partial_dates(pdir))
         if not missing:
             return False
-        self._write_partials(
-            self.read_turns(spark).filter(F.col("part_date").isin(missing)),
-            time_interval,
-        )
+        self._write_partials(self._read_dates(spark, missing), time_interval)
         return True
 
     def _write_partials(self, written: DataFrame, time_interval: str) -> pa.Table:
@@ -251,9 +248,6 @@ class QualitySink:
                     e = json.load(fh)
                 entries[e["part_date"]] = e
         return entries
-
-    def completed_partitions(self) -> set[str]:
-        return set(self.ledger_entries())
 
     def _write_ledger_entry(self, entry: dict) -> None:
         os.makedirs(self.ledger_dir, exist_ok=True)
@@ -482,11 +476,15 @@ class QualitySink:
     def read_turns(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self.turns_dir)
 
+    def _read_dates(self, spark: SparkSession, dates: list[str]) -> DataFrame:
+        """The turns of ``dates`` only (partition pruning by directory)."""
+        return self.read_turns(spark).filter(F.col("part_date").isin(dates))
+
     def read_stats(
         self, spark: SparkSession, time_interval: str | None = None
     ) -> DataFrame:
         """Combined interval stats at one granularity, folded from the
-        per-partition partials (equivalent to interval_rule_stats over the
+        per-partition partials (equivalent to per-interval rates over the
         whole written table, without scanning it). Without
         ``time_interval``, the sink's one partials tree is read: none gives
         an empty frame, several raise ``ValueError``."""
@@ -509,7 +507,7 @@ class IcebergQualitySink(QualitySink):
     replace their prior files in a new snapshot, untouched partitions
     carry forward, so a partition re-run after a mid-write crash is
     idempotent AND every batch is a time-travelable snapshot (the
-    audit/rollback story the plain hive layout can't give). On a real
+    audit/time-travel story the plain hive layout can't give). On a real
     cluster the same class runs against the Iceberg runtime jar by
     swapping the two methods below for ``writeTo().overwritePartitions()``
     / ``spark.read.format("iceberg")`` — the run()/ledger/stats logic is
@@ -519,28 +517,37 @@ class IcebergQualitySink(QualitySink):
     metadata-sized derived artifacts (#dates × #buckets rows), not the
     10^12-row fact table.
 
-    Scale note: ``read_iceberg`` plans one scan per live partition value
-    and unions them. The per-batch read-back in ``_write_turns`` prunes to
-    the batch's dates in the manifests, so its plan grows with the batch,
-    not with the table's history; a whole-table analytical read
-    (``read_turns``) still plans one scan per committed date, and at
-    production scale goes through the runtime jar's single scan node.
+    Scale note: ``read_iceberg`` plans one parquet scan over the listed
+    files and restores ``part_date`` from a literal map keyed by file
+    path, so a filter on ``part_date`` after the read prunes nothing. The
+    per-batch read-back (``_write_turns``) and the interval-switch
+    backfill (``_sync_partials``) prune to their dates in the manifests,
+    so what they list grows with the batch, not with the table's history.
+    The map literal grows with the file count of the read; past some
+    thousands of files a broadcast join on the path would replace it.
     """
 
     def _write_turns(self, out: DataFrame, pending: list[str]) -> DataFrame:
         """Commit one batch as a snapshot; read back only the ``pending``
-        partitions (manifest values are epoch days), so the read plans one
-        scan per batch date whatever the table's history."""
-        from ..sources.iceberg_lite import read_iceberg as _ri
+        partitions, so the read lists the batch's files whatever the
+        table's history."""
         from ..sources.iceberg_lite import write_iceberg as _wi
 
         self._last_turns_snapshot = _wi(
             out, self.turns_dir, partition_by=["part_date"],
             mode="overwrite_partitions",
         )
+        return self._read_dates(out.sparkSession, pending)
+
+    def _read_dates(self, spark: SparkSession, dates: list[str]) -> DataFrame:
+        """The turns of ``dates`` only, pruned in the manifests (values are
+        epoch days): a filter on ``part_date`` after the read would prune
+        no files."""
+        from ..sources.iceberg_lite import read_iceberg as _ri
+
         epoch = _dt.date(1970, 1, 1)
-        days = {(_dt.date.fromisoformat(d) - epoch).days for d in pending}
-        return _ri(out.sparkSession, self.turns_dir,
+        days = {(_dt.date.fromisoformat(d) - epoch).days for d in dates}
+        return _ri(spark, self.turns_dir,
                    partition_filter={"part_date": lambda v: v in days})
 
     def read_turns(self, spark: SparkSession) -> DataFrame:
@@ -599,48 +606,3 @@ class IcebergQualitySink(QualitySink):
     @property
     def lineage_dir(self) -> str:
         return os.path.join(self.root, "lineage")
-
-    def read_lineage(self, spark: SparkSession) -> DataFrame:
-        from ..sources.iceberg_lite import read_iceberg as _ri
-
-        return _ri(spark, self.lineage_dir)
-
-    def read_stats_table(self, spark: SparkSession) -> DataFrame:
-        """The published stats artifact (vs ``read_stats``, which folds
-        partials on the fly)."""
-        from ..sources.iceberg_lite import read_iceberg as _ri
-
-        return _ri(spark, self.stats_dir)
-
-    def maintain(
-        self,
-        keep_last_snapshots: int = 7,
-        orphans_older_than_ms: int | None = 3 * 86_400 * 1000,
-        dry_run: bool = False,
-    ) -> dict:
-        """Table maintenance across all three Iceberg tables: expire old
-        snapshots (reclaiming the data files each day's dynamic partition
-        overwrite replaced — without this a daily pipeline's storage
-        grows with history, not with data) and sweep orphans left by
-        aborted writes. Returns per-table summaries. Run it after the
-        batch cadence (e.g. weekly with ``keep_last_snapshots=7`` to keep
-        a week of time travel)."""
-        from ..sources.iceberg_lite import expire_snapshots, remove_orphan_files
-
-        out: dict = {}
-        for name, loc in (
-            ("turns", self.turns_dir),
-            ("stats", self.stats_dir),
-            ("lineage", self.lineage_dir),
-        ):
-            try:
-                expired = expire_snapshots(
-                    loc, keep_last=keep_last_snapshots, dry_run=dry_run
-                )
-                swept = remove_orphan_files(
-                    loc, older_than_ms=orphans_older_than_ms, dry_run=dry_run
-                )
-            except FileNotFoundError:
-                continue  # table not created yet (no batch ran)
-            out[name] = {**expired, "orphans_removed": swept["orphans_removed"]}
-        return out

@@ -31,9 +31,11 @@ from parquet footers (metadata pages only, no data pages).
 
 from __future__ import annotations
 
+import datetime as _dt
 import json
 import os
 import time
+import urllib.parse
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -188,15 +190,6 @@ def load_metadata(location: str) -> dict:
         return json.load(f)
 
 
-def snapshots(location: str) -> list[dict]:
-    """All snapshots, oldest first (time travel: pass any ``snapshot-id``
-    to :func:`read_iceberg`)."""
-    return sorted(
-        load_metadata(location).get("snapshots", []),
-        key=lambda s: s["sequence-number"],
-    )
-
-
 def _select_snapshot(meta: dict, snapshot_id: int | None) -> dict | None:
     snaps = meta.get("snapshots", [])
     if snapshot_id is None:
@@ -288,16 +281,18 @@ def read_iceberg(
     """Snapshot-consistent DataFrame over an Iceberg table directory.
 
     The file list is resolved from metadata (with time travel +
-    partition pruning). Identity-partition columns live in directory
-    names, not data pages (the partitioned write drops them), so files
-    are grouped by partition tuple and each group gets its values
-    restored as typed literals — constant-folded by Catalyst, zero
-    per-row cost. Each group is read with the table's data schema (spec
-    types, identity partition fields left out), so planning runs no
-    schema-inference job, and a file written under an older schema that
-    lacks a column reads it as NULL. The result is projected onto the
-    table schema in field order with spec types, so derived-transform
-    directory columns (e.g. ``ts_day=``) never leak extra columns.
+    partition pruning) and read as ONE parquet scan with the table's data
+    schema (spec types, identity partition fields left out), so planning
+    runs no schema-inference job, a file written under an older schema
+    that lacks a column reads it as NULL, and the plan has one scan leaf
+    however many partitions the files span. Identity-partition columns
+    live in directory names, not data pages (the partitioned write drops
+    them), so each row gets its file's value back from a literal map
+    keyed by the path Spark reports in ``_metadata.file_path``. A filter
+    on such a column therefore prunes no files: callers prune through
+    ``partition_filter``. The result is projected onto the table schema
+    in field order with spec types, so derived-transform directory
+    columns (e.g. ``ts_day=``) never leak extra columns.
     """
     meta = load_metadata(location)
     files = iceberg_files(location, snapshot_id, partition_filter)
@@ -327,32 +322,26 @@ def read_iceberg(
     data_schema = ", ".join(
         f"`{n}` {t}" for n, t in spark_type.items() if n not in identity
     )
-    groups: dict[tuple, list[str]] = {}
-    for f in files:
-        key = tuple((k, f["partition"].get(k)) for k in identity)
-        groups.setdefault(key, []).append(f["file_path"])
-    parts = []
-    for key, paths in groups.items():
-        g = spark.read.schema(data_schema).parquet(*paths)
-        for k, v in key:
+    out = spark.read.schema(data_schema).parquet(*(f["file_path"] for f in files))
+    # _metadata.file_path spells a file as ``file:`` + the percent-encoded
+    # path Spark lists it under (``file:/a%20b/...``)
+    uri = {}
+    for listed in out.inputFiles():
+        path = urllib.parse.urlparse(listed).path
+        uri[os.path.abspath(urllib.parse.unquote(path))] = f"file:{path}"
+    for k in identity:
+        by_file = []
+        for f in files:
+            v = f["partition"].get(k)
             if spark_type.get(k) == "date" and isinstance(v, int):
                 # spec encoding: days from epoch → a typed date literal
                 # (an int literal cast to date would be NULL)
-                import datetime as _dt
-
                 v = _dt.date(1970, 1, 1) + _dt.timedelta(days=v)
-            g = g.withColumn(k, F.lit(v).cast(spark_type.get(k, "string")))
-        parts.append(g.select(*select))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def scan_iceberg(spark: SparkSession, location: str) -> DataFrame:
-    """Reference-parity alias (``pl.scan_iceberg`` —
-    reference utility/handle_data.py:109)."""
-    return read_iceberg(spark, location)
+            by_file += [F.lit(uri[os.path.abspath(f["file_path"])]),
+                        F.lit(v).cast(spark_type.get(k, "string"))]
+        out = out.withColumn(
+            k, F.element_at(F.create_map(*by_file), F.col("_metadata.file_path")))
+    return out.select(*select)
 
 
 def _current_schema(meta: dict) -> dict:
@@ -419,8 +408,6 @@ def _coerce_part_value(raw: str, result_type: str):
         # directory writes ISO strings (part_date=2024-01-03)
         if raw.lstrip("-").isdigit():
             return int(raw)
-        import datetime as _dt
-
         return (_dt.date.fromisoformat(raw) - _dt.date(1970, 1, 1)).days
     if result_type in ("int", "long"):
         return int(raw)
@@ -691,213 +678,3 @@ def _spec_to_partition_by(meta: dict, schema_fields: list[dict]) -> list:
         else:
             out.append(by_id[pf["source-id"]])
     return out
-
-
-# ---------------------------------------------------------------------------
-# table maintenance (Iceberg ExpireSnapshots / RemoveOrphanFiles parity) —
-# at production scale a table written daily accretes snapshots, manifest
-# lists, and replaced data files without bound; expiry is what makes
-# dynamic-partition-overwrite sustainable on a 100 TB table.
-# ---------------------------------------------------------------------------
-
-
-def _commit_next_metadata(location: str, new_meta: dict) -> str:
-    """Write the next ``vN.metadata.json`` + version hint atomically
-    (tempfile + rename, same commit shape as :func:`write_iceberg`)."""
-    mdir = _metadata_dir(location)
-    version = int(
-        os.path.basename(current_metadata_path(location))[1:].split(".")[0]
-    )
-    vnext = version + 1
-    path = os.path.join(mdir, f"v{vnext}.metadata.json")
-    tmp = os.path.join(mdir, f".v{vnext}.metadata.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(new_meta, f, indent=1)
-    os.replace(tmp, path)
-    with open(os.path.join(mdir, ".version-hint.tmp"), "w") as f:
-        f.write(str(vnext))
-    os.replace(
-        os.path.join(mdir, ".version-hint.tmp"),
-        os.path.join(mdir, "version-hint.text"),
-    )
-    return path
-
-
-def expire_snapshots(
-    location: str,
-    keep_last: int | None = None,
-    older_than_ms: int | None = None,
-    dry_run: bool = False,
-) -> dict:
-    """Expire old snapshots (Iceberg ``expireSnapshots`` semantics).
-
-    Retained: the current snapshot, always; plus the newest ``keep_last``
-    snapshots; plus every snapshot with ``timestamp-ms >= older_than_ms``.
-    Everything else is expired: its manifest list is deleted, manifests
-    referenced by no retained snapshot are deleted, and data files live in
-    no retained snapshot are deleted (the files an
-    ``overwrite_partitions`` re-run replaced — pure-append tables lose
-    only metadata since every old file is still live at head). A new
-    metadata version is committed; time travel to an expired snapshot
-    stops working, by design. Reclaim is reference-counted against ALL
-    retained snapshots, so a file carried forward as EXISTING is never
-    touched.
-    """
-    if keep_last is None and older_than_ms is None:
-        raise ValueError("expire_snapshots needs keep_last or older_than_ms")
-    if keep_last is not None and keep_last < 1:
-        raise ValueError("keep_last must be >= 1")
-    meta = load_metadata(location)
-    snaps = sorted(
-        meta.get("snapshots", []), key=lambda s: s["sequence-number"]
-    )
-    retained_ids: set[int] = set()
-    cur = meta.get("current-snapshot-id")
-    if cur not in (None, -1):
-        retained_ids.add(cur)
-    if keep_last is not None:
-        retained_ids |= {s["snapshot-id"] for s in snaps[-keep_last:]}
-    if older_than_ms is not None:
-        retained_ids |= {
-            s["snapshot-id"] for s in snaps
-            if s["timestamp-ms"] >= older_than_ms
-        }
-    retained = [s for s in snaps if s["snapshot-id"] in retained_ids]
-    expired = [s for s in snaps if s["snapshot-id"] not in retained_ids]
-    summary = {
-        "expired_snapshots": len(expired),
-        "deleted_data_files": 0,
-        "deleted_manifests": 0,
-        "deleted_manifest_lists": 0,
-    }
-    if not expired:
-        return summary
-
-    def _mlist(s: dict) -> str:
-        return _resolve_path(location, s["manifest-list"])
-
-    def _manifests_of(s: dict) -> set[str]:
-        _, ms = read_container_file(_mlist(s))
-        return {_resolve_path(location, m["manifest_path"]) for m in ms}
-
-    retained_mlists = {_mlist(s) for s in retained}
-    retained_manifests: set[str] = set()
-    retained_data: set[str] = set()
-    for s in retained:
-        retained_manifests |= _manifests_of(s)
-        retained_data |= {
-            f["file_path"]
-            for f in iceberg_files(location, s["snapshot-id"])
-        }
-    exp_mlists: set[str] = set()
-    exp_manifests: set[str] = set()
-    exp_data: set[str] = set()
-    for s in expired:
-        exp_mlists.add(_mlist(s))
-        exp_manifests |= _manifests_of(s)
-        exp_data |= {
-            f["file_path"]
-            for f in iceberg_files(location, s["snapshot-id"])
-        }
-    exp_mlists -= retained_mlists
-    exp_manifests -= retained_manifests
-    exp_data -= retained_data
-    summary.update(
-        deleted_data_files=len(exp_data),
-        deleted_manifests=len(exp_manifests),
-        deleted_manifest_lists=len(exp_mlists),
-    )
-    if dry_run:
-        return summary
-    for p in (*exp_data, *exp_manifests, *exp_mlists):
-        try:
-            os.remove(p)
-        except FileNotFoundError:
-            pass
-    new_meta = dict(meta)
-    new_meta["snapshots"] = retained
-    new_meta["snapshot-log"] = [
-        e for e in meta.get("snapshot-log", [])
-        if e["snapshot-id"] in retained_ids
-    ]
-    new_meta["last-updated-ms"] = int(time.time() * 1000)
-    _commit_next_metadata(location, new_meta)
-    return summary
-
-
-def remove_orphan_files(
-    location: str,
-    older_than_ms: int | None = 3 * 86_400 * 1000,
-    dry_run: bool = False,
-) -> dict:
-    """Delete files under ``<location>/data`` referenced by NO snapshot
-    of the current metadata (Iceberg ``removeOrphanFiles`` semantics):
-    leftovers of aborted/crashed writes, plus Spark ``_SUCCESS`` markers.
-    ``older_than_ms`` (default 3 days, Iceberg's default) skips files
-    younger than the cutoff so an in-flight commit's fresh data files are
-    never swept; pass ``None`` to disable the age guard. Empty batch
-    directories are pruned afterwards. Metadata files are never touched —
-    expiry owns those."""
-    meta = load_metadata(location)
-    referenced: set[str] = set()
-    for s in meta.get("snapshots", []):
-        for f in iceberg_files(location, s["snapshot-id"]):
-            referenced.add(os.path.realpath(f["file_path"]))
-    data_root = os.path.join(location, "data")
-    cutoff = (
-        None if older_than_ms is None
-        else time.time() - older_than_ms / 1000.0
-    )
-    orphans: list[str] = []
-    for root, _dirs, names in os.walk(data_root):
-        for n in names:
-            fp = os.path.join(root, n)
-            if os.path.realpath(fp) in referenced:
-                continue
-            if cutoff is not None and os.path.getmtime(fp) > cutoff:
-                continue
-            orphans.append(fp)
-    if not dry_run:
-        for fp in orphans:
-            try:
-                os.remove(fp)
-            except FileNotFoundError:
-                pass
-        # prune now-empty batch directories, deepest first (os.walk's
-        # cached dir lists still name children rmdir'd this pass, so
-        # re-list)
-        for root, _dirs, _names in os.walk(data_root, topdown=False):
-            if root != data_root and not os.listdir(root):
-                try:
-                    os.rmdir(root)
-                except OSError:
-                    pass
-    return {"orphans_removed": len(orphans), "orphans": sorted(orphans)}
-
-
-def rollback_to_snapshot(location: str, snapshot_id: int) -> int:
-    """Roll the table's head back to ``snapshot_id`` (Iceberg
-    ``rollback_to_snapshot`` semantics): a metadata-only commit that sets
-    ``current-snapshot-id`` to a prior snapshot — no data or manifest
-    files move, and the rolled-back-over snapshots remain in history (an
-    ``expire_snapshots`` afterwards reclaims their files; until then a
-    second rollback can restore them). The recovery story for a bad
-    batch: roll back, fix, re-run."""
-    meta = load_metadata(location)
-    if not any(
-        s["snapshot-id"] == snapshot_id for s in meta.get("snapshots", [])
-    ):
-        raise ValueError(
-            f"snapshot {snapshot_id} not in table history at {location}"
-        )
-    if meta.get("current-snapshot-id") == snapshot_id:
-        return snapshot_id
-    new_meta = dict(meta)
-    new_meta["current-snapshot-id"] = snapshot_id
-    new_meta["last-updated-ms"] = int(time.time() * 1000)
-    new_meta["snapshot-log"] = meta.get("snapshot-log", []) + [
-        {"snapshot-id": snapshot_id,
-         "timestamp-ms": new_meta["last-updated-ms"]}
-    ]
-    _commit_next_metadata(location, new_meta)
-    return snapshot_id

@@ -88,6 +88,10 @@ def main() -> int:
             results[name] = {"err": f"spark: {ex}"}
             failures.append(name)
             continue
+        finally:
+            # operators persist intermediates the query's plan reuses;
+            # drop them before the next query so the sweep's cache stays flat
+            spark.catalog.clearCache()
         if name not in osql:
             results[name] = {"spark_rows": len(spdf), "err": "no_oracle"}
             continue

@@ -5,11 +5,11 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+from references import bpe_train_reference
 
 from data_quality_automated_evaluator_spark.operators.bpe import (
     bpe_segment,
     bpe_train,
-    bpe_train_reference,
 )
 
 TEXTS = [

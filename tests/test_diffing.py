@@ -4,10 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from data_quality_automated_evaluator_spark.operators.diffing import (
-    diff_summary,
-    table_diff,
-)
+from data_quality_automated_evaluator_spark.operators.diffing import table_diff
 
 
 def _snap(spark, rows):
@@ -42,7 +39,8 @@ def test_summary_counts(spark):
         spark,
         [(i, "t" if i % 3 else "T", i) for i in range(2, 12)],
     )
-    got = {r["status"]: r["n"] for r in diff_summary(old, new).collect()}
+    diff = table_diff(old, new, include_unchanged=True)
+    got = {r["status"]: r["count"] for r in diff.groupBy("status").count().collect()}
     # removed: 0,1; added: 10,11; changed among 2..9 where i%3==0: 3,6,9
     assert got == {"removed": 2, "added": 2, "changed": 3, "unchanged": 5}
 

@@ -120,9 +120,22 @@ def test_calibration_curve_bins_and_rates(spark):
         assert r["bin"] / 10.0 - 1e-9 <= r["mean_score"] <= (r["bin"] + 1) / 10.0 + 0.1
 
 
+def _bucket_col(feat, n_buckets: int):
+    """The Catalyst fold the Arrow bucket UDF must equal: a polynomial
+    hash over code points; ASCII-only by construction ([a-z0-9 ]
+    survives the split), so ascii()/unicode() agree."""
+    from data_quality_automated_evaluator_spark.operators.dsir import _MOD, _SEED
+
+    h = F.aggregate(
+        F.split(feat, ""),
+        F.lit(_SEED).cast("bigint"),
+        lambda acc, ch: (acc * 31 + F.ascii(ch)) % _MOD,
+    )
+    return (h % n_buckets).cast("int")
+
+
 def test_bucket_udf_matches_catalyst_fold(spark):
     from data_quality_automated_evaluator_spark.operators.dsir import (
-        _bucket_col,
         _bucket_udf,
         _feats_col,
     )

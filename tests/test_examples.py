@@ -60,7 +60,7 @@ def test_quality_filter_example_iceberg_sink(spark, tmp_path, path):
     """`"sink_format": "iceberg"` switches the same config to the
     Iceberg-committed sink: identical summary, plus turns/stats/lineage
     as real Iceberg tables."""
-    from data_quality_automated_evaluator_spark.sources.iceberg_lite import snapshots
+    from references import snapshots
     from data_quality_automated_evaluator_spark.testdata import write_transcripts_parquet
 
     src = str(tmp_path / "transcripts.parquet")

@@ -6,7 +6,6 @@ from pyspark.sql import functions as F
 
 from data_quality_automated_evaluator_spark.operators.html import (
     domain_expr,
-    extract_links,
     extract_urls,
     html_to_text,
     url_domain_stats,
@@ -57,8 +56,6 @@ def test_extract_urls_and_links(spark):
     )
     urls = extract_urls(df).collect()[0]["urls"]
     assert urls == ["https://A.example.com/p?q=1", 'http://b.org/x">z</a>'[: len("http://b.org/x")]] or urls[0].startswith("https://A.example.com")
-    links = extract_links(df, "text").collect()[0]["links"]
-    assert links == ["http://b.org/x"]
     dom = df.select(domain_expr(F.lit("https://A.Example.com:8080/p")).alias("d")).collect()[0]["d"]
     assert dom == "a.example.com"
 

@@ -8,6 +8,8 @@ import os
 
 import pytest
 
+from references import snapshots
+
 from data_quality_automated_evaluator_spark.functions.avro_io import (
     read_container,
     write_container,
@@ -16,8 +18,6 @@ from data_quality_automated_evaluator_spark.sources.iceberg_lite import (
     iceberg_files,
     load_metadata,
     read_iceberg,
-    scan_iceberg,
-    snapshots,
     write_iceberg,
 )
 
@@ -189,7 +189,7 @@ def test_reader_dispatch_falls_back_without_jar(spark, tmp_path):
     write_iceberg(_mk_df(spark, _rows(0, 8)), loc, partition_by=["lang"])
     df = read_source(spark, {"file_format": "iceberg", "path": loc})
     assert df.count() == 8
-    assert scan_iceberg(spark, loc).count() == 8
+    assert read_iceberg(spark, loc).count() == 8
 
 
 def test_unsupported_identity_partition_raises(spark, tmp_path):
@@ -199,151 +199,3 @@ def test_unsupported_identity_partition_raises(spark, tmp_path):
             str(tmp_path / "tbl"),
             partition_by=["ts"],
         )
-
-
-def test_expire_snapshots_reclaims_replaced_partition_files(spark, tmp_path):
-    """overwrite_partitions leaves the replaced files referenced only by
-    the old snapshot; expiry must delete exactly those, keep everything
-    the head snapshot reads (including carried EXISTING files), commit a
-    new metadata version, and end time travel to the expired snapshot."""
-    from data_quality_automated_evaluator_spark.sources.iceberg_lite import (
-        expire_snapshots,
-    )
-
-    loc = str(tmp_path / "tbl")
-    s1 = write_iceberg(_mk_df(spark, _rows(0, 20)), loc, partition_by=["lang"])
-    old_files = {f["file_path"] for f in iceberg_files(loc, snapshot_id=s1)}
-    # replace partition lang='en' only; 'fr' files carry forward
-    en_rows = [(100 + i, "en", 9.0, r[3]) for i, r in enumerate(_rows(0, 4))]
-    s2 = write_iceberg(_mk_df(spark, en_rows), loc, mode="overwrite_partitions")
-    head_before = sorted(
-        (r.doc_id, r.lang, r.score) for r in read_iceberg(spark, loc).collect()
-    )
-    live = {f["file_path"] for f in iceberg_files(loc)}
-    replaced = old_files - live
-    assert replaced  # the old 'en' files are now reclaimable
-
-    # dry run deletes nothing
-    dry = expire_snapshots(loc, keep_last=1, dry_run=True)
-    assert dry["expired_snapshots"] == 1
-    assert dry["deleted_data_files"] == len(replaced)
-    assert all(os.path.exists(p) for p in replaced)
-
-    got = expire_snapshots(loc, keep_last=1)
-    assert got == dry
-    assert not any(os.path.exists(p) for p in replaced)
-    assert all(os.path.exists(p) for p in live)  # carried files survive
-    # head reads byte-identically; expired snapshot is gone
-    assert sorted(
-        (r.doc_id, r.lang, r.score) for r in read_iceberg(spark, loc).collect()
-    ) == head_before
-    assert [s["snapshot-id"] for s in snapshots(loc)] == [s2]
-    with pytest.raises((ValueError, FileNotFoundError)):
-        read_iceberg(spark, loc, snapshot_id=s1).collect()
-    # a new metadata version was committed (hint advanced past v2)
-    with open(os.path.join(loc, "metadata", "version-hint.text")) as f:
-        assert int(f.read().strip()) == 3
-    # idempotent: nothing left to expire
-    again = expire_snapshots(loc, keep_last=1)
-    assert again["expired_snapshots"] == 0
-    # table still appendable after maintenance
-    write_iceberg(_mk_df(spark, _rows(30, 33)), loc)
-    assert read_iceberg(spark, loc).count() == len(head_before) + 3
-
-
-def test_expire_pure_append_deletes_no_data(spark, tmp_path):
-    """Append-only history: every old data file is still live at head, so
-    expiry reclaims metadata only (manifest lists), never data."""
-    from data_quality_automated_evaluator_spark.sources.iceberg_lite import (
-        expire_snapshots,
-    )
-
-    loc = str(tmp_path / "tbl")
-    write_iceberg(_mk_df(spark, _rows(0, 10)), loc, partition_by=["lang"])
-    write_iceberg(_mk_df(spark, _rows(10, 20)), loc)
-    before = {f["file_path"] for f in iceberg_files(loc)}
-    got = expire_snapshots(loc, keep_last=1)
-    assert got["expired_snapshots"] == 1
-    assert got["deleted_data_files"] == 0
-    assert got["deleted_manifest_lists"] == 1
-    assert {f["file_path"] for f in iceberg_files(loc)} == before
-    assert read_iceberg(spark, loc).count() == 20
-
-
-def test_remove_orphan_files(spark, tmp_path):
-    from data_quality_automated_evaluator_spark.sources.iceberg_lite import (
-        remove_orphan_files,
-    )
-
-    loc = str(tmp_path / "tbl")
-    write_iceberg(_mk_df(spark, _rows(0, 12)), loc, partition_by=["lang"])
-    n_before = read_iceberg(spark, loc).count()
-    # plant an aborted-write leftover: a stray batch dir with a parquet
-    stray_dir = os.path.join(loc, "data", "bdeadbeef0000", "lang=en")
-    os.makedirs(stray_dir)
-    stray = os.path.join(stray_dir, "part-00000-stray.parquet")
-    with open(stray, "wb") as f:
-        f.write(b"PAR1 not really parquet PAR1")
-
-    # age guard: a fresh orphan is NOT swept at the default 3-day cutoff
-    assert remove_orphan_files(loc)["orphans_removed"] == 0
-    got = remove_orphan_files(loc, older_than_ms=None)
-    assert stray in got["orphans"]
-    assert not os.path.exists(stray)
-    assert not os.path.exists(os.path.dirname(stray))  # empty dirs pruned
-    # the stray parquet is the ONLY swept data file; everything else
-    # swept (if anything) is a Spark _SUCCESS marker
-    assert [p for p in got["orphans"] if p.endswith(".parquet")] == [stray]
-    # every referenced file survived and the table reads unchanged
-    assert read_iceberg(spark, loc).count() == n_before
-
-
-def test_rollback_to_snapshot(spark, tmp_path):
-    """Metadata-only rollback: head returns to a prior snapshot, history
-    is preserved (a second rollback can restore the bad batch), a write
-    after rollback parents on the rolled-back head, and a subsequent
-    expire reclaims the orphaned bad batch's files."""
-    from data_quality_automated_evaluator_spark.sources.iceberg_lite import (
-        expire_snapshots,
-        load_metadata,
-        rollback_to_snapshot,
-    )
-
-    loc = str(tmp_path / "tbl")
-    s1 = write_iceberg(_mk_df(spark, _rows(0, 10)), loc, partition_by=["lang"])
-    s2 = write_iceberg(_mk_df(spark, _rows(10, 20)), loc)  # the "bad" batch
-    bad_files = {
-        f["file_path"] for f in iceberg_files(loc, snapshot_id=s2)
-    } - {f["file_path"] for f in iceberg_files(loc, snapshot_id=s1)}
-    assert read_iceberg(spark, loc).count() == 20
-
-    with pytest.raises(ValueError):
-        rollback_to_snapshot(loc, 424242)
-
-    assert rollback_to_snapshot(loc, s1) == s1
-    assert read_iceberg(spark, loc).count() == 10  # head is s1 again
-    meta = load_metadata(loc)
-    assert meta["current-snapshot-id"] == s1
-    # nothing deleted: both snapshots remain, the bad one is restorable
-    assert [s["snapshot-id"] for s in snapshots(loc)] == [s1, s2]
-    assert rollback_to_snapshot(loc, s2) == s2
-    assert read_iceberg(spark, loc).count() == 20
-    # back to the good head; idempotent rollback commits no new version
-    rollback_to_snapshot(loc, s1)
-    with open(os.path.join(loc, "metadata", "version-hint.text")) as f:
-        v = int(f.read().strip())
-    assert rollback_to_snapshot(loc, s1) == s1
-    with open(os.path.join(loc, "metadata", "version-hint.text")) as f:
-        assert int(f.read().strip()) == v
-
-    # fix-and-rerun: the next append parents on the rolled-back head
-    s3 = write_iceberg(_mk_df(spark, _rows(20, 25)), loc)
-    assert read_iceberg(spark, loc).count() == 15  # s1's 10 + 5, NOT s2's
-    meta = load_metadata(loc)
-    snap3 = next(s for s in meta["snapshots"] if s["snapshot-id"] == s3)
-    assert snap3["parent-snapshot-id"] == s1
-    # expiry now reclaims the bad batch's files (referenced only by s2)
-    got = expire_snapshots(loc, keep_last=1)
-    assert got["deleted_data_files"] == len(bad_files)
-    assert not any(os.path.exists(p) for p in bad_files)
-    assert read_iceberg(spark, loc).count() == 15

@@ -11,6 +11,8 @@ import os
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
+from references import snapshots
 
 from data_quality_automated_evaluator_spark.pipeline.sinks import (
     IcebergQualitySink,
@@ -18,7 +20,6 @@ from data_quality_automated_evaluator_spark.pipeline.sinks import (
 )
 from data_quality_automated_evaluator_spark.sources.iceberg_lite import (
     read_iceberg,
-    snapshots,
     write_iceberg,
 )
 from data_quality_automated_evaluator_spark.testdata import generate_transcripts
@@ -159,7 +160,7 @@ def test_iceberg_lineage_and_stats_tables(spark, sdf, tmp_path_factory):
     s2 = sink.run(sdf)
     assert s1["processed_partitions"] == 2 and s2["processed_partitions"] > 0
 
-    lin = sink.read_lineage(spark).toPandas()
+    lin = read_iceberg(spark, sink.lineage_dir).toPandas()
     # one row per completed partition, metrics agreeing with the ledger
     entries = sink.ledger_entries()
     assert sorted(lin["part_date"]) == sorted(entries)
@@ -179,7 +180,7 @@ def test_iceberg_lineage_and_stats_tables(spark, sdf, tmp_path_factory):
     assert early.select("part_date").distinct().count() == 2
 
     # the stats artifact is an Iceberg table matching the partials fold
-    st = sink.read_stats_table(spark).toPandas().sort_values("__time_interval")
+    st = read_iceberg(spark, sink.stats_dir).toPandas().sort_values("__time_interval")
     sf = sink.read_stats(spark).toPandas().sort_values("__time_interval")
     assert (st.values == sf.values).all()
     assert os.path.exists(
@@ -196,7 +197,7 @@ def test_iceberg_sink_partition_rerun_no_duplicates(
     sink = IcebergQualitySink(str(tmp_path_factory.mktemp("ib_rerun")))
     sink.run(sdf)
     total = sink.read_turns(spark).count()
-    done = sorted(sink.completed_partitions())
+    done = sorted(sink.ledger_entries())
     victim = done[0]
     os.remove(os.path.join(sink.ledger_dir, f"{victim}.json"))
 
@@ -204,44 +205,6 @@ def test_iceberg_sink_partition_rerun_no_duplicates(
     assert s["processed_partitions"] == 1
     assert sink.read_turns(spark).count() == total  # no duplicate rows
     assert len(snapshots(sink.turns_dir)) == 2
-
-
-def test_sink_maintain_expires_and_sweeps(spark, sdf, tmp_path):
-    """maintain(): expire snapshots + sweep orphans on all three tables;
-    head reads are unchanged, storage for replaced partition files is
-    reclaimed, and the sink still runs (resume + append) afterwards."""
-    sink = IcebergQualitySink(str(tmp_path / "iceberg_maint"))
-    sink.run(sdf, batch_days=2)
-    sink.run(sdf)  # rest of the partitions → multiple snapshots everywhere
-    assert len(snapshots(sink.turns_dir)) >= 2
-
-    before = _read_sorted(spark, sink)
-    lineage_before = sink.read_lineage(spark).count()
-
-    # dry run reports work but changes nothing
-    dry = sink.maintain(keep_last_snapshots=1, orphans_older_than_ms=None,
-                        dry_run=True)
-    assert dry["turns"]["expired_snapshots"] >= 1
-    assert len(snapshots(sink.turns_dir)) >= 2
-
-    got = sink.maintain(keep_last_snapshots=1, orphans_older_than_ms=None)
-    assert set(got) == {"turns", "stats", "lineage"}
-    assert len(snapshots(sink.turns_dir)) == 1
-    # stats table is full-refresh overwrite per batch: expiring to 1
-    # snapshot reclaims the previous batch's entire stats file set
-    assert got["stats"]["expired_snapshots"] >= 1
-    assert got["stats"]["deleted_data_files"] >= 1
-    # _SUCCESS markers from the spark writes are swept as orphans
-    assert got["turns"]["orphans_removed"] >= 1
-
-    pd.testing.assert_frame_equal(before, _read_sorted(spark, sink))
-    assert sink.read_lineage(spark).count() == lineage_before
-    assert sink.read_stats_table(spark).count() > 0
-
-    # the sink remains fully operational: a no-new-data resume is a no-op
-    s = sink.run(sdf)
-    assert s["processed_partitions"] == 0
-    pd.testing.assert_frame_equal(before, _read_sorted(spark, sink))
 
 
 class _ReadBackSink(IcebergQualitySink):
@@ -280,3 +243,27 @@ def test_daily_read_back_independent_of_history(spark, tmp_path):
         rows.append(sink.read_back.count())
     assert scans[0] == scans[1] == 1
     assert rows == [2, 2]
+
+
+def test_read_iceberg_is_one_scan(spark, tmp_path):
+    """A read plans one parquet scan and no Union however many identity
+    partitions it spans, restores each row's partition value from its
+    file (whose URI percent-encodes the location's space and %), and a
+    read of some dates lists only their files."""
+    for n_dates in (5, 40):
+        loc = str(tmp_path / f"t {n_dates}%")
+        df = _days(spark, 0, n_dates).withColumn("part_date", F.to_date("ts"))
+        write_iceberg(df, loc, partition_by=["part_date"], mode="overwrite")
+        back = read_iceberg(spark, loc)
+        plan = back._jdf.queryExecution().analyzed()
+        assert plan.collectLeaves().size() == 1
+        assert "Union" not in plan.toString()
+        got = back.groupBy("part_date").count().collect()
+        assert len(got) == n_dates and {r["count"] for r in got} == {2}
+        assert back.filter(F.to_date("ts") != F.col("part_date")).count() == 0
+
+    sink = IcebergQualitySink(str(tmp_path / "sink"))
+    sink.run(_days(spark, 0, 5))
+    one = sink._read_dates(spark, ["2025-01-03"])
+    assert one.inputFiles() and all("part_date=2025-01-03" in f for f in one.inputFiles())
+    assert {str(r[0]) for r in one.select("part_date").distinct().collect()} == {"2025-01-03"}

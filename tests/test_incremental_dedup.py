@@ -14,11 +14,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from data_quality_automated_evaluator_spark.operators.dedup import release_cached
-from data_quality_automated_evaluator_spark.operators.incremental import (
-    ExactDedupStore,
-    MinHashBandStore,
-)
+from data_quality_automated_evaluator_spark.operators.incremental import ExactDedupStore
 
 
 @pytest.fixture()
@@ -116,64 +112,12 @@ def test_exact_store_bucketed_plan_and_values(spark, store_root):
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
-def test_minhash_band_store_cross_batch(spark, store_root):
-    base = (
-        "the quick brown fox jumps over the lazy dog and then wanders "
-        "through the quiet forest looking for something interesting to eat"
-    )
-    b1 = [(0, base), (1, "completely different text about spark physical plans")]
-    # 10 = near-dup of 0 (history), 11/12 = near-dups of each other (in-batch)
-    b2 = [
-        (10, base + " tail"),
-        (11, "tuning shuffle partitions for adaptive execution engines"),
-        (12, "tuning shuffle partitions for adaptive execution engine"),
-    ]
-    store = MinHashBandStore(store_root)
-    r1 = store.ingest(_docs(spark, b1))
-    assert r1.count() == 0  # no dups within batch 1
-    release_cached(r1)
-    r2 = store.ingest(_docs(spark, b2))
-    pairs = {(r["id_a"], r["id_b"]) for r in r2.collect()}
-    release_cached(r2)
-    assert (0, 10) in pairs  # cross-batch near-dup, history never re-signed
-    assert (11, 12) in pairs  # within-increment near-dup
-    assert (1, 11) not in pairs and (1, 12) not in pairs
-
-
 def test_stores_crash_retry_idempotent(spark, store_root):
-    """Re-ingesting an already-appended batch (crash retry) must not emit
-    self-pairs, must not double-append store rows, and the exact store's
-    keeper must not point dup_of at itself."""
-    base = (
-        "the quick brown fox jumps over the lazy dog and then wanders "
-        "through the quiet forest looking for something interesting to eat"
-    )
-    b1 = [(0, base), (1, "completely different text about spark physical plans")]
-
-    mstore = MinHashBandStore(store_root + "/mh")
-    r1 = mstore.ingest(_docs(spark, b1))
-    assert r1.count() == 0
-    release_cached(r1)
-    n_bands = spark.read.parquet(mstore.bands_dir).count()
-
-    # retry: identical batch again
-    r1b = mstore.ingest(_docs(spark, b1))
-    pairs = {(r["id_a"], r["id_b"]) for r in r1b.collect()}
-    release_cached(r1b)
-    assert all(a != b for a, b in pairs), pairs  # no self-pairs
-    assert pairs == set()  # the two docs are unrelated -> still no pairs
-    assert spark.read.parquet(mstore.bands_dir).count() == n_bands  # no double-append
-
-    # a later genuine increment still finds its history partner once
-    r2 = mstore.ingest(_docs(spark, [(10, base + " tail")]))
-    p2 = {(r["id_a"], r["id_b"]) for r in r2.collect()}
-    release_cached(r2)
-    assert p2 == {(0, 10)}
-
+    """Re-ingesting an already-appended batch (crash retry) must not
+    double-append store rows, and the keeper must not point dup_of at
+    itself."""
     estore = ExactDedupStore(store_root + "/ex")
-    e1 = estore.ingest(_docs(spark, BATCH1))
-    e1.collect()
-    release_cached(e1)
+    estore.ingest(_docs(spark, BATCH1)).collect()
     n_dig = spark.read.parquet(estore.digests_dir).count()
     e1b = {r["doc_id"]: r for r in estore.ingest(_docs(spark, BATCH1)).collect()}
     # keeper finds itself in the store: dup_of stays NULL, nothing re-appended

@@ -6,10 +6,10 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from image_decoders import decode_jpeg
 
 from data_quality_automated_evaluator_spark.functions.jpeg import (
     JpegFormatError,
-    decode_jpeg,
     encode_jpeg,
 )
 

@@ -8,10 +8,10 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from image_decoders import decode_png
 
 from data_quality_automated_evaluator_spark.functions.png import (
     PngFormatError,
-    decode_png,
     encode_png,
 )
 

@@ -13,9 +13,22 @@ from data_quality_automated_evaluator_spark.operators.pq import (
     pq_adc_topk,
     pq_code_col,
     pq_encode,
-    pq_reconstruct_col,
     pq_train,
 )
+
+
+def pq_reconstruct_col(codebooks, codes):
+    """Decode codes back to the approximate vector (concat of the
+    selected centroids), the exact reconstruction ADC is checked against."""
+    cb = F.array(
+        *[
+            F.array(*[F.array(*[F.lit(float(x)) for x in c]) for c in sub])
+            for sub in codebooks
+        ]
+    )
+    return F.flatten(
+        F.zip_with(codes, cb, lambda c, rows: F.element_at(rows, c + 1))
+    )
 
 
 def _vec_df(spark, vecs):

@@ -7,10 +7,11 @@ import pandas as pd
 import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
+from references import scrub_text
 
 from data_quality_automated_evaluator_spark.functions.intervals import parse_interval
 from data_quality_automated_evaluator_spark.functions.perplexity import perplexity_batch
-from data_quality_automated_evaluator_spark.functions.scrub import scrub_batch, scrub_text
+from data_quality_automated_evaluator_spark.functions.scrub import scrub_batch
 from data_quality_automated_evaluator_spark.functions.langid import (
     LANGS,
     MODEL,

@@ -19,6 +19,7 @@ from data_quality_automated_evaluator_spark.pipeline.sinks import (
     IcebergQualitySink,
     QualitySink,
 )
+from data_quality_automated_evaluator_spark.sources.iceberg_lite import read_iceberg
 from data_quality_automated_evaluator_spark.testdata import generate_transcripts
 
 
@@ -50,7 +51,7 @@ def test_resume_equivalence(spark, sdf, tmp_path_factory):
     part = QualitySink(part_root)
     s2 = part.run(sdf, batch_days=2)
     assert s2["processed_partitions"] == 2
-    assert len(part.completed_partitions()) == 2
+    assert len(part.ledger_entries()) == 2
 
     s3 = part.run(sdf)  # resume the rest
     assert s3["skipped_partitions"] == 2
@@ -110,9 +111,7 @@ def test_stats_incremental_and_convergent(spark, sdf, tmp_path_factory):
     """The incremental partial-stats artifact must fold to exactly what a
     full interval_rule_stats pass over the whole written table computes,
     whether the run was interrupted+resumed or uninterrupted."""
-    from data_quality_automated_evaluator_spark.pipeline.quality import (
-        interval_rule_stats,
-    )
+    from references import interval_rule_stats
 
     root = str(tmp_path_factory.mktemp("sink_stats"))
     sink = QualitySink(root)
@@ -156,9 +155,7 @@ def test_stats_interval_change_no_granularity_mixing(spark, sdf, tmp_path_factor
     """Switching time_interval between runs must NOT mix bucket
     granularities: each interval gets its own partials tree, and
     partitions completed under the old interval are backfilled once."""
-    from data_quality_automated_evaluator_spark.pipeline.quality import (
-        interval_rule_stats,
-    )
+    from references import interval_rule_stats
 
     root = str(tmp_path_factory.mktemp("sink_iv"))
     sink = QualitySink(root)
@@ -251,7 +248,7 @@ def test_batch_days_progresses_past_empty_dates(spark, sdf, tmp_path_factory):
     # four runs, four candidate dates consumed (one of them the empty
     # hole) — never stuck re-selecting the same empty date
     assert seen_processed == 4
-    assert len(sink.completed_partitions()) == 4
+    assert len(sink.ledger_entries()) == 4
     assert sink.ledger_entries()[hole]["n_turns"] == 0
     assert sink.ledger_entries()[dates[2]]["n_turns"] > 0
 
@@ -259,9 +256,7 @@ def test_batch_days_progresses_past_empty_dates(spark, sdf, tmp_path_factory):
 def test_interval_switch_with_nothing_pending(spark, sdf, tmp_path_factory):
     """Switching time_interval when all partitions are already complete
     must still build the new granularity's partials (early-return path)."""
-    from data_quality_automated_evaluator_spark.pipeline.quality import (
-        interval_rule_stats,
-    )
+    from references import interval_rule_stats
 
     root = str(tmp_path_factory.mktemp("sink_iv2"))
     sink = QualitySink(root)
@@ -323,7 +318,7 @@ def test_ledger_facts_exact(spark, sdf, tmp_path_factory, sink_cls):
         else:
             assert e["n_turns"] == e["n_keep"] == e["scrubbed_chars"] == 0, d
     if sink_cls is IcebergQualitySink:
-        lin = sink.read_lineage(spark).toPandas()
+        lin = read_iceberg(spark, sink.lineage_dir).toPandas()
         assert sorted(lin["part_date"]) == sorted(entries)
         for _, row in lin.iterrows():
             e = entries[row["part_date"]]
@@ -403,10 +398,10 @@ def test_rule_failures_per_batch_count_null_flags_as_no_failure(spark, sdf, tmp_
         s = sink.run(src, batch_days=batch_days)
         if not s["processed_partitions"]:
             break
-        batch = sink.completed_partitions() - done
+        batch = set(sink.ledger_entries()) - done
         done |= batch
         runs.append((s, batch))
-    assert done == sink.completed_partitions() and not s["processed_partitions"]
+    assert done == set(sink.ledger_entries()) and not s["processed_partitions"]
 
     turns = sink.read_turns(spark).toPandas()
     turns["part_date"] = turns["part_date"].astype(str)

@@ -2,12 +2,9 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
-from data_quality_automated_evaluator_spark.operators.semdedup import (
-    semantic_dedup,
-    semantic_dedup_dropped,
-)
+from data_quality_automated_evaluator_spark.operators.kmeans import kmeans_fit
+from data_quality_automated_evaluator_spark.operators.semdedup import semantic_dedup_dropped
 
 
 def _emb(spark, rows):
@@ -23,10 +20,10 @@ def test_semantic_dedup_keeps_lowest_id(spark):
         (4, [0.0, 0.999, 0.01]),  # near-dup of 3 → dropped
         (5, [0.0, 0.0, 1.0]),     # unique → kept
     ]
-    out = semantic_dedup(_emb(spark, rows), k=1, iters=1, tau=0.95).collect()
-    verdict = {r.vec_id: r.is_dup for r in out}
-    assert verdict == {1: False, 2: True, 3: False, 4: True, 5: False}
-    sims = {r.vec_id: r.max_sim for r in out if r.is_dup}
+    df = _emb(spark, rows)
+    out = semantic_dedup_dropped(df, kmeans_fit(df, k=1, iters=1), tau=0.95).collect()
+    sims = {r.vec_id: r.max_sim for r in out}
+    assert set(sims) == {2, 4}
     assert sims[2] == pytest.approx(1.0)
     assert sims[4] > 0.95
 
@@ -67,5 +64,5 @@ def test_semantic_dedup_cluster_cap_raises(spark):
 
 def test_semantic_dedup_singleton_clusters(spark):
     rows = [(1, [1.0, 0.0]), (2, [0.0, 1.0])]
-    out = semantic_dedup(_emb(spark, rows), k=2, iters=1, tau=0.5)
-    assert out.filter(F.col("is_dup")).count() == 0
+    df = _emb(spark, rows)
+    assert semantic_dedup_dropped(df, kmeans_fit(df, k=2, iters=1), tau=0.5).count() == 0

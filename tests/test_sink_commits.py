@@ -22,7 +22,7 @@ from data_quality_automated_evaluator_spark.pipeline.sinks import (
     QualitySink,
 )
 from data_quality_automated_evaluator_spark.sources.iceberg_lite import (
-    _commit_next_metadata,
+    current_metadata_path,
     load_metadata,
     read_iceberg,
     write_iceberg,
@@ -161,7 +161,13 @@ def test_read_iceberg_column_added_later_reads_null(spark, tmp_path):
         {"id": 3, "name": "note", "required": False, "type": "string"}
     )
     meta["last-column-id"] = 3
-    _commit_next_metadata(loc, meta)
+    # commit the evolved schema as the next metadata version
+    path = current_metadata_path(loc)
+    mdir, version = os.path.dirname(path), int(os.path.basename(path)[1:].split(".")[0]) + 1
+    with open(os.path.join(mdir, f"v{version}.metadata.json"), "w") as f:
+        json.dump(meta, f)
+    with open(os.path.join(mdir, "version-hint.text"), "w") as f:
+        f.write(str(version))
     got = read_iceberg(spark, loc).orderBy("id").toPandas()
     assert list(got.columns) == ["id", "p", "note"]
     assert got["id"].tolist() == [1, 2] and got["note"].isna().all()
@@ -211,7 +217,7 @@ def test_crash_at_driver_commits_converges(spark, src, tmp_path, monkeypatch):
     sink = QualitySink(str(tmp_path / "crashed"))
     pdir = sink._partials_dir("1h")
     sink.run(src, time_interval="1h", batch_days=2)
-    dates = sorted(ref.completed_partitions())
+    dates = sorted(ref.ledger_entries())
     rename = os.rename
 
     def crash_at(date, must_have_existed):
@@ -253,7 +259,7 @@ def test_crash_at_driver_commits_converges(spark, src, tmp_path, monkeypatch):
     monkeypatch.undo()
     _assert_committed(sink, "1h")
     assert sink._partial_dates(pdir) == set(dates)
-    assert sink.completed_partitions() == set(dates[:2])
+    assert set(sink.ledger_entries()) == set(dates[:2])
 
     sink.run(src, time_interval="1h")
     got, want = _partials(spark, sink, "1h"), _partials(spark, ref, "1h")
@@ -312,7 +318,7 @@ def test_upgrade_over_spark_written_artifacts(spark, src, tmp_path):
     pdir = sink._partials_dir("1d")
     _rewrite_with_spark(spark, pdir, ["part_date"])
     _rewrite_with_spark(spark, sink.stats_dir, [])
-    redo = sorted(sink.completed_partitions())[-1]
+    redo = sorted(sink.ledger_entries())[-1]
     assert any(n.endswith(".crc") for n in os.listdir(os.path.join(pdir, f"part_date={redo}")))
     assert "_SUCCESS" in os.listdir(sink.stats_dir)
     # the last completed date is redone, as after a crash before its ledger

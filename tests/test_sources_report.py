@@ -272,7 +272,7 @@ def test_charts_png_without_mpl_is_real_png(tmp_path):
     import pandas as pd
 
     from data_quality_automated_evaluator_spark import charts as ch
-    from data_quality_automated_evaluator_spark.functions.png import decode_png
+    from image_decoders import decode_png
     from data_quality_automated_evaluator_spark.operators.evaluate import ColumnEvaluation
 
     if ch.HAVE_MPL:
@@ -358,7 +358,7 @@ def test_charts_jpeg_export(tmp_path):
     import pandas as pd
 
     from data_quality_automated_evaluator_spark import charts as ch
-    from data_quality_automated_evaluator_spark.functions.jpeg import decode_jpeg
+    from image_decoders import decode_jpeg
     from data_quality_automated_evaluator_spark.operators.evaluate import ColumnEvaluation
 
     data = pd.DataFrame(
@@ -385,7 +385,7 @@ def test_charts_pdf_export(tmp_path):
     import pandas as pd
 
     from data_quality_automated_evaluator_spark import charts as ch
-    from data_quality_automated_evaluator_spark.functions.jpeg import decode_jpeg
+    from image_decoders import decode_jpeg
     from data_quality_automated_evaluator_spark.operators.evaluate import ColumnEvaluation
 
     data = pd.DataFrame(

@@ -4,10 +4,9 @@ pure-Catalyst run-length folds it replaces in the hot path."""
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+from references import _ngrams, _run_stats
 
 from data_quality_automated_evaluator_spark.functions.webfilter import (
-    _ngrams,
-    _run_stats,
     gopher_repetition_stats_arrow,
 )
 

@@ -8,12 +8,9 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+from references import _run_stats, gopher_repetition_columns
 
-from data_quality_automated_evaluator_spark.functions.webfilter import (
-    _run_stats,
-    augmented_lines,
-    gopher_repetition_columns,
-)
+from data_quality_automated_evaluator_spark.functions.webfilter import augmented_lines
 from data_quality_automated_evaluator_spark.pipeline.convchecks import (
     agent_loop_stats,
     tool_pairing_stats,

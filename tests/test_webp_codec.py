@@ -15,10 +15,10 @@ import numpy as np
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from image_decoders import decode_webp
 
 from data_quality_automated_evaluator_spark.functions.webp import (
     WebpFormatError,
-    decode_webp,
     encode_webp,
 )
 
